@@ -7,7 +7,7 @@ keeps its *capabilities* — deduplicated triple table, boolean pattern
 queries, hop-chained traversal, hash distribution — but expresses them as
 Catalyst logical plans over DataFrames, and extends the surface with the
 full relational layer (joins/aggregates/windows), graph analytics
-(Pregel-style), structured streaming, and LLM-data-pipeline operators
+(Pregel-style), and LLM-data-pipeline operators
 (dedup, similarity search, text analysis, multimodal plumbing).
 """
 

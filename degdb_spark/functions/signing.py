@@ -113,9 +113,3 @@ def verify_triples(df: DataFrame, key: bytes, fp_algo: str = "sha1") -> DataFram
         return pd.Series(out)
 
     return df.withColumn("sig_ok", _ok("subj", "pred", "obj", "sig"))
-
-
-def strip_volatile(df: DataFrame) -> DataFrame:
-    """Drop author/sig/created before comparison, exactly as the
-    reference's tests do (core/query_test.go:64-72)."""
-    return df.drop("author", "sig", "created")

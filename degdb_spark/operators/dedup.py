@@ -134,8 +134,7 @@ def minhash_band_hashes(
     bands: int = 8,
 ) -> Column:
     """array<string> of LSH band hashes for one document — the shared
-    sketch expression behind batch candidate generation AND streaming
-    dedup.
+    sketch expression behind candidate generation and the band index.
 
     MEMOIZED: building this Column tree costs ~0.9 s of py4j round
     trips (deep transform/aggregate/zip_with lambdas), billed to every
@@ -902,8 +901,7 @@ def _para_occurrences(sliced: DataFrame, id_col: str) -> DataFrame:
     """(id, span_idx, span_h1, span_h2): paragraph occurrences as
     salt-first 128-bit fingerprints of the NORMALIZED paragraph —
     same column schema as _span_occurrences, so the keep/reassemble
-    machinery, the persisted-index layout, and the streaming step
-    discipline are all shared verbatim."""
+    machinery and the persisted-index layout are shared verbatim."""
     return sliced.select(
         id_col,
         F.posexplode("_spans").alias("span_idx", "para"),

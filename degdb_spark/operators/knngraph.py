@@ -596,9 +596,8 @@ def build_knn_graph_index(
 
 def _bounded(df: DataFrame, before_batch: int | None) -> DataFrame:
     """Restrict an index table to batches strictly before
-    ``before_batch`` — the replay-probe bound (a retried micro-batch
-    must never read its OWN previously-committed partition; see
-    streaming/dedup._paragraph_index_step for the discipline)."""
+    ``before_batch`` — the replay-probe bound (a retried batch must
+    never read its OWN previously-committed partition)."""
     if before_batch is None:
         return df
     return df.filter(F.col("_batch") < F.lit(int(before_batch)))

@@ -81,10 +81,9 @@ def bigram_counts(
 ) -> DataFrame:
     """(a, b, n): the ADDITIVE sufficient statistic of the bigram LM —
     adjacent-pair counts over the md5 train split (the split is
-    re-derived per input, so streamed and batch training use identical
-    membership — the nbcounts convention). Context counts, the vocab,
-    and V all derive from this one table, which is what makes the
-    persisted-index twin (streaming/lmcounts.py) a plain groupBy-sum."""
+    re-derived per input, so any slicing of the corpus gives identical
+    membership). Context counts, the vocab, and V all derive from this
+    one table."""
     split_train = md5_bucket(id_col, 100) >= test_pct
     return (
         _pairs(docs.filter(split_train), id_col, text_col)
@@ -102,8 +101,8 @@ def score_from_counts(
     top: int = 20,
 ) -> DataFrame:
     """Score the md5 held-out docs against a (a, b, n) bigram-count
-    table (bigram_counts of the full corpus, or the merged streamed
-    index — identical by additivity) and return the ``top``
+    table (bigram_counts of the full corpus, or a sum of per-part
+    bigram_counts — identical by additivity) and return the ``top``
     lowest-average-nll rows: (doc_id, n_scored, nll_micro, avg_nll).
     Docs with zero eligible pairs are unscoreable and excluded."""
     counts = pin(counts)

@@ -10,7 +10,7 @@ pyspark.ml.feature:
 
 When to choose which: the expression-based operators (operators/
 dedup.py, operators/similarity.py) keep everything in whole-stage
-codegen and need no fitted model, which suits streaming/incremental
+codegen and need no fitted model, which suits incremental
 jobs; the ml.feature versions integrate with Pipeline persistence and
 give approxSimilarityJoin/approxNearestNeighbors APIs. Both are
 banding-style: cost tracks collisions, never n².

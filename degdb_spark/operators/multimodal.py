@@ -965,9 +965,7 @@ def video_ahash(media: DataFrame, batch_rows: int = 16) -> DataFrame:
     makes the fingerprint stable under frame-rate changes and
     single-frame corruption while staying closed-form SQL-replayable
     for the oracle. 32 bytes per video ride the banded candidate
-    join (banded_neardup_pairs) — historical payloads are never
-    re-decoded by the streaming index twin (streaming/media.py
-    kind="video")."""
+    join (banded_neardup_pairs)."""
     vids = media.filter(F.col("kind") == "video")
     schema = "media_id long, b0 long, b1 long, b2 long, b3 long"
 
@@ -1014,8 +1012,8 @@ def _pack_bands(bits: np.ndarray) -> list[int]:
     """64 bits → the four 16-bit band ints of the shared (b0..b3)
     perceptual-index schema: bit j lands in band j//16 at offset
     j%16 — one layout for aHash, DCT pHash, audio and shot
-    fingerprints, so banded_neardup_pairs and the streaming media
-    index serve every modality unchanged."""
+    fingerprints, so banded_neardup_pairs serves every modality
+    unchanged."""
     return [
         int(sum(int(b) << j for j, b in enumerate(bits[16 * k : 16 * k + 16])))
         for k in range(4)
@@ -1138,8 +1136,7 @@ def video_shot_fingerprints(
     as a single sentinel row (shot_idx = −1, the rest −1); strict=True
     re-raises. Scale: per-payload numpy inside Arrow batches, no
     shuffle, partitioning preserved; output is ~40 bytes per shot —
-    the only thing the near-dup join or the streaming index
-    (streaming/media.py::shot_index_stream) ever touches again."""
+    the only thing the near-dup join ever touches again."""
     vids = media.filter(F.col("kind") == "video")
     schema = (
         "media_id long, shot_idx int, n_frames int, "
@@ -1545,8 +1542,7 @@ def banded_neardup_pairs(hashes: DataFrame) -> DataFrame:
     b0..b3) fingerprint table: candidate pairs share ≥1 unchanged
     16-bit band (never all-pairs), the full 64-bit hamming distance is
     computed only on candidates, near_dup at ≤16 differing bits.
-    Shared by the image and audio perceptual-dedup queries AND the
-    streaming index twin (streaming/media.py)."""
+    Shared by the image and audio perceptual-dedup queries."""
     hashes = hashes.transform(pin, eager=False)
     bands = _hash_bands(hashes)
     cand = (

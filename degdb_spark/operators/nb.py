@@ -93,8 +93,8 @@ def predict_from_stats(
     ``counts`` = (cand, token, cnt) train token counts, ``nd`` =
     (cand, nd) train doc counts, ``test_docs`` = (doc_id, actual),
     ``test_tok`` = (doc_id, token). Both stats tables are ADDITIVE, so
-    they can come from the full corpus OR from the merged streaming
-    index (streaming/nbcounts.py) — same confusion matrix either way.
+    per-part tables summed give the same confusion matrix as the full
+    corpus.
     Totals, vocabulary, and the train doc total all derive from the
     stats in-plan."""
     # the label axis comes from nd (doc counts), NOT from the token

@@ -126,7 +126,7 @@ def refresh_postings_index(
     in ``new_docs`` must be new (append-only corpora; upserts go
     through a MERGE + rebuild of the affected buckets). Without an
     explicit ``batch_id``, the next id after the table's current max
-    is used; streaming maintenance passes its micro-batch id so a
+    is used; a caller replaying a batch passes its id so a
     crash-and-retry lands on the identical partition."""
     spark = new_docs.sparkSession
     if batch_id is None:

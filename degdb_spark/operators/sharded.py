@@ -9,10 +9,11 @@ derive the same shard expression from the query's subject constants at
 read time — Catalyst's partition pruning then reads only the matching
 directory, exactly as degdb contacts only the owning peer.
 
-At 100 TB with n_shards≈4096 this gives: rooted point queries touch one
-shard directory (plus row-group skipping inside it); bulk inserts
-co-partition with the table so the anti-join dedup is shuffle-free on
-the store side; and shard counts can be re-chosen without logic changes.
+At 100 TB with n_shards≈4096 rooted point queries touch one shard
+directory (plus row-group skipping inside it), and shard counts can be
+re-chosen without logic changes. The layout is written whole by
+``write_sharded``; the node's insert path (operators/triplestore.py)
+does not write it.
 """
 
 from __future__ import annotations
@@ -107,12 +108,6 @@ def layout_meta(path: str) -> tuple[int, str, str] | None:
             d = json.load(f)
         return int(d["n_shards"]), d.get("algo", "xxhash64"), d.get("scheme", "mod")
     return None
-
-
-def layout_shards(path: str) -> int | None:
-    """The shard count recorded at write time (None for foreign layouts)."""
-    meta = layout_meta(path)
-    return meta[0] if meta else None
 
 
 def read_sharded(spark: SparkSession, path: str) -> DataFrame:

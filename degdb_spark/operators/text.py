@@ -381,9 +381,7 @@ def bpe_train(docs: DataFrame, text_col: str = "text", n_merges: int = 8) -> Dat
 
 def word_histogram(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, n) frequency table — the Heaps-bounded training state
-    bpe_train runs on, and the thing the streaming index twin
-    (streaming/wordhist.py) maintains incrementally so retraining
-    never re-reads historical documents."""
+    bpe_train runs on."""
     return (
         docs.select(
             F.explode(F.split(F.lower(F.col(text_col)), "[^a-z]+")).alias("w")
@@ -396,9 +394,8 @@ def word_histogram(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def bpe_train_from_hist(words: DataFrame, n_merges: int = 8) -> DataFrame:
     """bpe_train's training loop over an existing (word, n) histogram —
-    the retrain-from-index entry point: histograms are additive, so
-    the streaming word-count index can be summed per word and handed
-    here without touching any document."""
+    histograms are additive, so per-part histograms can be summed per
+    word and handed here without touching any document."""
     from degdb_spark.persistence import lineage_cut
 
     spark = words.sparkSession
@@ -467,10 +464,9 @@ def dsir_word_counts(occ: DataFrame, target: str) -> DataFrame:
     arXiv:2302.03169): base and target occurrence counts per hashed
     bucket, both out of ONE aggregation pass. Bucketing bounds the
     state at DSIR_BUCKETS rows by construction (property-tested in
-    tests/test_plans.py::test_dsir_state_is_bucket_keyed_and_bounded). ADDITIVE, so an incremental or streamed
-    maintainer just sums per-batch tables
-    (streaming/dedup.dsir_counts_stream); re-pointing the target
-    domain is a rebuild, like retraining a quantizer."""
+    tests/test_plans.py::test_dsir_state_is_bucket_keyed_and_bounded).
+    Re-pointing the target domain is a rebuild, like retraining a
+    quantizer."""
     return occ.groupBy("b").agg(
         F.count(F.lit(1)).alias("cb"),
         F.count(F.when(F.col("source") == target, 1)).alias("ct"),

@@ -11,12 +11,11 @@ Capability parity with /root/reference/triplestore/triplestore.go:
 - ``matching_bloom`` → bloom semi-join (bloom.go:39-73), expressed as a
                      left-semi join on the triple key.
 
-Scale design: the store is a parquet/Delta-style directory hash-laid-out by
-``subj`` — the Spark analogue of degdb's murmur3(subj) keyspace sharding
-(core/http.go:70, network/network.go:283-289). Rooted pattern queries
-filter on ``subj``, which Catalyst pushes to the scan (row-group skipping
-~ shard routing); insert-dedup is an anti-join against only the matching
-partitions at scale.
+Storage: the store is one in-memory DataFrame. ``path`` seeds it from a
+parquet directory once, at construction; inserts are never written back.
+Each insert is a left-anti join of the batch against the WHOLE store,
+unioned on, and every 4th insert cuts the lineage so plans stay shallow.
+Subject-sharded layouts live in operators/sharded.py.
 """
 
 from __future__ import annotations
@@ -26,7 +25,7 @@ from typing import Iterable, Mapping
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from degdb_spark.plans.pattern import ArrayOp, compile_array_op, compile_pattern
+from degdb_spark.plans.pattern import ArrayOp, compile_array_op
 from degdb_spark.schemas import TRIPLE_KEY, TRIPLE_SCHEMA
 from degdb_spark.persistence import lineage_cut
 
@@ -42,6 +41,7 @@ class TripleStore:
         if df is None:
             df = spark.createDataFrame([], schema=TRIPLE_SCHEMA)
         self._df = df
+        self._inserts_since_checkpoint = 0
 
     # ------------------------------------------------------------------ io
     @staticmethod
@@ -65,11 +65,8 @@ class TripleStore:
         Mirrors Insert (triplestore.go:134-148): duplicates — within the
         batch or vs the existing store — are silently skipped; returns the
         number of rows actually added. ``created`` is stamped server-side
-        when absent (core/http.go:64-69).
-
-        Scale note: this is the anti-join formulation; on a cluster with a
-        subj-bucketed table both sides co-partition and the join is
-        shuffle-free. With Delta it becomes MERGE WHEN NOT MATCHED.
+        when absent (core/http.go:64-69). The batch is anti-joined against
+        the whole store; nothing is persisted.
         """
         for f in TRIPLE_SCHEMA.fields:
             if f.name not in new.columns:
@@ -91,15 +88,11 @@ class TripleStore:
         # each insert nests the previous anti-join inside the next one's
         # plan; without truncation the plan grows super-linearly with
         # insert count (measured: 10 single-row inserts → 11 s each).
-        self._inserts_since_checkpoint = getattr(self, "_inserts_since_checkpoint", 0) + 1
+        self._inserts_since_checkpoint += 1
         if self._inserts_since_checkpoint >= 4:
             self._df = self._df.transform(lineage_cut, eager=True)
             self._inserts_since_checkpoint = 0
         return added
-
-    def write(self, path: str, buckets: int = 32) -> None:
-        """Persist hash-laid-out by subj (keyspace-sharding analogue)."""
-        self._df.repartition(buckets, F.col("subj")).write.mode("overwrite").parquet(path)
 
     # --------------------------------------------------------------- query
     def query(self, patterns: Iterable[Mapping[str, str]] | Mapping[str, str], limit: int = -1) -> DataFrame:
@@ -116,14 +109,6 @@ class TripleStore:
         triplestore.go:62-77)."""
         pred = op if isinstance(op, Column) else compile_array_op(op)
         out = self._df.filter(pred)
-        if limit and limit > 0:
-            out = out.limit(limit)
-        return out
-
-    def query_pattern(self, pattern: Mapping[str, str], limit: int = -1) -> DataFrame:
-        """Single-pattern struct query (Query(&Triple{...}),
-        triplestore.go:49-59)."""
-        out = self._df.filter(compile_pattern(pattern))
         if limit and limit > 0:
             out = out.limit(limit)
         return out

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field
-from typing import Iterable, Mapping
+from typing import Mapping
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -117,12 +117,8 @@ def parse_query_json(q: str) -> list[dict]:
     parsed = json.loads(q)
     if isinstance(parsed, Mapping):
         parsed = [parsed]
-    if not isinstance(parsed, list):
+    if not isinstance(parsed, list) or not all(
+        isinstance(p, Mapping) for p in parsed
+    ):
         raise ValueError("query must be a JSON array of partial triples")
     return [dict(p) for p in parsed]
-
-
-def steps_from_patterns(patterns: Iterable[Mapping[str, str]]) -> ArrayOp:
-    """Wrap a pattern list the way the HTTP entry point does
-    (core/http.go:108-113): one OR-mode ArrayOp — 'any of these'."""
-    return ArrayOp(mode=OR, triples=list(patterns))

@@ -1083,8 +1083,8 @@ def pq_index_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit build surface, so benches see build and query costs
     separately. Results are identical to emb_ivfpq_knn's inline
     encode, so the oracle is the same SQL; the from-index == inline ==
-    incremental-refresh == streamed-maintenance equalities are
-    pytest-enforced (tests/test_pq.py, tests/test_streaming.py)."""
+    incremental-refresh equalities are pytest-enforced
+    (tests/test_pq.py)."""
     from degdb_spark.operators import pq as PQ
 
     table = _contract_index_table(sf_dir)
@@ -2036,8 +2036,8 @@ def _graph_contract_index_table(sf_dir: str) -> str:
 
 def graph_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The k-NN graph index's ONE-TIME build as its own contract query
-    (contract-index lifecycle #16 — the emb_pq_index_build pattern,
-    so benches see graph build and walk costs separately):
+    (the emb_pq_index_build pattern, so benches see graph build and
+    walk costs separately):
     build_knn_graph_index materializes the _batch-partitioned
     adjacency + vector tables, and the returned report — edges and
     micronat similarity mass per rank — hash-checks every edge of the
@@ -2089,7 +2089,7 @@ GRAPH_INDEX_BUILD_SQL = _graph_index_build_sql()
 
 def emb_graph_index_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Beam ANN search answered FROM the persisted k-NN graph index —
-    the steady-state graph query (lifecycle #16's read surface):
+    the steady-state graph query:
     adjacency and vectors come off the bucketed tables, long links
     derive from ids at read time, the walk is the same beam search as
     emb_graph_knn — so on the single-batch tombstone-free contract

@@ -1,9 +1,7 @@
 """Event-stream analytics in batch form, oracle-checked.
 
-The streaming module (degdb_spark/streaming) runs the same logical plans
-as Structured Streaming jobs; these batch twins are what the DuckDB
-oracle can replay. Windowed aggregation == groupBy(date_trunc) here so
-both engines agree on bucket boundaries (UTC session timezone).
+Windowed aggregation == groupBy(date_trunc) here so Spark and the DuckDB
+oracle agree on bucket boundaries (UTC session timezone).
 """
 
 from __future__ import annotations
@@ -17,8 +15,7 @@ from degdb_spark.queries.rounding import davg, dsum, sql_davg, sql_dsum
 
 
 def hourly_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour window aggregation (streaming twin: readStream +
-    window(ts, '1 hour') + watermark)."""
+    """Tumbling 1-hour window aggregation."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -46,8 +43,7 @@ ORDER BY hour, event_type
 
 
 def event_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stateful-dedup twin: first occurrence per event_id (streaming:
-    dropDuplicates within watermark)."""
+    """First occurrence per event_id."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("event_id")
@@ -67,8 +63,7 @@ ORDER BY event_id
 
 def user_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows via lag-gap analysis (>30 min gap starts a new
-    session) — the batch twin of session_window()/applyInPandasWithState.
-    Two window shuffles, both partitioned by user_id."""
+    session). Two window shuffles, both partitioned by user_id."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gapped = ev.withColumn("prev_ts", F.lag("ts").over(w)).withColumn(

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from degdb_spark.operators.multimodal import (
     audio_sample_stats,
+    banded_neardup_pairs,
     extract_features,
     audio_ahash,
     extract_video_frames,
@@ -446,15 +447,6 @@ FROM vids ORDER BY media_id
 """
 
 
-def _banded_neardup_pairs(hashes) -> DataFrame:
-    """Moved to operators/multimodal.banded_neardup_pairs so the
-    streaming aHash index twin (streaming/media.py) shares the exact
-    join + re-rank; this alias keeps the query wiring unchanged."""
-    from degdb_spark.operators.multimodal import banded_neardup_pairs
-
-    return banded_neardup_pairs(hashes)
-
-
 def media_audio_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio near-dup detection over the REAL WAV decode path: 64-frame
     energy-envelope fingerprint (operators/multimodal.audio_ahash),
@@ -463,7 +455,7 @@ def media_audio_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs_simhash_neardups). Oracle replays the fingerprint from the
     generator's closed-form PCM samples in integer SQL."""
     media = synthetic_media(spark, _N_MEDIA)
-    return _banded_neardup_pairs(audio_ahash(media))
+    return banded_neardup_pairs(audio_ahash(media))
 
 
 AUDIO_NEARDUP_SQL = f"""
@@ -529,7 +521,7 @@ def media_phash_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the generator's closed-form pixels in integer SQL, so a hash
     match verifies the real BMP decode + the banding + the re-rank."""
     media = synthetic_media(spark, _N_MEDIA)
-    return _banded_neardup_pairs(image_ahash(media))
+    return banded_neardup_pairs(image_ahash(media))
 
 
 PHASH_SQL = f"""
@@ -601,7 +593,7 @@ def media_phash_dct_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from degdb_spark.operators.multimodal import image_phash_dct
 
     media = synthetic_media(spark, _N_MEDIA)
-    return _banded_neardup_pairs(image_phash_dct(media))
+    return banded_neardup_pairs(image_phash_dct(media))
 
 
 def _phash_dct_sql() -> str:
@@ -703,7 +695,7 @@ def media_video_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from degdb_spark.operators.multimodal import video_ahash
 
     media = synthetic_media(spark, _N_MEDIA)
-    return _banded_neardup_pairs(video_ahash(media))
+    return banded_neardup_pairs(video_ahash(media))
 
 
 VIDEO_NEARDUP_SQL = f"""

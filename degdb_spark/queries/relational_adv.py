@@ -454,7 +454,7 @@ def orders_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-key skew diagnostics for orders.o_custkey: key count,
     max/top-10 key share, and the Gini coefficient of the per-key load —
     what you inspect before choosing a shuffle key (or deciding to salt,
-    functions/skew.py). The Gini numerator Σ(2i−n−1)·x₍ᵢ₎ is an exact
+    operators/skewjoin.py). The Gini numerator Σ(2i−n−1)·x₍ᵢ₎ is an exact
     integer over the SORTED per-key counts, so no float summation; the
     sort rank i comes from the two-phase distributed row_number
     (operators/ranking.py — key cardinality can grow with the data, so

@@ -19,11 +19,10 @@ user's first touch (`curl localhost:PORT/api/v1/...`) works unchanged:
 
 Deliberately stdlib-only (ThreadingHTTPServer): the shim is an edge
 adapter — every request body is parsed on the HTTP thread and handed to
-the same DegDB methods the Python API uses, with a lock serializing
-store mutations (Spark DataFrame lineage swaps aren't atomic). At scale
-this server is a stateless front tier: N replicas can share one
-parquet/Delta-backed store path because insert is an idempotent
-anti-join MERGE (operators/triplestore.py).
+the same DegDB methods the Python API uses, with one lock serializing
+every store access (Spark DataFrame lineage swaps aren't atomic). The
+store lives in this process's memory (operators/triplestore.py), so
+inserts do not survive a restart and replicas cannot share it.
 """
 
 from __future__ import annotations
@@ -71,9 +70,10 @@ class DegDBServer:
                         with outer._lock:
                             self._send(200, outer.db.to_json(outer.db.triples()))
                     elif url.path == "/api/v1/query":
-                        q = parse_qs(url.query).get("q", [""])[0]
-                        limit = int(parse_qs(url.query).get("limit", ["-1"])[0])
+                        params = parse_qs(url.query)
+                        q = params.get("q", [""])[0]
                         try:
+                            limit = int(params.get("limit", ["-1"])[0])
                             with outer._lock:
                                 rows = outer.db.query_json(q, limit=limit)
                         except (ValueError, KeyError) as e:

@@ -27,6 +27,22 @@ def testdata(spark):
 
 
 @pytest.fixture(scope="session")
+def registry_plans(spark, testdata):
+    """name → DataFrame (or the exception its build raised) for every
+    registry entry at SF_SMOKE — built once per session, shared by the
+    registry-wide plan checks."""
+    from degdb_spark.queries import registry
+
+    plans = {}
+    for name, q in registry().items():
+        try:
+            plans[name] = q.spark(spark, SF_SMOKE)
+        except Exception as e:
+            plans[name] = e
+    return plans
+
+
+@pytest.fixture(scope="session")
 def obama_store(spark):
     """The reference's canonical 4-row fixture
     (triplestore/triplestore_test.go:15-36)."""

@@ -11,14 +11,12 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 
 
-def test_registry_unique_and_buildable(spark, testdata):
+def test_registry_unique_and_buildable(registry_plans):
     """Every registry entry builds an analyzable plan (no execution)."""
-    from degdb_spark.queries import registry
-
-    reg = registry()
-    assert len(reg) >= 100
-    for name, q in reg.items():
-        df = q.spark(spark, SF_SMOKE)
+    assert len(registry_plans) >= 100
+    for name, df in registry_plans.items():
+        if isinstance(df, Exception):
+            raise AssertionError(f"{name}: build error") from df
         assert df.columns, name  # analysis succeeded
 
 

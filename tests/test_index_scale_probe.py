@@ -229,334 +229,6 @@ def test_semdedup_increment_scan_audit(spark, tmp_path):
     assert all(a >= 18 or b >= 18 for a, b in pairs)
 
 
-def test_ahash_index_increment_after_corpus_deletion(spark, tmp_path):
-    """The sixth index lifecycle (streaming aHash media index): build
-    the fingerprint index from batch 0, DELETE batch 0's media files,
-    then run a larger increment — incremental pairs must still surface
-    every cross-batch near-dup, proving old media participate through
-    the 32-byte index rows alone (historical payloads never
-    re-decoded: they no longer exist)."""
-    import numpy as np
-
-    from degdb_spark.functions import codecs as C
-    from degdb_spark.operators import multimodal as M
-    from degdb_spark.streaming.media import _ahash_index_step
-
-    ramp = np.linspace(10, 245, 64)
-
-    def img_row(mid, fam, var):
-        base = np.clip(
-            np.round(np.add.outer(ramp, ramp) / 2) + fam * 13, 0, 255
-        ).astype(np.uint8)
-        px = np.repeat(base[:, :, None], 3, axis=2).copy()
-        px[0, 0, 0] = (int(px[0, 0, 0]) + var) % 256
-        return (mid, "image", bytearray(C.encode_png(px)), ("png", 64, 64, None, None))
-
-    # batch 0: one member of each of 3 families
-    b0 = spark.createDataFrame(
-        [img_row(i, i, 0) for i in range(3)], schema=M.MEDIA_SCHEMA
-    )
-    b0_dir = str(tmp_path / "media_b0.parquet")
-    b0.write.parquet(b0_dir)
-    index_path = str(tmp_path / "idx")
-    pairs_path = str(tmp_path / "pairs")
-    _ahash_index_step(spark.read.parquet(b0_dir), 0, index_path, pairs_path)
-
-    shutil.rmtree(b0_dir)  # old payloads GONE — the increment can't read them
-
-    # batch 1: 2 more variants per family (10x-ish increment shape)
-    b1 = spark.createDataFrame(
-        [img_row(100 + 10 * f + v, f, v + 1) for f in range(3) for v in range(2)],
-        schema=M.MEDIA_SCHEMA,
-    )
-    _ahash_index_step(b1, 1, index_path, pairs_path)
-
-    all_pairs = spark.read.option("basePath", pairs_path).parquet(pairs_path)
-    got = {
-        (r.id_a, r.id_b)
-        for r in all_pairs.filter("near_dup = 1 and batch = 1").collect()
-    }
-    for f in range(3):  # every old member pairs with both new variants
-        assert (f, 100 + 10 * f) in got
-        assert (f, 101 + 10 * f) in got
-    # batch 1 never re-derives old-vs-old pairs (batch 0 owns those)
-    assert not any(a < 3 and b < 3 for a, b in got)
-
-
-def test_video_ahash_index_increment_after_corpus_deletion(spark, tmp_path):
-    """The seventh index lifecycle (video fingerprints): build the
-    temporal-mean aHash index from batch 0's video clips, DELETE batch
-    0's media files, then run a larger increment — incremental pairs
-    must still surface every cross-batch near-dup, proving historical
-    video payloads are never re-decoded (they no longer exist; old
-    clips participate through 32 index bytes each)."""
-    import numpy as np
-
-    from degdb_spark.functions import codecs as C
-    from degdb_spark.operators import multimodal as M
-    from degdb_spark.streaming.media import _ahash_index_step
-
-    ramp = np.linspace(5, 250, 32)
-
-    def vid_row(mid, fam, var):
-        base = np.clip(
-            np.round(np.add.outer(np.linspace(5, 250, 24), ramp) / 2) + fam * 17,
-            0, 255,
-        ).astype(np.uint8)
-        frames = np.repeat(base[None, :, :, None], 3, axis=3).repeat(4, axis=0).copy()
-        frames[0, 0, 0, 0] = (int(frames[0, 0, 0, 0]) + var) % 256
-        return (mid, "video", bytearray(C.encode_rawv(frames, 500)),
-                ("rawv", 32, 24, 1500, None))
-
-    b0 = spark.createDataFrame(
-        [vid_row(i, i, 0) for i in range(3)], schema=M.MEDIA_SCHEMA
-    )
-    b0_dir = str(tmp_path / "video_b0.parquet")
-    b0.write.parquet(b0_dir)
-    index_path = str(tmp_path / "idx")
-    pairs_path = str(tmp_path / "pairs")
-    _ahash_index_step(spark.read.parquet(b0_dir), 0, index_path, pairs_path, kind="video")
-
-    shutil.rmtree(b0_dir)  # old payloads GONE — the increment can't read them
-
-    b1 = spark.createDataFrame(
-        [vid_row(100 + 10 * f + v, f, v + 1) for f in range(3) for v in range(2)],
-        schema=M.MEDIA_SCHEMA,
-    )
-    _ahash_index_step(b1, 1, index_path, pairs_path, kind="video")
-
-    all_pairs = spark.read.option("basePath", pairs_path).parquet(pairs_path)
-    got = {
-        (r.id_a, r.id_b)
-        for r in all_pairs.filter("near_dup = 1 and batch = 1").collect()
-    }
-    for f in range(3):
-        assert (f, 100 + 10 * f) in got
-        assert (f, 101 + 10 * f) in got
-    assert not any(a < 3 and b < 3 for a, b in got)
-
-
-def test_bpe_retrain_after_corpus_deletion(spark, tmp_path):
-    """The eighth index lifecycle (word histogram → BPE retrain):
-    build the histogram index from streamed batches, DELETE every
-    source document, then retrain — the merges must equal the
-    full-corpus training run, proving the index is a sufficient
-    statistic and retraining never re-reads historical documents
-    (they no longer exist)."""
-    from degdb_spark.operators.text import bpe_train, bpe_train_from_hist
-    from degdb_spark.streaming.wordhist import (
-        _wordhist_index_step,
-        merged_histogram,
-    )
-
-    texts = [
-        "stream the table stream the join",
-        "the fast hash join wins the day",
-        "slow scans stall the fast merge",
-        "hash the keys then join the runs",
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    want = [tuple(r) for r in bpe_train(docs, n_merges=4).collect()]
-
-    src = str(tmp_path / "docs.parquet")
-    docs.write.parquet(src)
-    idx = str(tmp_path / "idx")
-    for b in range(2):
-        batch = spark.read.parquet(src).filter(
-            (F.col("doc_id") / F.lit(2)).cast("int") == b
-        )
-        _wordhist_index_step(batch, b, idx)
-
-    shutil.rmtree(src)  # corpus GONE — retraining can't read it
-
-    got = [
-        tuple(r)
-        for r in bpe_train_from_hist(
-            merged_histogram(spark, idx), n_merges=4
-        ).collect()
-    ]
-    assert got == want
-
-
-def test_acf_recompute_after_corpus_deletion(spark, tmp_path):
-    """The ninth index lifecycle (hourly counts → ACF recompute):
-    build the count index from streamed batches, DELETE every source
-    event file, then recompute the autocorrelation — it must equal the
-    full-corpus run, proving the index is a sufficient statistic and
-    the recompute never re-reads historical events (they no longer
-    exist). A 10x-style increment (a new batch step) still lands
-    against the index alone."""
-    import datetime as dt
-
-    from degdb_spark.queries.events_queries import hourly_acf
-    from degdb_spark.streaming.hourcount import (
-        _hourcount_index_step,
-        merged_hourly_counts,
-    )
-
-    base = dt.datetime(2024, 4, 1)
-    # (i·13) mod 30 alone fills the 30 hours UNIFORMLY (13 ⊥ 30) — a
-    # constant series, whose ACF is the undefined/NULL case — so add a
-    # skewed tail to give the series real variance
-    rows = [
-        (i, base + dt.timedelta(hours=(i * 13) % 30, minutes=i % 50))
-        for i in range(120)
-    ] + [
-        (500 + i, base + dt.timedelta(hours=(i * 7) % 10, minutes=i % 40))
-        for i in range(60)
-    ]
-    events = spark.createDataFrame(rows, "event_id long, ts timestamp")
-    full_counts = events.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("h")
-    ).agg(F.count(F.lit(1)).alias("x"))
-    want = [tuple(r) for r in hourly_acf(spark, full_counts).collect()]
-
-    src = str(tmp_path / "events.parquet")
-    events.write.parquet(src)
-    idx = str(tmp_path / "idx")
-    for b in range(2):
-        batch = spark.read.parquet(src).filter(F.col("event_id") % 2 == b)
-        _hourcount_index_step(batch, b, idx)
-
-    shutil.rmtree(src)  # events GONE — the recompute can't read them
-
-    got = [
-        tuple(r)
-        for r in hourly_acf(spark, merged_hourly_counts(spark, idx)).collect()
-    ]
-    assert got == want
-
-    # increment: a NEW batch lands without touching historical events
-    late = spark.createDataFrame(
-        [(1000 + i, base + dt.timedelta(hours=31, minutes=i)) for i in range(5)],
-        "event_id long, ts timestamp",
-    )
-    _hourcount_index_step(late, 2, idx)
-    merged = {r.h: r.x for r in merged_hourly_counts(spark, idx).collect()}
-    assert merged[base + dt.timedelta(hours=31)] == 5
-
-
-def test_nb_rescore_after_corpus_deletion(spark, tmp_path):
-    """The tenth index lifecycle (NB statistics → retrain/score):
-    build the stats index from streamed training batches, DELETE every
-    training file, then score a held-out set — the confusion matrix
-    must equal the full-corpus training run, proving the index is a
-    sufficient statistic and scoring never re-reads training documents
-    (they no longer exist)."""
-    from degdb_spark.operators.nb import predict_from_stats, train_predict_nb
-    from degdb_spark.operators.sampling import md5_bucket
-    from degdb_spark.operators.text import tokens
-    from degdb_spark.streaming.nbcounts import _nb_index_step, merged_nb_stats
-
-    rows = []
-    for i in range(36):
-        lab = ("x", "y")[i % 2]
-        word = "xeno" if lab == "x" else "yack"
-        rows.append((i, " ".join([word] * (1 + i % 2) + ["common"]), lab))
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    want = [tuple(r) for r in train_predict_nb(docs).collect()]
-
-    src = str(tmp_path / "docs.parquet")
-    docs.write.parquet(src)
-    idx = str(tmp_path / "idx")
-    for b in range(2):
-        batch = spark.read.parquet(src).filter(F.col("doc_id") % 2 == b)
-        _nb_index_step(batch, b, idx)
-
-    # keep the held-out TEST docs (scoring legitimately reads them),
-    # then delete the training corpus
-    test = docs.filter(md5_bucket("doc_id", 100) < 20)
-    test_docs = test.select("doc_id", F.col("lang").alias("actual")).collect()
-    test_tok = (
-        test.select("doc_id", F.explode(tokens("text")).alias("token"))
-        .filter(F.col("token") != "")
-        .collect()
-    )
-    shutil.rmtree(src)  # training corpus GONE — scoring can't read it
-
-    counts, nd = merged_nb_stats(spark, idx)
-    got = [
-        tuple(r)
-        for r in predict_from_stats(
-            counts,
-            nd,
-            spark.createDataFrame(test_docs, "doc_id long, actual string"),
-            spark.createDataFrame(test_tok, "doc_id long, token string"),
-        ).collect()
-    ]
-    assert got == want
-
-
-def test_shot_index_increment_after_corpus_deletion(spark, tmp_path):
-    """The eleventh index lifecycle (shot-level video fingerprints):
-    build the shot index from batch 0's clips, DELETE batch 0's media
-    files, then increment with the planted trim twins — the pairs must
-    still surface every cross-batch trim pair, proving historical
-    video payloads are never re-decoded (old clips participate through
-    ~40 index bytes per shot)."""
-    from degdb_spark.operators import multimodal as M
-    from degdb_spark.streaming.media import _shot_index_step
-
-    media = M.synthetic_shot_media(spark, 12)
-    # batch 0: the even (full) clips; batch 1: the odd (trimmed) twins
-    b0_dir = str(tmp_path / "shots_b0.parquet")
-    media.filter(F.col("media_id") % 2 == 0).write.parquet(b0_dir)
-    index_path = str(tmp_path / "idx")
-    pairs_path = str(tmp_path / "pairs")
-    _shot_index_step(spark.read.parquet(b0_dir), 0, index_path, pairs_path)
-
-    shutil.rmtree(b0_dir)  # old payloads GONE — the increment can't read them
-
-    b1 = media.filter(F.col("media_id") % 2 == 1)
-    _shot_index_step(b1, 1, index_path, pairs_path)
-
-    all_pairs = spark.read.option("basePath", pairs_path).parquet(pairs_path)
-    got = {
-        (r.id_a, r.id_b): r.n_shared
-        for r in all_pairs.filter("near_dup = 1 and batch = 1").collect()
-    }
-    assert got == {(2 * g, 2 * g + 1): 2 + g % 2 for g in range(6)}
-
-
-def test_linear_retrain_after_corpus_deletion(spark, tmp_path):
-    """The twelfth index lifecycle (linear-classifier hashed
-    features): build the feature index from streamed batches, DELETE
-    every source document, then retrain — the confusion matrix must
-    equal the full-corpus training run, proving the iterative trainer
-    reads only the per-doc feature projection and never a historical
-    document (they no longer exist)."""
-    from degdb_spark.operators.linear import (
-        train_predict_from_features,
-        train_predict_linear,
-    )
-    from degdb_spark.streaming.linfeat import _linfeat_index_step, merged_features
-
-    rows = []
-    for i in range(40):
-        lab = ("a", "b", "c")[i % 3]
-        word = {"a": "alpha", "b": "bravo", "c": "carol"}[lab]
-        rows.append((i, " ".join([word] * (1 + i % 3) + ["shared"]), lab))
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    want = [tuple(r) for r in train_predict_linear(docs).collect()]
-
-    docs_dir = str(tmp_path / "docs.parquet")
-    docs.write.parquet(docs_dir)
-    idx = str(tmp_path / "idx")
-    stored = spark.read.parquet(docs_dir)
-    _linfeat_index_step(stored.filter("doc_id < 20"), 0, idx)
-    _linfeat_index_step(stored.filter("doc_id >= 20"), 1, idx)
-
-    shutil.rmtree(docs_dir)  # the corpus is GONE
-
-    got = [
-        tuple(r)
-        for r in train_predict_from_features(merged_features(spark, idx)).collect()
-    ]
-    assert got == want
-
-
 def test_linear_trainer_invariant_to_feature_partitioning(spark):
     """The trainer re-pins its feature frame at a row-derived partition
     count (r14: ceil(rows/32768), self-disabling at scale); the
@@ -663,31 +335,6 @@ def test_substring_index_increment_after_corpus_deletion(spark, doc_dirs, tmp_pa
     assert all(0 < r < n for n, r in novel)
 
 
-def test_lm_rescore_after_corpus_deletion(spark, doc_dirs, tmp_path):
-    """Bigram-LM count-index lifecycle (probe #15): the training corpus
-    parquet is DELETED after its counts are indexed; scoring a fresh
-    document frame needs only that frame plus the merged count table —
-    any historical re-read dies on the missing file."""
-    from degdb_spark.operators.lm import bigram_counts, score_from_counts
-    from degdb_spark.streaming.lmcounts import merged_counts
-
-    corpus_dir, inc_dir = doc_dirs
-    idx = str(tmp_path / "lm_idx")
-    bigram_counts(spark.read.parquet(corpus_dir), test_pct=0).write.parquet(
-        f"{idx}/batch=0"
-    )
-    shutil.rmtree(corpus_dir)  # training text gone — scoring must not need it
-    report = score_from_counts(
-        spark.read.parquet(inc_dir), merged_counts(spark, idx), test_pct=100
-    )
-    assert _scans_of(report, "/c.parquet") == 0  # no corpus-text scan
-    rows = report.collect()
-    assert len(rows) > 0
-    # the increment's corpus-duplicate docs share the training text, so
-    # their pairs are all in-vocab and score finitely
-    assert all(r.n_scored > 0 for r in rows)
-
-
 def test_knn_graph_refresh_and_retract_after_corpus_deletion(spark, vec_dirs):
     """Lifecycle #16 (persisted k-NN graph): refresh is search-then-
     link against the index's OWN vector table — the corpus parquet is
@@ -737,81 +384,3 @@ def test_knn_graph_refresh_and_retract_after_corpus_deletion(spark, vec_dirs):
     finally:
         for t in (table, f"{table}_vectors"):
             drop_managed_table(spark, t)
-
-
-def test_unigram_retrain_after_corpus_deletion(spark, tmp_path):
-    """The unigram-LM tokenizer retrains from the SAME streamed
-    word-histogram index as BPE (histograms are additive — one index,
-    two trainers): build the index from batches, DELETE every source
-    document, retrain — the full trained vocabulary (counts AND
-    micronat costs) must equal the full-corpus run, proving the
-    histogram is the unigram trainer's sufficient statistic too."""
-    from degdb_spark.operators.unigram import unigram_train, unigram_train_from_hist
-    from degdb_spark.streaming.wordhist import (
-        _wordhist_index_step,
-        merged_histogram,
-    )
-
-    texts = [
-        "stream the table stream the join",
-        "the fast hash join wins the day",
-        "slow scans stall the fast merge",
-        "hash the keys then join the runs",
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    kw = dict(n_pieces=30, rounds=2, max_piece=4)
-    want = [tuple(r) for r in unigram_train(docs, top=15, **kw).collect()]
-
-    src = str(tmp_path / "udocs.parquet")
-    docs.write.parquet(src)
-    idx = str(tmp_path / "uidx")
-    for b in range(2):
-        batch = spark.read.parquet(src).filter(
-            (F.col("doc_id") / F.lit(2)).cast("int") == b
-        )
-        _wordhist_index_step(batch, b, idx)
-
-    shutil.rmtree(src)  # corpus GONE — retraining can't read it
-
-    got = [
-        tuple(r)
-        for r in unigram_train_from_hist(
-            merged_histogram(spark, idx), top=15, **kw
-        ).collect()
-    ]
-    assert got == want
-
-
-def test_paragraph_index_increment_after_corpus_deletion(spark, tmp_path):
-    """Lifecycle #17 (normalized-paragraph fingerprint index): build
-    from a corpus batch, DELETE the corpus parquet, then run a larger
-    increment — success proves the probe read only the 16-byte
-    fingerprints and the increment's own rows; paragraphs repeated
-    from the (now deleted) history still drop."""
-    from degdb_spark.streaming.dedup import _paragraph_index_step
-
-    banner = "shared banner paragraph"
-    # letter suffixes, NOT numbers: ccnet_normalize maps digits -> 0,
-    # so numbered fixtures would collide by design
-    tag = lambda i: chr(97 + i % 26) + chr(97 + (i // 26) % 26)
-    corpus_rows = [
-        (i, f"unique base {tag(i)}\n{banner}") for i in range(N_CORPUS)
-    ]
-    inc_rows = [
-        (1000 + i, f"novel inc {tag(i)}\n{banner}") for i in range(N_INC)
-    ]
-    corpus_dir = str(tmp_path / "pc.parquet")
-    inc_dir = str(tmp_path / "pi.parquet")
-    _write_docs(spark, corpus_dir, corpus_rows)
-    _write_docs(spark, inc_dir, inc_rows)
-    idx, clean = str(tmp_path / "pidx"), str(tmp_path / "pclean")
-    _paragraph_index_step(spark.read.parquet(corpus_dir), 0, idx, clean)
-    shutil.rmtree(corpus_dir)  # historical text gone
-    _paragraph_index_step(spark.read.parquet(inc_dir), 1, idx, clean)
-    out = spark.read.parquet(f"{clean}/batch=1")
-    assert out.count() == N_INC
-    # the banner existed in batch 0, so EVERY increment doc loses it
-    assert out.filter(F.col("n_kept") == 1).count() == N_INC
-    assert out.filter(F.col("text_clean").contains("banner")).count() == 0

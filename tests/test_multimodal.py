@@ -360,10 +360,10 @@ def test_gif_video_frames_match_rawv(spark):
 
 
 def test_incremental_pairs_match_full_under_random_splits(spark):
-    """Definitional property of the incremental banded join (the
-    streaming twin's core): for RANDOM corpora and RANDOM batch
-    boundaries, the union of sequential incremental emissions equals
-    the full-corpus pair set exactly, each pair exactly once."""
+    """Definitional property of the incremental banded join: for
+    RANDOM corpora and RANDOM batch boundaries, the union of
+    sequential incremental emissions equals the full-corpus pair set
+    exactly, each pair exactly once."""
     import numpy as np
 
     from hypothesis import HealthCheck, given, settings

@@ -670,18 +670,18 @@ _GLOBAL_WINDOW_WHITELIST = {
 }
 
 
-def test_no_data_sized_unpartitioned_window_registry_wide(spark):
+def test_no_data_sized_unpartitioned_window_registry_wide(registry_plans):
     """CI invariant (VERDICT r3 ask #5): walk every registry query's
     optimized plan; any Window without a partition spec must be on the
     whitelist above (aggregate-sized inputs only). Catches the
     single-partition-global-sort class the same way the no-cartesian
     gates catch join explosions."""
-    from degdb_spark.queries import registry
-
     offenders = {}
-    for name, q in registry().items():
+    for name, df in registry_plans.items():
         try:
-            n = _unpartitioned_windows(q.spark(spark, SF))
+            if isinstance(df, Exception):
+                raise df
+            n = _unpartitioned_windows(df)
         except Exception as e:  # plan construction itself must work
             offenders[name] = f"build error: {type(e).__name__}: {e}"
             continue

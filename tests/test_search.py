@@ -167,6 +167,62 @@ def test_postings_index_incremental_refresh(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+def test_postings_refresh_crash_between_postings_and_stats(spark, tmp_path):
+    """Crash window between the postings insert and the stats insert:
+    the retry re-overwrites both partitions with identical rows, so
+    index and stats converge to the clean state (the r4 ADVICE failure
+    mode — double-appended postings, double-counted stats — cannot
+    happen)."""
+    import shutil
+
+    from degdb_spark.operators.search import (
+        bm25_topk_from_index,
+        build_postings_index,
+        index_corpus_stats,
+        postings,
+        refresh_postings_index,
+    )
+
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    for t in ("bm25_crash_idx", "bm25_crash_idx_stats",
+              "bm25_clean_idx", "bm25_clean_idx_stats"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    old = docs.filter(F.col("doc_id") < 150)
+    new = docs.filter(F.col("doc_id") >= 150)
+
+    build_postings_index(old, "bm25_clean_idx", batch_id=0)
+    refresh_postings_index(new, "bm25_clean_idx", batch_id=1)
+    terms = ["dup", "spark", "the"]
+    want = [tuple(r) for r in
+            bm25_topk_from_index(spark, "bm25_clean_idx", terms, k=10).collect()]
+
+    build_postings_index(old, "bm25_crash_idx", batch_id=0)
+    # simulate the crash: batch 1's postings landed, stats did not
+    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try:
+        (postings(new).withColumn("_batch", F.lit(1))
+         .select("doc_id", "token", "tf", "dl", "_batch")
+         .write.mode("overwrite").insertInto("bm25_crash_idx"))
+    finally:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # retry the whole refresh for batch 1
+    refresh_postings_index(new, "bm25_crash_idx", batch_id=1)
+    got = [tuple(r) for r in
+           bm25_topk_from_index(spark, "bm25_crash_idx", terms, k=10).collect()]
+    assert got == want and len(want) > 0
+    s_got = index_corpus_stats(spark, "bm25_crash_idx").collect()[0]
+    s_want = index_corpus_stats(spark, "bm25_clean_idx").collect()[0]
+    assert (s_got["_n_docs"], s_got["_total_dl"]) == (
+        s_want["_n_docs"], s_want["_total_dl"]
+    )
+    for t in ("bm25_crash_idx", "bm25_crash_idx_stats",
+              "bm25_clean_idx", "bm25_clean_idx_stats"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def _drop(spark, *tables):
     import shutil
 

@@ -95,6 +95,13 @@ def test_error_paths(server):
     # bad query JSON → 400 (http.go:101-105)
     code, body = _get(server, "/api/v1/query?q=%7Bnot")
     assert code == 400
+    # array element that is not an object → 400, not a 500
+    code, body = _get(server, "/api/v1/query?" + urllib.parse.urlencode({"q": "[1]"}))
+    assert code == 400
+    # non-integer limit → 400, not a 500
+    qs = urllib.parse.urlencode({"q": '[{"subj": "a"}]', "limit": "abc"})
+    code, body = _get(server, "/api/v1/query?" + qs)
+    assert code == 400
     # unknown route → 404
     code, body = _get(server, "/api/v1/nope")
     assert code == 404
