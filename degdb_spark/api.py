@@ -11,6 +11,11 @@ workflow maps 1:1:
     db.triples()                                          # full dump
     db.info()                                             # {"triples": N, ...}
 
+Pattern reads, ``triples()`` and ``info()`` run in-process over the
+store's driver-resident Arrow table, with no Spark job; an insert runs
+one job to materialise its signed batch, and path queries are Spark
+joins over the store's Spark view.
+
 Differences by design: signing is opt-in (pass a key) because Spark jobs
 are trusted-perimeter; gossip/keyspace routing is replaced by Spark's own
 data placement (SURVEY.md §2.6).
@@ -21,13 +26,20 @@ from __future__ import annotations
 import json
 from typing import Iterable, Mapping, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import TimestampType
 
 from degdb_spark.functions.signing import sign_triples
 from degdb_spark.operators.traversal import chain_steps
 from degdb_spark.operators.triplestore import TripleStore
-from degdb_spark.plans.pattern import parse_query_json
+from degdb_spark.plans.pattern import ArrayOp, parse_query_json
 from degdb_spark.sources.json_triples import triples_from_json
+
+#: response columns, in the order rows are rendered
+_COLS = ["subj", "pred", "obj", "lang", "author", "sig", "created"]
+#: renders ``created`` as ``collect()`` does: naive, in the process's zone
+_TIMESTAMP = TimestampType()
 
 
 class DegDB:
@@ -51,20 +63,14 @@ class DegDB:
     # ---- GET /api/v1/query?q= (core/http.go:94-120) ----
     def query_json(self, q: str, limit: int = -1) -> list[dict]:
         patterns = parse_query_json(q)
-        df = self.store.query(patterns, limit=limit)
-        return self._dump(df)
+        return self._dump(self.store.read(ArrayOp(triples=patterns), limit=limit))
 
     def query_array_op_json(self, q: str, limit: int = -1) -> list[dict]:
         """Full ArrayOp boolean-tree query as JSON — the binary
         protocol's QueryRequest form (protocol.proto:80-89):
         {"mode": "AND", "triples": [...], "arguments": [...]}."""
-        import json as _json
-
-        from degdb_spark.plans.pattern import ArrayOp
-
-        op = ArrayOp.from_dict(_json.loads(q))
-        df = self.store.query_array_op(op, limit=limit)
-        return self._dump(df)
+        op = ArrayOp.from_dict(json.loads(q))
+        return self._dump(self.store.read(op, limit=limit))
 
     def query_steps(self, steps: Sequence[Mapping | Iterable[Mapping]]) -> list[dict]:
         """Multi-step path query (ExecuteQuery's chaining,
@@ -81,13 +87,19 @@ class DegDB:
     def info(self) -> dict:
         return self.store.size()
 
-    def _dump(self, df: DataFrame) -> list[dict]:
-        cols = ["subj", "pred", "obj", "lang", "author", "sig", "created"]
+    def _dump(self, rows: DataFrame | pa.Table) -> list[dict]:
+        """Response rows: NULL fields omitted, ``created`` as a naive
+        ISO string. A DataFrame is materialised through Spark (``toArrow``)."""
+        if isinstance(rows, DataFrame):
+            rows = rows.select(*_COLS).toArrow()
+        table = rows.select(_COLS)
+        created = table["created"].cast(pa.int64())
+        table = table.set_column(_COLS.index("created"), "created", created)
         out = []
-        for r in df.select(*cols).collect():
-            d = {k: v for k, v in r.asDict().items() if v is not None}
+        for r in table.to_pylist():
+            d = {k: v for k, v in r.items() if v is not None}
             if "created" in d:
-                d["created"] = d["created"].isoformat()
+                d["created"] = _TIMESTAMP.fromInternal(d["created"]).isoformat()
             out.append(d)
         return out
 

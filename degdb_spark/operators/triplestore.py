@@ -1,144 +1,166 @@
-"""TripleStore — the reference's storage + query surface, Spark-first.
+"""TripleStore — the reference's storage + query surface.
 
 Capability parity with /root/reference/triplestore/triplestore.go:
 
 - ``insert``       → idempotent set-semantics insert (unique (subj,pred,obj)
                      index, triplestore.go:42,134-148) as a left-anti join.
-- ``query``        → pattern list w/ limit (triplestore.go:49-59).
-- ``query_array_op`` → boolean tree execution (triplestore.go:62-77).
+- ``read``         → boolean pattern tree w/ limit (triplestore.go:49-77),
+                     in-process, no Spark job.
+- ``query``/``query_array_op`` → the same reads as Spark DataFrames, for
+                     plans that go on to join (traversal, Bloom sync).
 - ``each_triple_batch`` → batched full scan (triplestore.go:172-195).
 - ``size``         → count + storage stats (triplestore.go:150-170).
 - ``matching_bloom`` → bloom semi-join (bloom.go:39-73), expressed as a
                      left-semi join on the triple key.
 
-Storage: the store is one in-memory DataFrame. ``path`` seeds it from a
-parquet directory once, at construction; inserts are never written back.
-Each insert is a left-anti join of the batch against the WHOLE store,
-unioned on, and every 4th insert cuts the lineage so plans stay shallow.
-Subject-sharded layouts live in operators/sharded.py.
+Storage: the store is one driver-resident ``pyarrow.Table`` — the node's
+local store, as each degdb node keeps its triples in its own SQLite file
+(triplestore.go:35-43). ``path`` seeds it from a parquet directory once,
+at construction; inserts are never written back. An insert materialises
+its batch (its one Spark job), anti-joins it against the store's keys in
+Arrow and swaps in the appended table. Pattern reads compile the ArrayOp
+to a ``pyarrow.compute`` expression and filter in-process. ``df`` is a
+Spark view of the table, built once per store version, for Catalyst
+plans. Subject-sharded layouts live in operators/sharded.py.
 """
 
 from __future__ import annotations
 
+import os
+import time
 from typing import Iterable, Mapping
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from degdb_spark.plans.pattern import ArrayOp, compile_array_op
+from degdb_spark.plans.pattern import OR, ArrayOp, compile_array_op, compile_arrow_op
 from degdb_spark.schemas import TRIPLE_KEY, TRIPLE_SCHEMA
-from degdb_spark.persistence import lineage_cut
+
+#: TRIPLE_SCHEMA as Arrow: ``created`` is timestamp[us, UTC], the type
+#: Spark's ``toArrow`` gives TimestampType under the UTC session zone.
+ARROW_SCHEMA = to_arrow_schema(TRIPLE_SCHEMA)
+
+
+def _conform(table: pa.Table) -> pa.Table:
+    """Columns of ARROW_SCHEMA in order; missing ones are NULL, extra
+    ones dropped."""
+    cols = [
+        table[f.name].cast(f.type) if f.name in table.column_names else pa.nulls(table.num_rows, f.type)
+        for f in ARROW_SCHEMA
+    ]
+    return pa.Table.from_arrays(cols, schema=ARROW_SCHEMA)
 
 
 class TripleStore:
-    """In-memory/parquet-backed universal triple table."""
+    """Driver-resident universal triple table with a Spark view."""
 
     def __init__(self, spark: SparkSession, df: DataFrame | None = None, path: str | None = None):
         self.spark = spark
         self.path = path
         if df is None and path is not None:
             df = spark.read.schema(TRIPLE_SCHEMA).parquet(path)
-        if df is None:
-            df = spark.createDataFrame([], schema=TRIPLE_SCHEMA)
-        self._df = df
-        self._inserts_since_checkpoint = 0
+        self._table = ARROW_SCHEMA.empty_table() if df is None else _conform(df.toArrow())
+        self._df: DataFrame | None = None
 
     # ------------------------------------------------------------------ io
     @staticmethod
     def from_rows(spark: SparkSession, rows: Iterable[Mapping[str, str]]) -> "TripleStore":
         """Build from partial-triple dicts (missing fields → NULL)."""
-        full = [
-            {f.name: r.get(f.name) for f in TRIPLE_SCHEMA.fields} for r in rows
-        ]
-        df = spark.createDataFrame(full, schema=TRIPLE_SCHEMA)
         store = TripleStore(spark)
-        store.insert(df)
+        store.insert(pa.Table.from_pylist(list(rows), schema=ARROW_SCHEMA))
         return store
 
     @property
+    def table(self) -> pa.Table:
+        """The store itself; never mutated, only replaced by ``insert``."""
+        return self._table
+
+    @property
     def df(self) -> DataFrame:
+        """Spark view of the current table, built on first use after each
+        insert."""
+        if self._df is None:
+            self._df = self.spark.createDataFrame(self._table, schema=TRIPLE_SCHEMA)
         return self._df
 
-    def insert(self, new: DataFrame) -> int:
+    def insert(self, new: DataFrame | pa.Table) -> int:
         """Idempotent insert with set semantics on (subj,pred,obj).
 
         Mirrors Insert (triplestore.go:134-148): duplicates — within the
         batch or vs the existing store — are silently skipped; returns the
         number of rows actually added. ``created`` is stamped server-side
-        when absent (core/http.go:64-69). The batch is anti-joined against
-        the whole store; nothing is persisted.
+        when absent (core/http.go:64-69), with one clock reading per batch.
+        A DataFrame batch is materialised once (``toArrow``); nothing is
+        persisted.
         """
-        for f in TRIPLE_SCHEMA.fields:
-            if f.name not in new.columns:
-                new = new.withColumn(f.name, F.lit(None).cast(f.dataType))
-        new = new.select([f.name for f in TRIPLE_SCHEMA.fields])
-        new = new.withColumn(
-            "created", F.coalesce(F.col("created"), F.current_timestamp())
+        batch = _conform(new.toArrow() if isinstance(new, DataFrame) else new)
+        created = ARROW_SCHEMA.field("created")
+        now = pa.scalar(time.time_ns() // 1000, created.type)
+        batch = batch.set_column(
+            ARROW_SCHEMA.get_field_index("created"), created, pc.coalesce(batch["created"], now)
         )
-        # in-batch dedup on the key, keeping the first occurrence
-        new = new.dropDuplicates(TRIPLE_KEY)
-        fresh = new.join(self._df.select(TRIPLE_KEY), on=TRIPLE_KEY, how="left_anti")
-        # materialise BEFORE counting: current_timestamp() and the
-        # dropDuplicates survivor choice are non-deterministic per action,
-        # so without this the counted rows could differ from what later
-        # queries actually see.
-        fresh = fresh.transform(lineage_cut, eager=True)
-        added = fresh.count()
-        self._df = self._df.unionByName(fresh)
-        # each insert nests the previous anti-join inside the next one's
-        # plan; without truncation the plan grows super-linearly with
-        # insert count (measured: 10 single-row inserts → 11 s each).
-        self._inserts_since_checkpoint += 1
-        if self._inserts_since_checkpoint >= 4:
-            self._df = self._df.transform(lineage_cut, eager=True)
-            self._inserts_since_checkpoint = 0
-        return added
+        # in-batch dedup on the key, keeping the first occurrence (NULL
+        # keys group together, as in Spark's dropDuplicates)
+        first = (
+            batch.select(TRIPLE_KEY)
+            .append_column("_row", pa.array(np.arange(batch.num_rows)))
+            .group_by(TRIPLE_KEY)
+            .aggregate([("_row", "min")])["_row_min"]
+        )
+        batch = batch.take(np.sort(first.to_numpy()))
+        # a NULL key never equals a stored one, as in Spark's anti-join
+        fresh = batch.join(
+            self._table.select(TRIPLE_KEY), keys=TRIPLE_KEY, join_type="left anti"
+        ).cast(ARROW_SCHEMA)
+        # one chunk, so a read's cost and row order do not depend on how
+        # many inserts built the store
+        self._table = pa.concat_tables([self._table, fresh]).combine_chunks()
+        self._df = None
+        return fresh.num_rows
 
     # --------------------------------------------------------------- query
+    def read(self, op: ArrayOp | Mapping, limit: int = -1) -> pa.Table:
+        """Boolean pattern tree filtered in-process with its Arrow
+        compilation, no Spark job (QueryArrayOp, triplestore.go:62-77;
+        limit<=0 → unlimited)."""
+        out = self._table.filter(compile_arrow_op(op))
+        return out.slice(0, limit) if limit and limit > 0 else out
+
     def query(self, patterns: Iterable[Mapping[str, str]] | Mapping[str, str], limit: int = -1) -> DataFrame:
-        """Pattern-list query: OR of patterns (the HTTP entry's wrapping,
-        core/http.go:108-113), LIMIT per QueryRequest.limit
-        (triplestore.go:68-71; limit<=0 → unlimited)."""
+        """Pattern-list query on the Spark view: OR of patterns (the HTTP
+        entry's wrapping, core/http.go:108-113), LIMIT per
+        QueryRequest.limit (triplestore.go:68-71; limit<=0 → unlimited)."""
         if isinstance(patterns, Mapping):
             patterns = [patterns]
-        op = ArrayOp(mode="OR", triples=list(patterns))
-        return self.query_array_op(op, limit=limit)
+        return self.query_array_op(ArrayOp(mode=OR, triples=list(patterns)), limit=limit)
 
     def query_array_op(self, op: ArrayOp | Mapping | Column, limit: int = -1) -> DataFrame:
-        """Execute a boolean pattern tree (QueryArrayOp,
+        """Boolean pattern tree on the Spark view (QueryArrayOp,
         triplestore.go:62-77)."""
         pred = op if isinstance(op, Column) else compile_array_op(op)
-        out = self._df.filter(pred)
+        out = self.df.filter(pred)
         if limit and limit > 0:
             out = out.limit(limit)
         return out
 
     # ---------------------------------------------------------------- scan
     def each_triple_batch(self, batch_size: int = 1000):
-        """Batched full scan (EachTripleBatch, triplestore.go:172-195).
-
-        Yields lists of Rows of ``batch_size``. Uses toLocalIterator so only
-        one partition is resident on the driver at a time — the Spark
-        analogue of the reference's LIMIT/OFFSET pages.
-        """
-        batch: list = []
-        for row in self._df.toLocalIterator():
-            batch.append(row)
-            if len(batch) == batch_size:
-                yield batch
-                batch = []
-        if batch:
-            yield batch
+        """Batched full scan (EachTripleBatch, triplestore.go:172-195):
+        lists of triple dicts of ``batch_size`` — the reference's
+        LIMIT/OFFSET pages over the driver-resident table."""
+        for start in range(0, self._table.num_rows, batch_size):
+            yield self._table.slice(start, batch_size).to_pylist()
 
     def size(self) -> dict:
         """Count + storage stats (Size, triplestore.go:150-170)."""
-        import os
-
         disk = 0
         if self.path and os.path.isdir(self.path):
             for root, _, files in os.walk(self.path):
                 disk += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        return {"triples": self._df.count(), "disk_size_bytes": disk}
+        return {"triples": self._table.num_rows, "disk_size_bytes": disk}
 
     # --------------------------------------------------------------- bloom
     def matching_bloom(self, other_keys: DataFrame) -> DataFrame:
@@ -147,11 +169,12 @@ class TripleStore:
         key. At scale Spark's runtime bloom-filter join
         (spark.sql.optimizer.runtime.bloomFilter.enabled) builds the actual
         bloom on the small side automatically."""
-        return self._df.join(
+        return self.df.join(
             other_keys.select(TRIPLE_KEY), on=TRIPLE_KEY, how="left_semi"
         )
 
-    def sort_canonical(self, df: DataFrame | None = None) -> DataFrame:
-        """Lexicographic (subj, pred, obj) canonical order
-        (protocol/protocol.go:28-52)."""
-        return (df if df is not None else self._df).orderBy("subj", "pred", "obj")
+    def sort_canonical(self) -> pa.Table:
+        """The store in lexicographic (subj, pred, obj) canonical order
+        (protocol/protocol.go:28-52), NULLs first as in Spark's orderBy."""
+        order = [(k, "ascending") for k in ("subj", "pred", "obj")]
+        return self._table.sort_by(order, null_placement="at_start")

@@ -30,8 +30,7 @@ masters, reliable ``checkpoint()`` off-local) — because ``persist``
 caches data but KEEPS the logical plan, which is wrong in two cases:
 
 - iterative state (pregel supersteps, BFS frontiers, k-core survivor
-  sets, triple-store insert accumulation): a persisted loop still
-  grows its plan exponentially;
+  sets): a persisted loop still grows its plan exponentially;
 - recompute-sensitive frames (anything reading spark_partition_id
   over a repartitionByRange, whose sampled boundaries can differ
   across re-evaluations — operators/ranking.py, packing.py): losing
@@ -169,7 +168,7 @@ def pin_partitioned(df: DataFrame, eager: bool = False) -> DataFrame:
 
 def lineage_cut(df: DataFrame, eager: bool = False) -> DataFrame:
     """TRUE logical-plan cut for iterative state (supersteps, BFS
-    frontiers, shrinking survivor sets, insert accumulation). Unlike
+    frontiers, shrinking survivor sets). Unlike
     pin(), ``persist`` is NOT an option here — it keeps the logical
     plan, so an N-superstep loop would still build an exponentially
     nested plan. The knob is therefore binary:

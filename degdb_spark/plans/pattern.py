@@ -1,14 +1,23 @@
-"""Triple-pattern → Catalyst Column compiler.
+"""Triple-pattern compiler: one IR, two targets.
 
 Re-implements the *semantics* of the reference's ArrayOp query IR
-(/root/reference/protocol/protocol.proto:80-89) and its SQL compiler
-(/root/reference/triplestore/triplestore.go:79-132) as a PySpark
-``Column`` expression builder. Where degdb compiled a boolean tree of
-exact-match triple patterns into one SQLite WHERE string, we compile the
-same tree into one Catalyst predicate — which Catalyst then pushes down
-to the parquet scan, so a rooted pattern query only reads the row groups
-whose min/max subj range can match (the Spark analogue of degdb routing a
-query to the shard owning murmur3(subj)).
+(protocol/protocol.proto:80-89) and its SQL compiler
+(triplestore/triplestore.go:79-132). Where degdb compiled
+a boolean tree of exact-match triple patterns into one SQLite WHERE
+string, we compile the same tree into one predicate for either engine:
+
+- ``compile_array_op`` → a Catalyst ``Column``, for Spark plans (joins,
+  traversal, bulk scans). Catalyst pushes it down to a parquet scan, so
+  a rooted pattern only reads the row groups whose min/max subj range can
+  match (the Spark analogue of degdb routing a query to the shard owning
+  murmur3(subj)).
+- ``compile_arrow_op`` → a ``pyarrow.compute`` expression, which the
+  node's driver-resident store (operators/triplestore.py) filters
+  in-process with no Spark job.
+
+Both use ``==`` per field, ``&``/``|`` as Kleene AND/OR and ``~`` as
+NOT, so a comparison with NULL drops the row on either target exactly as
+SQL three-valued logic does.
 
 Semantics preserved (validated by tests mirroring TestArrayOpToSQL and
 TestTripleStoreQueryArrayOp, triplestore/triplestore_test.go:143-235,
@@ -28,9 +37,12 @@ TestTripleStoreQueryArrayOp, triplestore/triplestore_test.go:143-235,
 from __future__ import annotations
 
 import json
+import operator
 from dataclasses import dataclass, field
-from typing import Mapping
+from functools import reduce
+from typing import Callable, Mapping
 
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -62,37 +74,32 @@ class ArrayOp:
         )
 
 
-def compile_pattern(pattern: Mapping[str, str]) -> Column:
-    """One partial triple → conjunction of equality predicates.
+def _compile_pattern(pattern: Mapping[str, str], eq: Callable, true: Callable):
+    """One partial triple → conjunction of ``eq(field, value)`` terms.
 
     Mirrors TripleToSQL (triplestore/triplestore.go:107-132): empty
     string or absent field = wildcard; a fully-empty pattern matches
-    everything.
+    everything (``true()``).
     """
-    conjuncts = [
-        F.col(f) == F.lit(pattern[f])
-        for f in PATTERN_FIELDS
-        if pattern.get(f) not in (None, "")
-    ]
     unknown = set(pattern) - set(PATTERN_FIELDS) - {"sig", "created"}
     if unknown:
         raise ValueError(f"unknown pattern fields: {sorted(unknown)}")
-    if not conjuncts:
-        return F.lit(True)
-    out = conjuncts[0]
-    for c in conjuncts[1:]:
-        out = out & c
-    return out
+    bound = {f: pattern[f] for f in PATTERN_FIELDS if pattern.get(f) not in (None, "")}
+    if not all(isinstance(v, str) for v in bound.values()):
+        raise ValueError("pattern field values must be strings")
+    conjuncts = [eq(f, v) for f, v in bound.items()]
+    return reduce(operator.and_, conjuncts) if conjuncts else true()
 
 
-def compile_array_op(op: ArrayOp | Mapping) -> Column:
-    """Boolean tree → one Catalyst predicate (ArrayOpToSQL semantics,
-    triplestore/triplestore.go:79-105)."""
+def _compile(op: ArrayOp | Mapping, eq: Callable, true: Callable):
+    """Boolean tree → one predicate (ArrayOpToSQL semantics,
+    triplestore/triplestore.go:79-105), built from ``eq`` leaves with the
+    target's own ``&``, ``|`` and ``~``."""
     if not isinstance(op, ArrayOp):
         op = ArrayOp.from_dict(op)
 
-    parts: list[Column] = [compile_array_op(a) for a in op.arguments]
-    parts += [compile_pattern(t) for t in op.triples]
+    parts = [_compile(a, eq, true) for a in op.arguments]
+    parts += [_compile_pattern(t, eq, true) for t in op.triples]
 
     if op.mode == NOT:
         # "NOT requires a single triple or argument" (protocol.proto:86,
@@ -102,12 +109,28 @@ def compile_array_op(op: ArrayOp | Mapping) -> Column:
         return ~parts[0]
 
     if not parts:
-        return F.lit(True)
-    combine = Column.__and__ if op.mode == AND else Column.__or__
-    out = parts[0]
-    for p in parts[1:]:
-        out = combine(out, p)
-    return out
+        return true()
+    return reduce(operator.and_ if op.mode == AND else operator.or_, parts)
+
+
+#: per target: (equality leaf, always-true predicate)
+_CATALYST = (lambda f, v: F.col(f) == F.lit(v), lambda: F.lit(True))
+_ARROW = (lambda f, v: pc.field(f) == v, lambda: pc.scalar(True))
+
+
+def compile_pattern(pattern: Mapping[str, str]) -> Column:
+    """One partial triple → Catalyst conjunction of equalities."""
+    return _compile_pattern(pattern, *_CATALYST)
+
+
+def compile_array_op(op: ArrayOp | Mapping) -> Column:
+    """Boolean tree → one Catalyst predicate."""
+    return _compile(op, *_CATALYST)
+
+
+def compile_arrow_op(op: ArrayOp | Mapping) -> pc.Expression:
+    """Boolean tree → one ``pyarrow.compute`` filter expression."""
+    return _compile(op, *_ARROW)
 
 
 def parse_query_json(q: str) -> list[dict]:

@@ -20,9 +20,11 @@ user's first touch (`curl localhost:PORT/api/v1/...`) works unchanged:
 Deliberately stdlib-only (ThreadingHTTPServer): the shim is an edge
 adapter — every request body is parsed on the HTTP thread and handed to
 the same DegDB methods the Python API uses, with one lock serializing
-every store access (Spark DataFrame lineage swaps aren't atomic). The
-store lives in this process's memory (operators/triplestore.py), so
-inserts do not survive a restart and replicas cannot share it.
+every store access: an insert reads the store's keys and then swaps in
+the appended table, so two unserialized inserts could each miss the
+other's rows. The store is an Arrow table in this process's memory
+(operators/triplestore.py), so inserts do not survive a restart and
+replicas cannot share it.
 """
 
 from __future__ import annotations

@@ -4,6 +4,7 @@ stripping volatile fields."""
 
 from __future__ import annotations
 
+import itertools
 import json
 
 import pytest
@@ -83,3 +84,96 @@ def test_query_array_op_json(db):
         ' "arguments": [{"mode": "NOT", "triples": [{"subj": "/m/0hume"}]}]}'
     )
     assert _spo(rows) == [("/m/02mjmr", "/type/object/type", "/people/person")]
+
+
+# --- the node's read path runs no Spark job ---
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` → (fn(), Spark jobs fn ran), counted exactly
+    through a job group of its own."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    groups = itertools.count()
+
+    def run(fn):
+        group = f"test-jobs-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return result, len(tracker.getJobIdsForGroup(group))
+
+    return run
+
+
+def test_node_reads_run_no_spark_job(db, count_jobs):
+    batch = json.dumps([{"subj": "/m/0new", "pred": "/type/object/name", "obj": "New"}])
+    added, jobs = count_jobs(lambda: db.insert_json(batch))
+    assert added == 1 and jobs <= 1
+    reads = {
+        "query_json": lambda: db.query_json('[{"subj": "/m/0new"}]'),
+        "query_array_op_json": lambda: db.query_array_op_json(
+            '{"mode": "NOT", "triples": [{"subj": "/m/0hume"}]}'
+        ),
+        "info": db.info,
+        "triples": db.triples,
+    }
+    for name, read in reads.items():
+        result, jobs = count_jobs(read)
+        assert result, name
+        assert jobs == 0, f"{name} ran {jobs} Spark jobs"
+
+
+# --- query_json answers exactly as the Catalyst path does ---
+
+def _reference_dump(df) -> list[dict]:
+    """Row rendering through ``collect()``: NULL fields omitted, ``created``
+    as the naive datetime's isoformat()."""
+    out = []
+    for r in df.select("subj", "pred", "obj", "lang", "author", "sig", "created").collect():
+        d = {k: v for k, v in r.asDict().items() if v is not None}
+        if "created" in d:
+            d["created"] = d["created"].isoformat()
+        out.append(d)
+    return out
+
+
+def _row_set(rows) -> set[str]:
+    return {json.dumps(r, sort_keys=True) for r in rows}
+
+
+@pytest.mark.parametrize(
+    "patterns",
+    [
+        [{"subj": "/m/02mjmr"}],
+        [{"subj": "/m/02mjmr"}, {"subj": "/m/0hume"}, {"subj": "/m/0none"}],
+    ],
+)
+def test_query_json_matches_catalyst_dump(db, patterns):
+    got = db.query_json(json.dumps(patterns))
+    catalyst = db.store.query(patterns)
+    assert got and _row_set(got) == _row_set(db._dump(catalyst))
+    assert _row_set(got) == _row_set(_reference_dump(catalyst))
+    # signed and stamped, NULL lang omitted
+    assert all({"author", "sig", "created"} <= set(r) and "lang" not in r for r in got)
+
+
+def test_query_json_limit_matches_catalyst_dump(db):
+    pattern = [{"pred": "/type/object/type", "obj": "/people/person"}]
+    db.insert_json(json.dumps(
+        [{"subj": f"/m/p{i}", "pred": "/type/object/type", "obj": "/people/person"} for i in range(5)]
+    ))
+    got = db.query_json(json.dumps(pattern), limit=3)
+    everything = _row_set(_reference_dump(db.store.query(pattern)))
+    assert len(everything) == 6
+    assert len(got) == 3 and _row_set(got) <= everything
+
+
+def test_triples_matches_catalyst_order(db):
+    # NULL pred/obj sort first, as in Spark's orderBy
+    db.insert_json(json.dumps([{"subj": "/m/02mjmr"}, {"subj": "/m/0hume", "pred": "/a"}]))
+    got = db.triples()
+    assert got == _reference_dump(db.store.df.orderBy("subj", "pred", "obj"))
+    assert [r.get("pred") for r in got[:3]] == [None, "/type/object/name", "/type/object/type"]

@@ -1,14 +1,20 @@
-"""Property-based check: for random ArrayOp trees, the Catalyst
-compilation selects exactly the rows a direct Python evaluation of the
-reference semantics selects (triplestore.go:79-132)."""
+"""Property-based checks over random ArrayOp trees:
+
+- the Catalyst compilation selects exactly the rows a direct Python
+  evaluation of the reference semantics selects (triplestore.go:79-132);
+- the Arrow and Catalyst compilations select the same rows, NULLs and
+  NOT included (SQL three-valued logic on both).
+"""
 
 from __future__ import annotations
+
+import itertools
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from degdb_spark.plans.pattern import ArrayOp, compile_array_op
+from degdb_spark.plans.pattern import ArrayOp, compile_array_op, compile_arrow_op
 
 SUBJECTS = ["s1", "s2", "s3"]
 PREDS = ["p1", "p2"]
@@ -50,20 +56,20 @@ pattern_st = st.fixed_dictionaries(
 )
 
 
-def op_st(depth: int = 2):
+def op_st(depth: int = 2, patterns=pattern_st):
     base = st.builds(
         lambda mode, triples: ArrayOp(mode=mode, triples=triples),
         st.sampled_from(["AND", "OR"]),
-        st.lists(pattern_st, min_size=1, max_size=3),
+        st.lists(patterns, min_size=1, max_size=3),
     )
     if depth == 0:
         return base
-    sub = op_st(depth - 1)
+    sub = op_st(depth - 1, patterns)
     notted = st.builds(lambda a: ArrayOp(mode="NOT", arguments=[a]), sub)
     nested = st.builds(
         lambda mode, triples, args: ArrayOp(mode=mode, triples=triples, arguments=args),
         st.sampled_from(["AND", "OR"]),
-        st.lists(pattern_st, max_size=2),
+        st.lists(patterns, max_size=2),
         st.lists(sub, min_size=1, max_size=2),
     )
     return st.one_of(base, notted, nested)
@@ -94,3 +100,67 @@ def test_compiled_matches_python_semantics(spark, triples_df, op):
         for r in triples_df.filter(compile_array_op(op)).collect()
     }
     assert got == expected
+
+
+# --- Arrow vs Catalyst: the store's two executors of one IR ---
+
+LANGS = ["en", "fr"]
+AUTHORS = ["a1", "a2"]
+
+#: one row per (subj, pred, obj) with NULLs in every field but subj;
+#: ``sig`` is a row id
+NULLABLE_TRIPLES = [
+    {
+        "subj": s,
+        "pred": p,
+        "obj": o,
+        "lang": (LANGS + [None])[i % 3],
+        "author": (AUTHORS + [None])[(i // 3) % 3],
+        "sig": f"row{i}",
+    }
+    for i, (s, p, o) in enumerate(
+        itertools.product(SUBJECTS, PREDS + [None], OBJS + [None])
+    )
+]
+
+nullable_pattern_st = st.fixed_dictionaries(
+    {},
+    optional={
+        "subj": st.sampled_from(SUBJECTS + [""]),
+        "pred": st.sampled_from(PREDS + [""]),
+        "obj": st.sampled_from(OBJS + [""]),
+        "lang": st.sampled_from(LANGS + [""]),
+        "author": st.sampled_from(AUTHORS + [""]),
+    },
+)
+
+
+@pytest.fixture(scope="module")
+def nullable_store(spark):
+    from degdb_spark.operators.triplestore import TripleStore
+
+    store = TripleStore.from_rows(spark, NULLABLE_TRIPLES)
+    assert store.size()["triples"] == len(NULLABLE_TRIPLES)
+    store.df.cache()
+    return store
+
+
+@settings(
+    max_examples=40,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(op=op_st(patterns=nullable_pattern_st))
+def test_arrow_and_catalyst_select_same_rows(nullable_store, op):
+    arrow = sorted(nullable_store.table.filter(compile_arrow_op(op))["sig"].to_pylist())
+    catalyst = sorted(r.sig for r in nullable_store.df.filter(compile_array_op(op)).collect())
+    assert arrow == catalyst
+
+
+def test_null_comparison_drops_row_under_not(nullable_store):
+    """NOT(lang = 'en') keeps neither the 'en' rows nor the NULL-lang
+    rows on either executor."""
+    op = ArrayOp(mode="NOT", triples=[{"lang": "en"}])
+    want = sorted(t["sig"] for t in NULLABLE_TRIPLES if t["lang"] not in ("en", None))
+    assert sorted(nullable_store.table.filter(compile_arrow_op(op))["sig"].to_pylist()) == want
+    assert sorted(r.sig for r in nullable_store.df.filter(compile_array_op(op)).collect()) == want

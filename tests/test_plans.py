@@ -77,17 +77,18 @@ def test_q1_single_shuffle(spark):
 
 
 def test_pattern_query_prunes_columns_and_pushes_subject(spark, tmp_path):
-    """A rooted pattern query over a parquet-backed store pushes the
-    subject equality into the scan."""
+    """A rooted pattern's Catalyst compilation, applied to a parquet scan,
+    pushes the subject equality into the scan."""
     from degdb_spark.operators.triplestore import TripleStore
+    from degdb_spark.plans.pattern import ArrayOp, compile_array_op
 
     store = TripleStore.from_rows(
         spark, [{"subj": f"s{i}", "pred": "p", "obj": str(i)} for i in range(100)]
     )
     path = str(tmp_path / "triples")
     store.df.write.parquet(path)
-    disk = TripleStore(spark, df=spark.read.parquet(path))
-    plan = _formatted(disk.query({"subj": "s42"}))
+    scan = spark.read.parquet(path).filter(compile_array_op(ArrayOp(triples=[{"subj": "s42"}])))
+    plan = _formatted(scan)
     assert "PushedFilters:" in plan and "EqualTo(subj,s42)" in plan
 
 

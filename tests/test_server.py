@@ -98,6 +98,9 @@ def test_error_paths(server):
     # array element that is not an object → 400, not a 500
     code, body = _get(server, "/api/v1/query?" + urllib.parse.urlencode({"q": "[1]"}))
     assert code == 400
+    # non-string field value → 400, on both pattern executors
+    code, body = _get(server, "/api/v1/query?" + urllib.parse.urlencode({"q": '[{"subj": 5}]'}))
+    assert code == 400
     # non-integer limit → 400, not a 500
     qs = urllib.parse.urlencode({"q": '[{"subj": "a"}]', "limit": "abc"})
     code, body = _get(server, "/api/v1/query?" + qs)

@@ -3,9 +3,10 @@
 benchmark harness (/root/reference/triplestore/triplestore_test.go:
 237-279: single-triple insert and 1000-triple batch insert).
 
-Spark is a batch engine — the single-row path is intentionally
-pathological (a full anti-join per row) and reported for parity, not
-as a recommendation; batch insert is the real path.
+Every insert materialises its batch with one Spark job and anti-joins
+it against the driver-resident store's keys in Arrow, so the
+single-row path pays a whole job per row; it is reported for parity,
+not as a recommendation; batch insert is the real path.
 
 Usage: python tools/insert_bench.py [--rows 10000] [--batch 1000]
 Prints one JSON line.
@@ -59,7 +60,7 @@ def main() -> None:
     batch_secs = time.time() - t0
     assert total == args.rows
 
-    # single-row inserts (pathological on purpose — parity with the
+    # single-row inserts (one Spark job each — parity with the
     # reference's BenchmarkInsertTriple)
     store2 = TripleStore(spark)
     t0 = time.time()
