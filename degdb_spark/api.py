@@ -11,10 +11,11 @@ workflow maps 1:1:
     db.triples()                                          # full dump
     db.info()                                             # {"triples": N, ...}
 
-Pattern reads, ``triples()`` and ``info()`` run in-process over the
-store's driver-resident Arrow table, with no Spark job; an insert runs
-one job to materialise its signed batch, and path queries are Spark
-joins over the store's Spark view.
+Inserts, pattern reads, ``triples()`` and ``info()`` run in-process
+over the store's driver-resident Arrow table, with no Spark job: a JSON
+batch is parsed, signed and deduplicated in Arrow. Only ``insert`` of a
+DataFrame (a bulk load) runs one job, to materialise it; path queries
+are Spark joins over the store's Spark view.
 
 Differences by design: signing is opt-in (pass a key) because Spark jobs
 are trusted-perimeter; gossip/keyspace routing is replaced by Spark's own
@@ -51,14 +52,19 @@ class DegDB:
         self.signing_key = signing_key
 
     # ---- POST /api/v1/insert (core/http.go:40-59) ----
-    def insert_json(self, payload: str) -> int:
-        df = triples_from_json(self.spark, payload)
-        return self.insert(df)
+    def insert_json(self, payload: str | Iterable[Mapping]) -> int:
+        """Insert a JSON array of triples (or its parsed rows); returns
+        the number added. Parsed, signed and deduplicated in-process."""
+        return self.insert(triples_from_json(payload))
 
-    def insert(self, df: DataFrame) -> int:
+    def insert(self, rows: DataFrame | pa.Table) -> int:
+        """Sign (with a key) and insert a batch; returns the number added.
+        A DataFrame (a bulk load) is materialised once, its one Spark job."""
+        if isinstance(rows, DataFrame):
+            rows = rows.toArrow()
         if self.signing_key is not None:
-            df = sign_triples(df, self.signing_key)  # W1/W2 (crypto.go:62-91)
-        return self.store.insert(df)
+            rows = sign_triples(rows, self.signing_key)  # W1/W2 (crypto.go:62-91)
+        return self.store.insert(rows)
 
     # ---- GET /api/v1/query?q= (core/http.go:94-120) ----
     def query_json(self, q: str, limit: int = -1) -> list[dict]:

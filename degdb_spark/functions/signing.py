@@ -8,10 +8,11 @@ fingerprint; signatures are non-deterministic per signing, so its own
 tests strip them before comparison (core/query_test.go:64-72) — ours do
 the same.
 
-Implementation: a vectorized pandas UDF (Arrow-batched); `cryptography`
-is not in this container, so the default signer is HMAC-SHA256 (same
-shape: keyed, verifiable, per-key author id). If `cryptography` is
-importable, ECDSA-P256 is used for byte-level parity.
+Implementation: one per-row signer (``signature``), run in-process over
+an Arrow table for node inserts and inside a vectorized pandas UDF for
+DataFrames. The signer is HMAC-SHA256 (same shape as the reference's:
+keyed, verifiable, per-key author id); `cryptography`, which ECDSA-P256
+would need, is not a dependency.
 """
 
 from __future__ import annotations
@@ -20,15 +21,11 @@ import hashlib
 import hmac
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-try:  # optional, gated — not in the baked container
-    from cryptography.hazmat.primitives.asymmetric import ec  # noqa: F401
-
-    HAVE_ECDSA = True
-except Exception:  # pragma: no cover
-    HAVE_ECDSA = False
+from degdb_spark.schemas import ARROW_SCHEMA, conform_triples
 
 
 def fingerprint(subj: str, pred: str, obj: str, algo: str = "sha1") -> bytes:
@@ -69,28 +66,41 @@ def hex_hmac_sha256(key: bytes, msg_hex: str) -> str:
     return hashlib.sha256((opad + inner).encode()).hexdigest()
 
 
-def sign_triples(df: DataFrame, key: bytes, fp_algo: str = "sha1") -> DataFrame:
+def signature(key: bytes, subj: str | None, pred: str | None, obj: str | None, fp_algo: str = "sha1") -> str:
+    """Hex signature of one triple — the one per-row signer behind every
+    signing and verifying path. 'sha256-hex' is the portable hex-domain
+    profile (``hex_hmac_sha256`` over the sha256 fingerprint's hex); any
+    other ``fp_algo`` is HMAC-SHA256 over that fingerprint's bytes."""
+    if fp_algo == "sha256-hex":
+        return hex_hmac_sha256(key, fingerprint(subj, pred, obj, "sha256").hex())
+    return hmac.new(key, fingerprint(subj, pred, obj, fp_algo), hashlib.sha256).hexdigest()
+
+
+def sign_triples(rows: DataFrame | pa.Table, key: bytes, fp_algo: str = "sha1") -> DataFrame | pa.Table:
     """Set author + sig on every row (SignTriple, crypto/crypto.go:62-80).
+
+    An Arrow table is signed in-process and returned in ARROW_SCHEMA; a
+    DataFrame gets the same signatures from a pandas UDF, lazily.
 
     HMAC signatures are deterministic; like the reference's ECDSA ones they
     must still be stripped for cross-store comparison because the key
     differs per writer.
     """
     author = author_id(key)
+    if isinstance(rows, pa.Table):
+        table = conform_triples(rows)
+        subj, pred, obj = (table[c].to_pylist() for c in ("subj", "pred", "obj"))
+        sigs = [signature(key, s, p, o, fp_algo) for s, p, o in zip(subj, pred, obj)]
+        for name, values in (("author", [author] * table.num_rows), ("sig", sigs)):
+            field = ARROW_SCHEMA.field(name)
+            table = table.set_column(ARROW_SCHEMA.get_field_index(name), field, pa.array(values, field.type))
+        return table
 
     @F.pandas_udf("string")
     def _sig(subj: pd.Series, pred: pd.Series, obj: pd.Series) -> pd.Series:
-        out = []
-        for s, p, o in zip(subj, pred, obj):
-            if fp_algo == "sha256-hex":  # portable hex-domain profile
-                payload = "\t".join([s or "", p or "", o or ""]).encode()
-                out.append(hex_hmac_sha256(key, hashlib.sha256(payload).hexdigest()))
-            else:
-                fp = fingerprint(s, p, o, fp_algo)
-                out.append(hmac.new(key, fp, hashlib.sha256).hexdigest())
-        return pd.Series(out)
+        return pd.Series([signature(key, s, p, o, fp_algo) for s, p, o in zip(subj, pred, obj)])
 
-    return df.withColumn("author", F.lit(author)).withColumn(
+    return rows.withColumn("author", F.lit(author)).withColumn(
         "sig", _sig(F.col("subj"), F.col("pred"), F.col("obj"))
     )
 
@@ -101,15 +111,6 @@ def verify_triples(df: DataFrame, key: bytes, fp_algo: str = "sha1") -> DataFram
     'sha256-hex' hex-domain MAC."""
     @F.pandas_udf("boolean")
     def _ok(subj: pd.Series, pred: pd.Series, obj: pd.Series, sig: pd.Series) -> pd.Series:
-        out = []
-        for s, p, o, g in zip(subj, pred, obj, sig):
-            if fp_algo == "sha256-hex":  # portable hex-domain profile
-                payload = "\t".join([s or "", p or "", o or ""]).encode()
-                expect = hex_hmac_sha256(key, hashlib.sha256(payload).hexdigest())
-            else:
-                fp = fingerprint(s, p, o, fp_algo)
-                expect = hmac.new(key, fp, hashlib.sha256).hexdigest()
-            out.append(expect == g)
-        return pd.Series(out)
+        return pd.Series([signature(key, s, p, o, fp_algo) == g for s, p, o, g in zip(subj, pred, obj, sig)])
 
     return df.withColumn("sig_ok", _ok("subj", "pred", "obj", "sig"))

@@ -16,9 +16,10 @@ Capability parity with /root/reference/triplestore/triplestore.go:
 Storage: the store is one driver-resident ``pyarrow.Table`` — the node's
 local store, as each degdb node keeps its triples in its own SQLite file
 (triplestore.go:35-43). ``path`` seeds it from a parquet directory once,
-at construction; inserts are never written back. An insert materialises
-its batch (its one Spark job), anti-joins it against the store's keys in
-Arrow and swaps in the appended table. Pattern reads compile the ArrayOp
+at construction; inserts are never written back. An insert anti-joins
+its Arrow batch against the store's keys in Arrow and swaps in the
+appended table, with no Spark job; only a DataFrame batch (a bulk load)
+runs one, to materialise it. Pattern reads compile the ArrayOp
 to a ``pyarrow.compute`` expression and filter in-process. ``df`` is a
 Spark view of the table, built once per store version, for Catalyst
 plans. Subject-sharded layouts live in operators/sharded.py.
@@ -34,24 +35,9 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from degdb_spark.plans.pattern import OR, ArrayOp, compile_array_op, compile_arrow_op
-from degdb_spark.schemas import TRIPLE_KEY, TRIPLE_SCHEMA
-
-#: TRIPLE_SCHEMA as Arrow: ``created`` is timestamp[us, UTC], the type
-#: Spark's ``toArrow`` gives TimestampType under the UTC session zone.
-ARROW_SCHEMA = to_arrow_schema(TRIPLE_SCHEMA)
-
-
-def _conform(table: pa.Table) -> pa.Table:
-    """Columns of ARROW_SCHEMA in order; missing ones are NULL, extra
-    ones dropped."""
-    cols = [
-        table[f.name].cast(f.type) if f.name in table.column_names else pa.nulls(table.num_rows, f.type)
-        for f in ARROW_SCHEMA
-    ]
-    return pa.Table.from_arrays(cols, schema=ARROW_SCHEMA)
+from degdb_spark.schemas import ARROW_SCHEMA, TRIPLE_KEY, TRIPLE_SCHEMA, conform_triples
 
 
 class TripleStore:
@@ -62,7 +48,7 @@ class TripleStore:
         self.path = path
         if df is None and path is not None:
             df = spark.read.schema(TRIPLE_SCHEMA).parquet(path)
-        self._table = ARROW_SCHEMA.empty_table() if df is None else _conform(df.toArrow())
+        self._table = ARROW_SCHEMA.empty_table() if df is None else conform_triples(df.toArrow())
         self._df: DataFrame | None = None
 
     # ------------------------------------------------------------------ io
@@ -96,7 +82,7 @@ class TripleStore:
         A DataFrame batch is materialised once (``toArrow``); nothing is
         persisted.
         """
-        batch = _conform(new.toArrow() if isinstance(new, DataFrame) else new)
+        batch = conform_triples(new.toArrow() if isinstance(new, DataFrame) else new)
         created = ARROW_SCHEMA.field("created")
         now = pa.scalar(time.time_ns() // 1000, created.type)
         batch = batch.set_column(

@@ -18,13 +18,13 @@ user's first touch (`curl localhost:PORT/api/v1/...`) works unchanged:
                           triples/insert/keyspace pages)
 
 Deliberately stdlib-only (ThreadingHTTPServer): the shim is an edge
-adapter — every request body is parsed on the HTTP thread and handed to
-the same DegDB methods the Python API uses, with one lock serializing
-every store access: an insert reads the store's keys and then swaps in
-the appended table, so two unserialized inserts could each miss the
-other's rows. The store is an Arrow table in this process's memory
-(operators/triplestore.py), so inserts do not survive a restart and
-replicas cannot share it.
+adapter — every request body is parsed once on the HTTP thread and
+handed to the same DegDB methods the Python API uses, with one lock
+serializing every store access: an insert reads the store's keys and
+then swaps in the appended table, so two unserialized inserts could each
+miss the other's rows. No route runs a Spark job. The store is an Arrow
+table in this process's memory (operators/triplestore.py), so inserts
+do not survive a restart and replicas cannot share it.
 """
 
 from __future__ import annotations
@@ -125,12 +125,16 @@ class DegDBServer:
                     except json.JSONDecodeError as e:
                         self._send(500, str(e), "text/plain")
                         return
+                    # a parsed JSON string would be decoded again as JSON
+                    # text by insert_json; the body must be rows
+                    if not isinstance(payload, (list, dict)):
+                        raise ValueError("insert payload must be a JSON array of triples")
                     with outer._lock:
-                        outer.db.insert_json(body)
-                    # parity with http.go:58 — reports payload size
-                    self._send(
-                        200, f"Inserted {len(payload)} triples.", "text/plain"
-                    )
+                        outer.db.insert_json(payload)
+                    # parity with http.go:58 — reports the triples sent,
+                    # not the number added; a bare object is one triple
+                    sent = 1 if isinstance(payload, dict) else len(payload)
+                    self._send(200, f"Inserted {sent} triples.", "text/plain")
                 except Exception as e:
                     self._send(500, str(e), "text/plain")
 

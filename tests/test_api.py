@@ -4,12 +4,17 @@ stripping volatile fields."""
 
 from __future__ import annotations
 
+import hashlib
+import hmac
 import itertools
 import json
 
 import pytest
 
 from degdb_spark.api import DegDB
+from degdb_spark.functions.signing import sign_triples, verify_triples
+from degdb_spark.schemas import TRIPLE_SCHEMA
+from degdb_spark.sources.json_triples import triples_from_json
 
 OBAMA_JSON = json.dumps(
     [
@@ -74,8 +79,25 @@ def test_limit(db):
 
 
 def test_bad_payload_rejected(db):
-    with pytest.raises(ValueError):
-        db.insert_json('[{"subject": "typo"}]')
+    before = db.info()["triples"]
+    for payload in [
+        '[{"subject": "typo"}]',  # unknown field
+        "[1]",  # element that is not an object
+        '[{"pred": "/p", "obj": "o"}]',  # missing subj
+        '[{"subj": null, "pred": "/p"}]',  # NULL subj
+        '[{"subj": "/m/x", "created": 5}]',  # created is the node's to stamp
+        '[{"subj": "/m/x", "created": "2024-01-01T00:00:00"}]',
+        '{"subj": 5}',  # non-string values are not coerced
+        '[{"subj": "/m/x", "obj": 5}]',
+        '[{"subj": "/m/x", "pred": ["/p"]}]',
+        '[{"subj": "/m/ok"}, {"subj": 5}]',  # one bad row rejects the batch
+        "5",
+        '"[]"',
+        "null",
+    ]:
+        with pytest.raises(ValueError):
+            db.insert_json(payload)
+        assert db.info()["triples"] == before, payload
 
 
 def test_query_array_op_json(db):
@@ -111,7 +133,11 @@ def count_jobs(spark):
 def test_node_reads_run_no_spark_job(db, count_jobs):
     batch = json.dumps([{"subj": "/m/0new", "pred": "/type/object/name", "obj": "New"}])
     added, jobs = count_jobs(lambda: db.insert_json(batch))
-    assert added == 1 and jobs <= 1
+    assert added == 1 and jobs == 0
+    # a DataFrame batch (the bulk load) runs exactly its toArrow job
+    bulk = db.spark.range(2).selectExpr("concat('/m/bulk', id) AS subj", "'/p' AS pred", "'o' AS obj")
+    added, jobs = count_jobs(lambda: db.insert(bulk))
+    assert added == 2 and jobs == 1
     reads = {
         "query_json": lambda: db.query_json('[{"subj": "/m/0new"}]'),
         "query_array_op_json": lambda: db.query_array_op_json(
@@ -177,3 +203,51 @@ def test_triples_matches_catalyst_order(db):
     got = db.triples()
     assert got == _reference_dump(db.store.df.orderBy("subj", "pred", "obj"))
     assert [r.get("pred") for r in got[:3]] == [None, "/type/object/name", "/type/object/type"]
+
+
+# --- every signing path gives the same signature ---
+
+def _plain_sig(key: bytes, fp_algo: str, subj, pred, obj) -> str:
+    """The signature recomputed with hashlib/hmac alone."""
+    payload = "\t".join([subj or "", pred or "", obj or ""]).encode()
+    if fp_algo == "sha1":
+        return hmac.new(key, hashlib.sha1(payload).digest(), hashlib.sha256).hexdigest()
+    # hex-domain HMAC: pads, digests and message are hex strings
+    kp = key.ljust(64, b"\x00")
+    ipad, opad = bytes(b ^ 0x36 for b in kp).hex(), bytes(b ^ 0x5C for b in kp).hex()
+    inner = hashlib.sha256((ipad + hashlib.sha256(payload).hexdigest()).encode()).hexdigest()
+    return hashlib.sha256((opad + inner).encode()).hexdigest()
+
+
+FORGED = [
+    {"subj": "/m/a", "pred": "/p", "obj": "o", "author": "degdb:author_1", "sig": "forged"},
+    {"subj": "/m/b"},
+    {"subj": "/m/c", "pred": "/p"},
+    {"subj": "/m/d", "obj": "o", "lang": "en", "sig": "0" * 64},
+]
+
+
+@pytest.mark.parametrize("fp_algo", ["sha1", "sha256-hex"])
+def test_signature_parity_across_signers(spark, fp_algo):
+    key = b"parity-key"
+    author = f"degdb:author_{int.from_bytes(hashlib.sha256(key).digest()[:8], 'big')}"
+    table = triples_from_json(json.dumps(FORGED))
+    in_process = sign_triples(table, key, fp_algo=fp_algo).to_pylist()
+    udf = sign_triples(spark.createDataFrame(table, schema=TRIPLE_SCHEMA), key, fp_algo=fp_algo)
+    by_udf = {r["subj"]: (r["author"], r["sig"]) for r in udf.collect()}
+    assert len(in_process) == len(by_udf) == len(FORGED)
+    for r in in_process:
+        assert (r["author"], r["sig"]) == by_udf[r["subj"]]
+        assert r["author"] == author
+        assert r["sig"] == _plain_sig(key, fp_algo, r["subj"], r["pred"], r["obj"])
+    signed = spark.createDataFrame(sign_triples(table, key, fp_algo=fp_algo), schema=TRIPLE_SCHEMA)
+    assert all(r["sig_ok"] for r in verify_triples(signed, key, fp_algo=fp_algo).collect())
+
+
+def test_insert_json_stores_verifiable_signatures(spark):
+    key = b"parity-key"
+    db = DegDB(spark, signing_key=key)
+    assert db.insert_json(json.dumps(FORGED)) == len(FORGED)
+    stored = db.store.table.to_pylist()
+    assert all(r["sig"] == _plain_sig(key, "sha1", r["subj"], r["pred"], r["obj"]) for r in stored)
+    assert all(r["sig_ok"] for r in verify_triples(db.store.df, key).collect())

@@ -75,6 +75,13 @@ def test_insert_then_read_back(server):
     code, body = _get(server, "/api/v1/info")
     assert code == 200 and json.loads(body)["triples"] == 4
 
+    # a bare object is one triple; the reply counts triples, not its keys
+    one = {"subj": "/m/0bare", "pred": "/type/object/name", "obj": "Bare"}
+    code, body = _post(server, "/api/v1/insert", json.dumps(one))
+    assert code == 200 and body == "Inserted 1 triples."
+    code, body = _get(server, "/api/v1/info")
+    assert code == 200 and json.loads(body)["triples"] == 5
+
 
 def test_info_peers_myip(server):
     code, body = _get(server, "/api/v1/info")
@@ -92,6 +99,11 @@ def test_error_paths(server):
     # bad JSON body → 500 (http.go:48-51)
     code, body = _post(server, "/api/v1/insert", "{not json")
     assert code == 500
+    # a JSON string holding JSON is not rows: rejected, nothing stored
+    before = json.loads(_get(server, "/api/v1/info")[1])["triples"]
+    code, body = _post(server, "/api/v1/insert", json.dumps(json.dumps([{"subj": "/m/x"}])))
+    assert code == 500
+    assert json.loads(_get(server, "/api/v1/info")[1])["triples"] == before
     # bad query JSON → 400 (http.go:101-105)
     code, body = _get(server, "/api/v1/query?q=%7Bnot")
     assert code == 400

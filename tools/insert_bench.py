@@ -3,10 +3,13 @@
 benchmark harness (/root/reference/triplestore/triplestore_test.go:
 237-279: single-triple insert and 1000-triple batch insert).
 
-Every insert materialises its batch with one Spark job and anti-joins
-it against the driver-resident store's keys in Arrow, so the
-single-row path pays a whole job per row; it is reported for parity,
-not as a recommendation; batch insert is the real path.
+The batches here are DataFrames: each insert materialises its batch
+with one Spark job and anti-joins it against the driver-resident store's
+keys in Arrow, so the single-row path pays a whole job per row; it is
+reported for parity, not as a recommendation. The node's own insert
+path is also timed: ten signed ``DegDB.insert_json`` batches of 500
+triples, parsed, signed and deduplicated in-process (reported as the
+median milliseconds per batch).
 
 Usage: python tools/insert_bench.py [--rows 10000] [--batch 1000]
 Prints one JSON line.
@@ -17,10 +20,14 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+JSON_BATCH = 500  # triples per signed insert_json batch
+JSON_BATCHES = 10  # insert_json batches timed
 
 
 def main() -> None:
@@ -30,6 +37,7 @@ def main() -> None:
     ap.add_argument("--single", type=int, default=20, help="single-row inserts to time")
     args = ap.parse_args()
 
+    from degdb_spark.api import DegDB
     from degdb_spark.operators.triplestore import TripleStore
     from degdb_spark.session import get_spark
 
@@ -68,6 +76,20 @@ def main() -> None:
         store2.insert(rows(1, offset=i))
     single_secs = time.time() - t0
 
+    # signed JSON batches through the node's API, each timed on its own
+    db = DegDB(spark, signing_key=b"insert-bench-key")
+    json_ms = []
+    for b in range(JSON_BATCHES):
+        payload = json.dumps(
+            [
+                {"subj": f"bar{b}_{i}", "pred": "some subject! woooooo", "obj": "toasters are delicious"}
+                for i in range(JSON_BATCH)
+            ]
+        )
+        t0 = time.perf_counter()
+        assert db.insert_json(payload) == JSON_BATCH
+        json_ms.append(1000 * (time.perf_counter() - t0))
+
     print(
         json.dumps(
             {
@@ -75,6 +97,8 @@ def main() -> None:
                 "batch_rows_per_sec": round(args.rows / batch_secs, 1),
                 "batch_size": args.batch,
                 "single_inserts_per_sec": round(args.single / single_secs, 2),
+                "signed_insert_json_batch_size": JSON_BATCH,
+                "signed_insert_json_ms_per_batch": round(statistics.median(json_ms), 1),
                 "unit": "rows/sec",
             }
         )
