@@ -10,7 +10,8 @@ the same.
 
 Implementation: one per-row signer (``signature``), run in-process over
 an Arrow table for node inserts and inside a vectorized pandas UDF for
-DataFrames. The signer is HMAC-SHA256 (same shape as the reference's:
+DataFrames (the ``triple_signature_parity`` registry query is the one
+DataFrame caller). The signer is HMAC-SHA256 (same shape as the reference's:
 keyed, verifiable, per-key author id); `cryptography`, which ECDSA-P256
 would need, is not a dependency.
 """

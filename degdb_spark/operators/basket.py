@@ -6,21 +6,15 @@ co-purchase edge list (parts u,v weighted by how many orders contain
 both). Recomputing it inside every query re-pays a full lineitem scan
 + per-order pair explode per query (~3 s × 14 at sf0.1); at 100 TB a
 user materializes it once per corpus version. This module is that
-materialization, following the postings/PQ contract-index lifecycle
-(operators/search.py — ``_batch``-partitioned managed table, static
-INSERT OVERWRITE per batch, drop-before-create):
+materialization: a ``_batch``-partitioned managed table, dropped and
+rebuilt per corpus version (the PQ/positional index layout):
 
-- the index stores RAW per-batch partial pair counts ``(u, v, w)``
-  with u < v and NO weight threshold — counts over disjoint order
-  sets are additive, so increments (new orders) and retractions
-  (deleted orders, as negative counts) are both just new batches;
-- readers sum partials, apply the threshold, and materialize both
-  directions — an index-sized aggregate instead of a lineitem scan.
-
-Batch atomicity contract: an order's lineitem rows must all land in
-the SAME batch (orders are the unit of ingest — exactly the contract
-every index twin has on its id column). A replayed batch overwrites
-its own ``_batch`` partition and converges.
+- the index stores RAW pair counts ``(u, v, w)`` with u < v and NO
+  weight threshold, so one artifact serves both the thresholded
+  analytics graph and the unthresholded co-purchase pair set;
+- readers sum per ``(u, v)``, apply the threshold, and materialize
+  both directions — an index-sized aggregate instead of a lineitem
+  scan.
 
 Scale: the index is |edges| ≈ sf·7k rows of three ints — millions at
 100 TB versus billions of lineitem rows; the read-side aggregate is
@@ -50,8 +44,8 @@ def wedge_counts(lineitem: DataFrame) -> DataFrame:
     """RAW co-purchase pair counts ``(u, v, w)`` with u < v — one
     groupBy(orderkey) shuffle (collect_set dedups parts in-pass), an
     in-codegen combination explode bounded by per-order fanout, then a
-    (u, v) count. Linear in lineitem. NO threshold here: raw counts
-    are what makes batches additive/retractable."""
+    (u, v) count. Linear in lineitem. NO threshold here: readers pick
+    it (``pairs_from_index``'s ``min_w``)."""
     # Explicit partition count on the order key: the combination
     # explode below runs on the groupBy's REDUCE side, and AQE's
     # byte-based coalescing folds the small ps-array frame onto a
@@ -84,9 +78,9 @@ def wedge_counts(lineitem: DataFrame) -> DataFrame:
 def build_basket_edges_index(
     lineitem: DataFrame, table: str, buckets: int = 16, batch_id: int = 0
 ) -> None:
-    """One-time build: drop any prior generation, write batch 0 of the
-    partial-count table, ``_batch``-partitioned and bucketed on
-    (u, v) so the read-side sum is bucket-local."""
+    """One-time build: drop any prior generation, write the pair-count
+    table, ``_batch``-partitioned and bucketed on (u, v) so the
+    read-side sum is bucket-local."""
     from degdb_spark.operators.pq import drop_managed_table
 
     spark = lineitem.sparkSession
@@ -102,48 +96,10 @@ def build_basket_edges_index(
     )
 
 
-def refresh_basket_edges_index(
-    new_lineitem: DataFrame, table: str, batch_id: int | None = None
-) -> None:
-    """Incremental maintenance: the increment's orders' pair counts
-    land in their own ``_batch`` partition (static INSERT OVERWRITE —
-    replaying a batch converges). Historical lineitem is never
-    re-read. ``new_lineitem`` must hold complete, previously-unseen
-    orders (append-only order ingest)."""
-    from degdb_spark.operators.search import _insert_overwrite_batch
-
-    spark = new_lineitem.sparkSession
-    if batch_id is None:
-        batch_id = spark.table(table).agg(F.max("_batch")).first()[0] + 1
-    _insert_overwrite_batch(
-        wedge_counts(new_lineitem).select("u", "v", "w"), table, batch_id
-    )
-
-
-def retract_basket_edges_index(
-    deleted_lineitem: DataFrame, table: str, batch_id: int | None = None
-) -> None:
-    """Corpus deletion WITHOUT a rebuild: the deleted orders' pair
-    counts go in as a NEGATIVE batch; the read-side sum cancels them
-    exactly (integer counts — no float drift). ``deleted_lineitem``
-    must hold complete previously-ingested orders."""
-    from degdb_spark.operators.search import _insert_overwrite_batch
-
-    spark = deleted_lineitem.sparkSession
-    if batch_id is None:
-        batch_id = spark.table(table).agg(F.max("_batch")).first()[0] + 1
-    _insert_overwrite_batch(
-        wedge_counts(deleted_lineitem)
-        .select("u", "v", (-F.col("w")).alias("w")),
-        table,
-        batch_id,
-    )
-
-
 def pairs_from_index(spark: SparkSession, table: str, min_w: int = 1) -> DataFrame:
-    """(u, v, w) canonical u < v pairs served FROM the index: sum the
-    per-batch partials (bucket-local past the (u, v) bucketing), drop
-    cancelled/sub-``min_w`` pairs. min_w=1 is the UNTHRESHOLDED
+    """(u, v, w) canonical u < v pairs served FROM the index: sum per
+    (u, v) (bucket-local past the (u, v) bucketing), drop sub-``min_w``
+    pairs. min_w=1 is the UNTHRESHOLDED
     co-purchase pair set (coverage_queries._basket_edges semantics —
     the raw-count design makes one artifact serve both families);
     min_w=W_MIN is the analytics graph."""
@@ -157,9 +113,9 @@ def pairs_from_index(spark: SparkSession, table: str, min_w: int = 1) -> DataFra
 
 
 def edges_from_index(spark: SparkSession, table: str) -> DataFrame:
-    """The basket family's input frame, served FROM the index: sum the
-    per-batch partials (bucket-local — no shuffle past the table's
-    (u, v) bucketing), drop cancelled/sub-threshold pairs, and
+    """The basket family's input frame, served FROM the index: sum per
+    (u, v) (bucket-local — no shuffle past the table's (u, v)
+    bucketing), drop sub-threshold pairs, and
     materialize both directions for the frontier joins. Eagerly pinned
     for the same reason the inline builder was: every consumer derives
     several secondary frames (sources/vertices/und) from it."""

@@ -79,38 +79,6 @@ def _shingle_hash_pair(shingle: Column) -> Column:
     )
 
 
-def _minhash_signature(shingles_col, num_hashes: int):
-    """num_hashes minhash values over an array<string> of shingles.
-
-    Slot i's hash is h1 + i·h2 (Kirsch-Mitzenmacher double hashing over
-    the two md5 halves) — one md5 per shingle total, and every slot value
-    is plain 64-bit arithmetic both engines compute identically:
-    max(h1) + 31·max(h2) < 2^60 + 2^61 never overflows a signed long.
-    A seeded-xxhash64 slot family is marginally faster but engine-
-    private; md5 keeps the whole signature (and therefore LSH banding)
-    replayable in the DuckDB correctness oracle.
-    """
-    # single pass: per shingle compute all num_hashes slot hashes, fold
-    # with element-wise min — the shingle array is evaluated exactly once.
-    # Slots loop over sequence(0..n-1) so the tree stays O(1) in
-    # num_hashes (an unrolled literal array compiles ~2-3 s per query).
-    max_long = (1 << 63) - 1
-    return F.aggregate(
-        F.transform(
-            shingles_col,
-            lambda s: let(
-                _shingle_hash_pair(s),
-                lambda h: F.transform(
-                    F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-                    lambda i: F.element_at(h, 1) + i.cast("long") * F.element_at(h, 2),
-                ),
-            ),
-        ),
-        F.array_repeat(F.lit(max_long).cast("long"), num_hashes),
-        lambda acc, hs: F.zip_with(acc, hs, lambda a, b: F.least(a, b)),
-    )
-
-
 #: minhash_band_hashes memo — see its docstring. Entries carry the
 #: py4j GATEWAY OBJECT they were built against (a strong ref, so id()
 #: recycling can never alias a relaunched gateway to a stale entry);
@@ -151,8 +119,10 @@ def minhash_band_hashes(
     row. (Deriving bands from a separate sig column re-evaluates the
     whole signature aggregate per reference after project-collapse;
     measured 20-80× slowdown.) Hash slots loop over sequence() rather
-    than unrolling — same values, O(1) codegen size (see
-    _minhash_signature). The band hash is md5 of the comma-joined
+    than unrolling — same values, O(1) codegen size (an unrolled
+    literal array compiles ~2-3 s per query). Slot i's hash is
+    h1 + i·h2 (Kirsch-Mitzenmacher double hashing over the two md5
+    halves of the shingle). The band hash is md5 of the comma-joined
     slot minima — a fixed-width shuffle key DuckDB reproduces verbatim
     (string_agg ... ORDER BY slot), so the banding itself is
     oracle-checkable, not just the Jaccard verifier behind it.
@@ -788,44 +758,6 @@ def _span_keep_first_and_reassemble(
     )
 
 
-def incremental_span_dedup(
-    new_docs: DataFrame,
-    existing_spans: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    span_tokens: int = 10,
-) -> tuple[DataFrame, DataFrame]:
-    """Span dedup for an INCREMENT against a persisted span index:
-    any span whose 128-bit fingerprint is already in ``existing_spans``
-    ((span_h1, span_h2) columns — the distinct span hashes of all
-    earlier batches; 16 bytes per span, never corpus text) is dropped
-    from every new document outright (an earlier occurrence beats
-    every new one); first-occurrence + reassembly then run within the
-    increment only. Old text is never re-read or re-sliced — the index
-    carries everything history contributes, exactly the band-index
-    contract (`incremental_lsh_candidates`). Returns ``(report,
-    fresh_spans)``: the per-new-doc (id, n_spans, n_kept, text_clean)
-    report and the increment's genuinely-new distinct span hashes —
-    the index delta the caller persists. Processing doc-ordered
-    batches through this reproduces `span_dedup` of the full corpus
-    bit-for-bit (pytest-pinned)."""
-    from degdb_spark.persistence import pin
-
-    sliced = _span_slices(new_docs, text_col, id_col, span_tokens)
-    occ = _span_occurrences(sliced, id_col)
-    # both outputs consume the probe anti-join; pin it lazily so the
-    # batch is sliced and probed once, not once per output
-    fresh_occ = pin(
-        occ.join(
-            existing_spans.select("span_h1", "span_h2"),
-            on=["span_h1", "span_h2"],
-            how="left_anti",
-        )
-    )
-    report = _span_keep_first_and_reassemble(sliced, fresh_occ, id_col)
-    return report, fresh_occ.select("span_h1", "span_h2").distinct()
-
-
 def ccnet_normalize(col) -> "F.Column":
     """CCNet's paragraph-normalization (Wenzek et al. arXiv:1911.00359
     §3.1, cc_net/text_normalizer.py semantics) as one codegen
@@ -911,38 +843,6 @@ def _para_occurrences(sliced: DataFrame, id_col: str) -> DataFrame:
         F.xxhash64(ccnet_normalize(F.col("para"))).alias("span_h1"),
         F.xxhash64(F.lit(1), ccnet_normalize(F.col("para"))).alias("span_h2"),
     )
-
-
-def incremental_paragraph_dedup(
-    new_docs: DataFrame,
-    existing_paras: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> tuple[DataFrame, DataFrame]:
-    """Paragraph dedup for an INCREMENT against a persisted paragraph
-    index ((span_h1, span_h2) fingerprints of all earlier batches'
-    NORMALIZED paragraphs — 16 bytes per paragraph, never corpus
-    text): an already-indexed paragraph drops from every new document
-    outright; first-occurrence + newline reassembly run within the
-    increment only. The incremental_span_dedup contract at paragraph
-    granularity — old text never re-read, doc-ordered batches
-    reproduce paragraph_dedup of the full corpus bit-for-bit
-    (pytest-pinned). Returns ``(report, fresh_paras)``."""
-    from degdb_spark.persistence import pin
-
-    sliced = _para_slices(new_docs, text_col, id_col)
-    occ = _para_occurrences(sliced, id_col)
-    fresh_occ = pin(
-        occ.join(
-            existing_paras.select("span_h1", "span_h2"),
-            on=["span_h1", "span_h2"],
-            how="left_anti",
-        )
-    )
-    report = _span_keep_first_and_reassemble(
-        sliced, fresh_occ, id_col, joiner="\n"
-    ).withColumnsRenamed({"n_spans": "n_paras"})
-    return report, fresh_occ.select("span_h1", "span_h2").distinct()
 
 
 def substring_dedup(
@@ -1090,51 +990,6 @@ def _substring_remove_and_reassemble(
             ).alias("text_clean"),
         )
     )
-
-
-def incremental_substring_dedup(
-    new_docs: DataFrame,
-    existing_windows: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_tokens: int = 20,
-) -> tuple[DataFrame, DataFrame]:
-    """substring_dedup for an INCREMENT against a persisted window
-    index ((win_h1, win_h2) distinct hashes of all earlier batches —
-    16 bytes per distinct window, never corpus text). A window whose
-    hash is indexed has its first occurrence in history, so EVERY new
-    occurrence of it is removal coverage; fresh hashes get the
-    first-occurrence rule within the increment. With doc-ordered
-    batches (ids ascending across batches — every index twin's
-    contract) this reproduces full-corpus substring_dedup bit-for-bit
-    for the batch's docs: an indexed hash's global winner is its
-    earlier-batch occurrence, a fresh hash's is its within-batch one,
-    and later batches can never steal a min-(doc, pos) win from
-    earlier rows. Old text is never re-read. Returns (report,
-    fresh_windows) — the per-new-doc report and the index delta to
-    persist (the incremental_span_dedup contract)."""
-    from degdb_spark.persistence import pin
-
-    L = int(min_tokens)
-    toked = new_docs.select(id_col, tokens(text_col).alias("_t"))
-    idx = existing_windows.select(
-        F.col("win_h1").alias("h1"), F.col("win_h2").alias("h2")
-    )
-    # winners exist among FRESH occurrences only; every indexed (stale)
-    # occurrence falls into the dense-range complement automatically.
-    # Pinned: feeds both the winner rollup and the index delta.
-    fresh_occ = pin(
-        _window_occurrences(toked, id_col, L).join(
-            idx, on=["h1", "h2"], how="left_anti"
-        )
-    )
-    report = _substring_remove_and_reassemble(
-        toked, _winner_starts(fresh_occ, id_col), id_col, L
-    )
-    fresh = fresh_occ.select(
-        F.col("h1").alias("win_h1"), F.col("h2").alias("win_h2")
-    ).distinct()
-    return report, fresh
 
 
 def semantic_contamination(

@@ -1,16 +1,14 @@
 """Snapshot diff: what changed between two versions of a table.
 
-The audit companion to the versioned tables in operators/merge.py
-(snapshot write + time travel): given two snapshots and a key, classify
-every key as added / removed / changed / unchanged and report per-row
-and summary views. This is how a 100 TB pipeline answers "what did
-yesterday's run change?" without replaying it.
+Given two snapshots and a key, classify every key as added / removed /
+changed / unchanged and report per-row and summary views. This is how
+a 100 TB pipeline answers "what did yesterday's run change?" without
+replaying it.
 
 Scale design: one full-outer shuffle join on the key (the minimum
 possible — membership can't be decided without seeing both sides);
-value comparison is a null-safe codegen conjunction, no UDF. For
-repeated diffs of bucketed snapshots the join is exchange-free
-(operators/bucketed.py). The summary is a 4-key aggregation.
+value comparison is a null-safe codegen conjunction, no UDF. The
+summary is a 4-key aggregation.
 """
 
 from __future__ import annotations

@@ -356,11 +356,10 @@ def graph_knn_search(
     # The broadcast hint is only sound while the query batch is bounded:
     # the frontier is |Q|·beam rows and qsel ships every query's full
     # vector, both proportional to |Q|. Interactive search keeps |Q|
-    # small by contract, but bulk callers (insert_into_knn_graph_index:
-    # queries = the whole new-vector increment) must pass
-    # broadcast_frontier=False so the planner's threshold decides and
-    # the join degrades gracefully to a shuffle instead of an
-    # over-threshold broadcast OOM (ADVICE r13).
+    # small by contract, but bulk callers (an unbounded query batch)
+    # must pass broadcast_frontier=False so the planner's threshold
+    # decides and the join degrades gracefully to a shuffle instead of
+    # an over-threshold broadcast OOM (ADVICE r13).
     def bounded(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if broadcast_frontier else df
 
@@ -491,12 +490,11 @@ def navigable_adjacency(
     re-scores and dedups them away.
 
     The stride modulus is the ID-SPACE size max(id)+1, NOT the live
-    row count (ADVICE r12): with tombstones or non-contiguous ids a
-    count-based modulus would strand every node with id >= count
-    without long links and silently re-target ALL derived links on
-    each retraction. With max(id)+1 a link can land on a dead/missing
-    id — harmless: the walk's score join against the live vector
-    table drops it (a pruned shortcut, not an error).
+    row count (ADVICE r12): with non-contiguous ids a count-based
+    modulus would strand every node with id >= count without long
+    links. With max(id)+1 a link can land on a missing id — harmless:
+    the walk's score join against the vector table drops it (a pruned
+    shortcut, not an error).
 
     The modulus rides IN-PLAN as a broadcast 1-row aggregate instead
     of a construction-time ``first()`` (VERDICT r13 "What's wrong"
@@ -534,21 +532,11 @@ def navigable_adjacency(
 
 
 # ---------------------------------------------------------------- index
-# Persisted k-NN graph — contract-index lifecycle #16. Two managed
-# tables: ``{table}`` holds adjacency rows (id, rank, neighbor_id,
-# cosine_sim, _batch) and ``{table}_vectors`` the raw vectors the walk
-# re-scores against — both _batch-partitioned with the
-# postings/PQ/basket replay contract (a batch overwrites its own
-# partition; replays converge). Deletions are TOMBSTONE rows
-# (rank = -1) filtered at read time — the FAISS/HNSW production
-# pattern: deleted nodes stop being results immediately, stop being
-# waypoints immediately, and a periodic rebuild (build_knn_graph_index
-# again) is the compaction step that re-densifies the graph. New
-# vectors' neighbor lists come from the graph's OWN search (the
-# NSW/HNSW insertion algorithm: search-then-link) plus exact
-# within-increment pairs; existing nodes' lists are not back-linked
-# until compaction (the standard freshness trade — documented, probed
-# in tests/test_index_scale_probe.py).
+# Persisted k-NN graph. Two managed tables: ``{table}`` holds adjacency
+# rows (id, rank, neighbor_id, cosine_sim, _batch) and
+# ``{table}_vectors`` the raw vectors the walk re-scores against, both
+# _batch-partitioned and bucketed on id. A new corpus version is a
+# rebuild (build_knn_graph_index again).
 
 
 def build_knn_graph_index(
@@ -594,178 +582,14 @@ def build_knn_graph_index(
     )
 
 
-def _bounded(df: DataFrame, before_batch: int | None) -> DataFrame:
-    """Restrict an index table to batches strictly before
-    ``before_batch`` — the replay-probe bound (a retried batch must
-    never read its OWN previously-committed partition)."""
-    if before_batch is None:
-        return df
-    return df.filter(F.col("_batch") < F.lit(int(before_batch)))
+def vectors_from_index(spark, table: str) -> DataFrame:
+    """(id, v) vectors of the index."""
+    return spark.table(f"{table}_vectors").select("id", "v")
 
 
-def _tombstoned(
-    spark, table: str, before_batch: int | None = None
-) -> DataFrame:
-    return (
-        _bounded(spark.table(table), before_batch)
-        .filter(F.col("rank") < 0)
-        .select("id")
-        .distinct()
-    )
-
-
-def vectors_from_index(
-    spark, table: str, before_batch: int | None = None
-) -> DataFrame:
-    """(id, v) live vectors: every batch's rows minus tombstoned ids.
-    ``before_batch`` bounds the read to ``_batch < before_batch`` for
-    replay-safe incremental steps."""
-    return (
-        _bounded(spark.table(f"{table}_vectors"), before_batch)
-        .select("id", "v")
-        .join(_tombstoned(spark, table, before_batch), on="id", how="left_anti")
-    )
-
-
-def adjacency_from_index(
-    spark, table: str, before_batch: int | None = None
-) -> DataFrame:
-    """(id, neighbor_id) live edges: real rows (rank >= 1) whose BOTH
-    endpoints are live — a deleted node is neither source nor waypoint
-    from the moment its tombstone batch lands. ``before_batch`` bounds
-    the read like vectors_from_index."""
-    dead = _tombstoned(spark, table, before_batch)
-    return (
-        _bounded(spark.table(table), before_batch)
-        .filter(F.col("rank") >= 1)
-        .select("id", "neighbor_id")
-        .join(dead, on="id", how="left_anti")
-        .join(
-            dead.select(F.col("id").alias("neighbor_id")),
-            on="neighbor_id",
-            how="left_anti",
-        )
-    )
-
-
-def refresh_knn_graph_index(
-    new_emb: DataFrame,
-    table: str,
-    k: int = 8,
-    beam: int = 16,
-    hops: int = 5,
-    batch_id: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental insert — the NSW/HNSW insertion algorithm as a
-    batch: each new vector's neighbor list = top-k of (a) a beam
-    search over the EXISTING navigable index (historical vectors are
-    read only to score the walk's bounded candidate set) and (b)
-    exact pairs WITHIN the increment (increments are ingest-batch
-    sized by contract, so the within-batch brute force is bounded).
-    New ids must be previously unseen (append-only ingest contract);
-    existing nodes' lists pick up the new vectors at the next
-    compaction (module comment).
-
-    Replay safety: the index is read bounded to ``_batch < batch_id``
-    (the _paragraph_index_step probe discipline), so a crashed-and-
-    retried batch searches exactly the pre-batch index instead of its
-    own half-committed partition — retries converge bit-for-bit."""
-    from degdb_spark.operators.search import _insert_overwrite_batch
-    from degdb_spark.operators.similarity import brute_force_topk
-
-    spark = new_emb.sparkSession
-    if batch_id is None:
-        batch_id = spark.table(table).agg(F.max("_batch")).first()[0] + 1
-    new_v = pin(
-        new_emb.select(
-            F.col(id_col).cast("long").alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-    )
-    old_v = vectors_from_index(spark, table, before_batch=batch_id)
-    adj = navigable_adjacency(
-        adjacency_from_index(spark, table, before_batch=batch_id),
-        old_v,
-        k_long=k,
-        id_col="id",
-    )
-    walked = graph_knn_search(
-        adj,
-        old_v,
-        new_v,
-        k=k,
-        beam=beam,
-        hops=hops,
-        id_col="id",
-        vec_col="v",
-        # the increment is an unbounded query batch — let the planner's
-        # size threshold pick the join side instead of force-broadcasting
-        # |increment|·beam frontier rows (ADVICE r13)
-        broadcast_frontier=False,
-    ).select(
-        F.col("query_id").alias("id"),
-        F.col("neighbor_id").alias("nbr"),
-        F.col("cosine_sim").alias("sim"),
-    )
-    within = brute_force_topk(
-        new_v, new_v, k=k, id_col="id", vec_col="v", round_dp=6
-    ).select(
-        F.col("query_id").alias("id"),
-        F.col("neighbor_id").alias("nbr"),
-        F.col("cosine_sim").alias("sim"),
-    )
-    merged = (
-        walked.unionByName(within)
-        .groupBy("id", "nbr")
-        .agg(F.max("sim").alias("sim"))
-        .groupBy("id")
-        .agg(
-            F.slice(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct((-F.col("sim")).alias("d"), F.col("nbr").alias("nbr"))
-                    )
-                ),
-                1,
-                k,
-            ).alias("_top")
-        )
-        .select("id", F.posexplode("_top").alias("_r", "t"))
-        .select(
-            "id",
-            (F.col("_r") + 1).cast("long").alias("rank"),
-            F.col("t.nbr").alias("neighbor_id"),
-            (-F.col("t.d")).alias("cosine_sim"),
-        )
-    )
-    _insert_overwrite_batch(merged, table, batch_id)
-    _insert_overwrite_batch(new_v.select("id", "v"), f"{table}_vectors", batch_id)
-
-
-def retract_knn_graph_index(
-    deleted_ids: DataFrame, table: str, batch_id: int | None = None
-) -> None:
-    """Corpus deletion WITHOUT a rebuild: one tombstone row per
-    deleted id (rank = -1) in its own batch; readers filter both
-    endpoints against the tombstone set, so deleted vectors stop
-    being results AND waypoints immediately. Recall on paths that
-    crossed deleted hubs degrades until the next compaction
-    (build_knn_graph_index rerun) — the documented trade every
-    tombstoning ANN index makes."""
-    from degdb_spark.operators.search import _insert_overwrite_batch
-
-    spark = deleted_ids.sparkSession
-    if batch_id is None:
-        batch_id = spark.table(table).agg(F.max("_batch")).first()[0] + 1
-    rows = deleted_ids.select(
-        F.col(deleted_ids.columns[0]).cast("long").alias("id"),
-        F.lit(-1).cast("long").alias("rank"),
-        F.lit(-1).cast("long").alias("neighbor_id"),
-        F.lit(0.0).alias("cosine_sim"),
-    )
-    _insert_overwrite_batch(rows, table, batch_id)
+def adjacency_from_index(spark, table: str) -> DataFrame:
+    """(id, neighbor_id) k-NN edges of the index."""
+    return spark.table(table).select("id", "neighbor_id")
 
 
 def graph_index_knn(
@@ -781,10 +605,9 @@ def graph_index_knn(
 ) -> DataFrame:
     """Beam ANN search served FROM the persisted index — the
     steady-state query: adjacency and vectors come off the bucketed
-    tables (tombstones filtered), long links derive from ids at read
-    time (never stored), and the walk is graph_knn_search unchanged.
-    On a single-batch, tombstone-free index this equals the in-plan
-    emb_graph_knn exactly (same oracle — pytest-enforced)."""
+    tables, long links derive from ids at read time (never stored),
+    and the walk is graph_knn_search unchanged. This equals the
+    in-plan emb_graph_knn exactly (same oracle — pytest-enforced)."""
     live = vectors_from_index(spark, table)
     adj = navigable_adjacency(
         adjacency_from_index(spark, table), live, k_long=k_long, id_col="id"

@@ -554,8 +554,7 @@ def semantic_drop_pairs(
     cosine clears the threshold. The keep-rule filter runs before the
     cosine so each unordered pair is scored once. The decision for a
     pair is a pure function of the two rows' (csim, vid) — independent
-    of every other row — which is why sequential increments' emissions
-    union to exactly the full-corpus pair set."""
+    of every other row."""
     from degdb_spark.operators.similarity import _dot
     from degdb_spark.queries.rounding import dround
 
@@ -584,88 +583,4 @@ def semantic_drop_pairs(
             F.col("yid").alias("keep_id"),
             "pair_sim",
         )
-    )
-
-
-def semantic_cell_table(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 4,
-) -> DataFrame:
-    """(vec_id, cell, csim) — the persistable SemDeDup assignment index
-    (the semantic twin of dedup.band_table / similarity.
-    srp_bucket_table): three scalars per vector, written out after each
-    ingest so the next increment probes assignments instead of
-    re-scoring the corpus. Requires PINNED centroids (sample-then-pin,
-    the emb_ivf_knn production shape); re-clustering is an index
-    REBUILD, exactly like the PQ index's refresh contract."""
-    return _semantic_assigned(corpus, centroids, id_col, vec_col, round_dp).select(
-        F.col("vid").alias(id_col), "cell", "csim"
-    )
-
-
-def incremental_semantic_dedup(
-    new_vecs: DataFrame,
-    existing_cells: DataFrame,
-    all_vectors: DataFrame,
-    centroids: list[list[float]],
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 4,
-) -> DataFrame:
-    """SemDeDup drop decisions for an increment: assign ONLY the new
-    batch, union with the persisted (vec_id, cell, csim) index, and
-    emit every (drop_id, keep_id, pair_sim) touching a new vector.
-    Old vectors are never re-assigned; old-vs-old is never re-paired;
-    old RAW vectors are read only to score candidate pairs that
-    already survived the cell + keep-rule filters (the csim stored in
-    the index is what makes that pre-vector filtering possible).
-    Sequential increments' emissions union to exactly the full-corpus
-    semantic_drop_pairs set — parity-tested."""
-    nc = _semantic_assigned(
-        new_vecs, centroids, id_col, vec_col, round_dp
-    ).transform(pin, eager=False)
-    combined = (
-        existing_cells.select(
-            F.col(id_col).alias("vid"), "cell", "csim", F.lit(False).alias("is_new")
-        )
-        .unionByName(nc.select("vid", "cell", "csim", F.lit(True).alias("is_new")))
-    )
-    # candidate generation on the scalar index alone (no vectors yet):
-    # cell equality + keep rule + at-least-one-new
-    x = combined.select(
-        F.col("vid").alias("xid"), "cell",
-        F.col("csim").alias("xcs"), F.col("is_new").alias("x_new"),
-    )
-    y = combined.select(
-        F.col("vid").alias("yid"), "cell",
-        F.col("csim").alias("ycs"), F.col("is_new").alias("y_new"),
-    )
-    cand = (
-        x.join(y, "cell")
-        .filter(F.col("xid") != F.col("yid"))
-        .filter(F.col("x_new") | F.col("y_new"))
-        .filter(_keep_rule(F.col("xcs"), F.col("ycs"), F.col("xid"), F.col("yid")))
-        .select(F.col("xid").alias("drop_id"), F.col("yid").alias("keep_id"))
-    )
-    from degdb_spark.operators.similarity import cosine
-    from degdb_spark.queries.rounding import dround
-
-    va = all_vectors.select(
-        F.col(id_col).alias("drop_id"),
-        F.col(vec_col).cast("array<double>").alias("_va"),
-    )
-    vb = all_vectors.select(
-        F.col(id_col).alias("keep_id"),
-        F.col(vec_col).cast("array<double>").alias("_vb"),
-    )
-    return (
-        cand.join(va, on="drop_id")
-        .join(vb, on="keep_id")
-        .withColumn("pair_sim", dround(cosine(F.col("_va"), F.col("_vb")), round_dp))
-        .filter(F.col("pair_sim") >= F.lit(float(threshold)))
-        .select("drop_id", "keep_id", "pair_sim")
     )

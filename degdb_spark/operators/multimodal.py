@@ -1212,47 +1212,6 @@ def shot_overlap_neardups(shots: DataFrame, min_shared: int = 2) -> DataFrame:
     return _shot_overlap_rerank(cand, sh, min_shared)
 
 
-def incremental_shot_neardups(
-    new_shots: DataFrame, old_shots: DataFrame, min_shared: int = 2
-) -> DataFrame:
-    """Video-pair emissions TOUCHING the new increment only: a video's
-    shots all stream in one batch, so every shot match of a pair whose
-    later member is new has a new side — filtering candidates to
-    (new ∨ new) keeps each pair's FULL matched-shot count while never
-    re-deriving old×old pairs. Union of per-batch emissions ==
-    shot_overlap_neardups over the whole corpus, each pair exactly
-    once; historical payloads participate through ~40 bytes per shot
-    and are never re-decoded."""
-    tagged = (
-        new_shots.select("media_id", "shot_idx", "b0", "b1", "b2", "b3")
-        .withColumn("_new", F.lit(1))
-        .unionByName(
-            old_shots.select("media_id", "shot_idx", "b0", "b1", "b2", "b3")
-            .withColumn("_new", F.lit(0))
-        )
-        .transform(pin, eager=False)
-    )
-    bands = _hash_bands(tagged)
-    cand = (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band_idx") == F.col("y.band_idx"))
-            & (F.col("x.val") == F.col("y.val"))
-            & (F.col("x.media_id") < F.col("y.media_id")),
-        )
-        .filter((F.col("x._new") == 1) | (F.col("y._new") == 1))
-        .select(
-            F.col("x.media_id").alias("id_a"),
-            F.col("x.shot_idx").alias("sa"),
-            F.col("y.media_id").alias("id_b"),
-            F.col("y.shot_idx").alias("sb"),
-        )
-        .distinct()
-    )
-    return _shot_overlap_rerank(cand, tagged.drop("_new"), min_shared)
-
-
 def _shot_overlap_rerank(
     cand: DataFrame, shots: DataFrame, min_shared: int
 ) -> DataFrame:
@@ -1557,36 +1516,6 @@ def banded_neardup_pairs(hashes: DataFrame) -> DataFrame:
         .distinct()
     )
     return _hamming_rerank(cand, hashes)
-
-
-def incremental_banded_neardup_pairs(
-    new_hashes: DataFrame, old_hashes: DataFrame
-) -> DataFrame:
-    """Near-dup pairs TOUCHING the new increment only: new×new and
-    new×old candidates via the banded join, old×old pairs never
-    re-derived — so sequential increments' emissions union to exactly
-    the full-corpus pair set with no pair emitted twice (each pair
-    surfaces in the increment that completes it). Old media
-    participate through their 4×16-bit fingerprints alone: historical
-    payloads are never re-decoded."""
-    tagged = new_hashes.withColumn("_new", F.lit(1)).unionByName(
-        old_hashes.withColumn("_new", F.lit(0))
-    )
-    tagged = tagged.transform(pin, eager=False)
-    bands = _hash_bands(tagged.select("media_id", "b0", "b1", "b2", "b3", "_new"))
-    cand = (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band_idx") == F.col("y.band_idx"))
-            & (F.col("x.val") == F.col("y.val"))
-            & (F.col("x.media_id") < F.col("y.media_id")),
-        )
-        .filter((F.col("x._new") == 1) | (F.col("y._new") == 1))
-        .select(F.col("x.media_id").alias("id_a"), F.col("y.media_id").alias("id_b"))
-        .distinct()
-    )
-    return _hamming_rerank(cand, tagged.drop("_new"))
 
 
 def _hash_bands(hashes: DataFrame) -> DataFrame:

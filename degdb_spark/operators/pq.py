@@ -284,19 +284,13 @@ def build_pq_index(
     batch_id: int = 0,
 ) -> None:
     """Materialize the IVF-PQ index as a TABLE partitioned by
-    (_batch, cell) — the ANN twin of search.build_postings_index: the
-    corpus is encoded ONCE per version, every subsequent query reads M
-    small ints per vector from the probed cells only (cell is a
-    partition column, so the broadcast probe join triggers dynamic
-    partition pruning), and raw float vectors are fetched only for the
-    top-``rerank`` candidates. Codebook and centroids persist alongside
+    (_batch, cell): the corpus is encoded ONCE per version, every
+    subsequent query reads M small ints per vector from the probed
+    cells only (cell is a partition column, so the broadcast probe
+    join triggers dynamic partition pruning), and raw float vectors
+    are fetched only for the top-``rerank`` candidates. Codebook and centroids persist alongside
     (``<table>_codebook`` / ``<table>_centroids``) so the index is a
-    self-contained artifact.
-
-    ``_batch`` partitioning is the idempotency mechanism (same contract
-    as the postings index): every ingest owns its partitions, so a
-    replayed batch overwrites them with identical rows instead of
-    duplicating codes."""
+    self-contained artifact."""
     spark = corpus.sparkSession
     for t in (table, f"{table}_codebook", f"{table}_centroids"):
         drop_managed_table(spark, t)
@@ -344,38 +338,6 @@ def drop_managed_table(spark, table: str) -> None:
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(path):
         fs.delete(path, True)
-
-
-def refresh_pq_index(
-    new_vecs: DataFrame,
-    table: str,
-    centroids: list[list[float]],
-    codebook: list[tuple[int, int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    batch_id: int | None = None,
-) -> None:
-    """Incremental ANN index maintenance: encode ONLY the increment and
-    write it into its own ``_batch`` partitions via dynamic partition
-    overwrite — historical vectors are never re-encoded or re-read, and
-    replaying the same batch_id converges instead of duplicating
-    (tested). Ids in ``new_vecs`` must be new (append-only; upserts go
-    through MERGE + re-encode of the affected ids). Without an explicit
-    ``batch_id``, the next id after the table's current max is used."""
-    spark = new_vecs.sparkSession
-    if batch_id is None:
-        batch_id = spark.table(table).agg(F.max("_batch")).first()[0] + 1
-    from degdb_spark.operators.search import _insert_overwrite_batch
-
-    rows = encode_with_cells(new_vecs, centroids, codebook, id_col, vec_col).select(
-        id_col, "subspace", "code", "cell"
-    )
-    # statically-specced INSERT OVERWRITE on the `_batch` subtree (cell
-    # stays dynamic below it) — replaces exactly this batch's
-    # partitions with no session-conf mutation, so concurrent writers
-    # can't race a conf restore into a full-table truncate (the former
-    # pattern's failure mode; see search.py twin)
-    _insert_overwrite_batch(rows, table, batch_id, dynamic=("cell",))
 
 
 def ivf_pq_topk(

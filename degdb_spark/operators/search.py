@@ -57,8 +57,7 @@ def postings(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def corpus_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """1-row (_n_docs, _total_dl, _avgdl) — counts ALL docs including
-    token-less ones, which postings alone can't recover (that's why an
-    index build persists this row next to the postings table)."""
+    token-less ones, which postings alone can't recover."""
     return docs.agg(
         F.count(F.lit(1)).alias("_n_docs"),
         F.sum(
@@ -84,150 +83,6 @@ def bm25_topk(
     """
     return _bm25_score(
         postings(docs, text_col), corpus_stats(docs, text_col), query_terms, k, k1, b
-    )
-
-
-def build_postings_index(
-    docs: DataFrame,
-    table: str,
-    text_col: str = "text",
-    buckets: int = 16,
-    batch_id: int = 0,
-) -> None:
-    """Materialize the inverted index as a TABLE partitioned by
-    ``_batch`` and bucketed by token — what a 100 TB deployment does
-    once per corpus version so that every subsequent query skips the
-    corpus scan entirely: the query path reads only the probed token
-    buckets (no explode, no tokenize, no shuffle for the token
-    filter). Corpus stats persist alongside as one row PER BATCH in
-    ``<table>_stats`` (token-less documents are invisible to postings
-    but count toward N/avgdl); readers sum the rows — an
-    aggregate-sized scan.
-
-    The ``_batch`` partitioning is the idempotency mechanism: every
-    ingest (initial build included) owns one partition in both tables,
-    so a replayed batch — Structured Streaming re-runs a failed
-    micro-batch — overwrites its own partition with identical rows
-    instead of double-appending postings and double-counting stats."""
-    _write_postings_batch(docs, table, text_col, batch_id, buckets=buckets, create=True)
-
-
-def refresh_postings_index(
-    new_docs: DataFrame,
-    table: str,
-    text_col: str = "text",
-    batch_id: int | None = None,
-) -> None:
-    """Incremental index maintenance: write the INCREMENT's postings
-    and stats row into their own ``_batch`` partition of the bucketed
-    table (dynamic partition overwrite — replaying the same batch_id
-    converges instead of duplicating). Historical text is never
-    re-read — the same contract as the incremental band index. Doc ids
-    in ``new_docs`` must be new (append-only corpora; upserts go
-    through a MERGE + rebuild of the affected buckets). Without an
-    explicit ``batch_id``, the next id after the table's current max
-    is used; a caller replaying a batch passes its id so a
-    crash-and-retry lands on the identical partition."""
-    spark = new_docs.sparkSession
-    if batch_id is None:
-        batch_id = spark.table(table).agg(F.max("_batch")).first()[0] + 1
-    _write_postings_batch(new_docs, table, text_col, batch_id, create=False)
-
-
-def _write_postings_batch(
-    docs: DataFrame,
-    table: str,
-    text_col: str,
-    batch_id: int,
-    buckets: int = 16,
-    create: bool = False,
-) -> None:
-    spark = docs.sparkSession
-    post = postings(docs, text_col).withColumn("_batch", F.lit(int(batch_id)))
-    stats = (
-        corpus_stats(docs, text_col)
-        .select("_n_docs", "_total_dl")
-        .withColumn("_batch", F.lit(int(batch_id)))
-    )
-    if create:
-        from degdb_spark.operators.pq import drop_managed_table
-
-        for t in (table, f"{table}_stats"):
-            drop_managed_table(spark, t)
-        (
-            post.write.mode("overwrite")
-            .partitionBy("_batch")
-            .bucketBy(buckets, "token")
-            .sortBy("token")
-            .saveAsTable(table)
-        )
-        stats.write.mode("overwrite").partitionBy("_batch").saveAsTable(
-            f"{table}_stats"
-        )
-        return
-    # INSERT OVERWRITE with an explicit STATIC `_batch` spec replaces
-    # exactly this batch's partition regardless of the session-wide
-    # partitionOverwriteMode — no shared-conf mutation, so two
-    # concurrent foreachBatch writers can't interleave a
-    # restore-to-static under each other and truncate the whole table
-    # (the former conf-toggle pattern had exactly that race; a
-    # DataFrameWriter option("partitionOverwriteMode") is silently
-    # ignored by insertInto, verified on this Spark)
-    _insert_overwrite_batch(
-        post.select("doc_id", "token", "tf", "dl"), table, batch_id
-    )
-    _insert_overwrite_batch(
-        stats.select("_n_docs", "_total_dl"), f"{table}_stats", batch_id
-    )
-
-
-def _insert_overwrite_batch(
-    rows: DataFrame, table: str, batch_id: int, dynamic: tuple[str, ...] = ()
-) -> None:
-    """Write ``rows`` (data columns only, table order, any dynamic
-    partition columns last) into the ``_batch = batch_id`` partition
-    subtree of ``table`` via statically-specced INSERT OVERWRITE.
-    ``dynamic`` names partition columns below ``_batch`` in the
-    partitioning (their values ride in ``rows``' trailing columns)."""
-    view = f"_ins_{table}_{int(batch_id)}".replace(".", "_")
-    rows.createOrReplaceTempView(view)
-    cols = ", ".join(f"`{c}`" for c in rows.columns)
-    spec = ", ".join([f"_batch = {int(batch_id)}", *dynamic])
-    try:
-        rows.sparkSession.sql(
-            f"INSERT OVERWRITE TABLE {table} PARTITION ({spec}) "
-            f"SELECT {cols} FROM {view}"
-        )
-    finally:  # never leak the temp view on a failed INSERT
-        rows.sparkSession.catalog.dropTempView(view)
-
-
-def index_corpus_stats(spark, table: str) -> DataFrame:
-    """1-row (_n_docs, _total_dl, _avgdl) from the per-batch stats
-    table — the exact roll-forward, summed at read time."""
-    return (
-        spark.table(f"{table}_stats")
-        .agg(
-            F.sum("_n_docs").alias("_n_docs"),
-            F.sum("_total_dl").alias("_total_dl"),
-        )
-        .withColumn("_avgdl", F.col("_total_dl") / F.col("_n_docs"))
-    )
-
-
-def bm25_topk_from_index(
-    spark,
-    table: str,
-    query_terms: list[str],
-    k: int = 20,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> DataFrame:
-    """bm25_topk against a build_postings_index table: identical
-    results (tested), corpus never rescanned — the plan starts at the
-    postings table with the term filter pushed into the scan."""
-    return _bm25_score(
-        spark.table(table), index_corpus_stats(spark, table), query_terms, k, k1, b
     )
 
 
@@ -372,61 +227,24 @@ def build_positional_index(
     batch_id: int = 0,
 ) -> None:
     """Materialize the positional index as a TABLE partitioned by
-    ``_batch`` and bucketed by token — the phrase/proximity twin of
-    build_postings_index. At 100 TB a SERVING workload of repeated
-    phrase queries probes the phrase's token buckets (a few
+    ``_batch`` and bucketed by token. At 100 TB a SERVING workload of
+    repeated phrase queries probes the phrase's token buckets (a few
     query-term-sized scans + doc_id equi-joins) instead of rescanning
     and retokenizing the corpus per query; phrase_count_tokens stays
     the right shape for ad-hoc analytics that ride a corpus scan
-    anyway (SCALE.md). Same ``_batch`` idempotency contract as the
-    postings/band/PQ indexes: every ingest owns its partition, so a
-    replayed batch overwrites itself instead of double-appending."""
-    _write_positional_batch(docs, table, text_col, batch_id, buckets, create=True)
+    anyway (SCALE.md). Any prior table of the same name is dropped
+    first."""
+    from degdb_spark.operators.pq import drop_managed_table
 
-
-def refresh_positional_index(
-    new_docs: DataFrame,
-    table: str,
-    text_col: str = "text",
-    batch_id: int | None = None,
-) -> None:
-    """Incremental positional-index maintenance: tokenize ONLY the
-    increment into its own ``_batch`` partition (statically-specced
-    INSERT OVERWRITE — replaying the same batch_id converges).
-    Historical text is never re-read; doc ids must be new
-    (append-only), the same contract as refresh_postings_index."""
-    spark = new_docs.sparkSession
-    if batch_id is None:
-        batch_id = spark.table(table).agg(F.max("_batch")).first()[0] + 1
-    _write_positional_batch(new_docs, table, text_col, batch_id, create=False)
-
-
-def _write_positional_batch(
-    docs: DataFrame,
-    table: str,
-    text_col: str,
-    batch_id: int,
-    buckets: int = 16,
-    create: bool = False,
-) -> None:
-    spark = docs.sparkSession
-    rows = positional_postings(docs, text_col).withColumn(
-        "_batch", F.lit(int(batch_id))
-    )
-    if create:
-        from degdb_spark.operators.pq import drop_managed_table
-
-        drop_managed_table(spark, table)
-        (
-            rows.write.mode("overwrite")
-            .partitionBy("_batch")
-            .bucketBy(buckets, "token")
-            .sortBy("token")
-            .saveAsTable(table)
-        )
-        return
-    _insert_overwrite_batch(
-        rows.select("doc_id", "token", "positions"), table, batch_id
+    drop_managed_table(docs.sparkSession, table)
+    (
+        positional_postings(docs, text_col)
+        .withColumn("_batch", F.lit(int(batch_id)))
+        .write.mode("overwrite")
+        .partitionBy("_batch")
+        .bucketBy(buckets, "token")
+        .sortBy("token")
+        .saveAsTable(table)
     )
 
 

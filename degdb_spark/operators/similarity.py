@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from degdb_spark.operators.balance import rebalance_for_compute
 from degdb_spark.queries.rounding import dround
-from degdb_spark.persistence import pin
 
 
 def _dot(a, b):
@@ -89,61 +88,6 @@ def brute_force_topk(
     )
 
 
-def srp_sketch(vec_col, hyperplanes: list[list[float]]):
-    """Signed-random-projection bucket id: one bit per hyperplane."""
-    return F.element_at(
-        srp_buckets_all(vec_col, [hyperplanes], len(hyperplanes[0])), 1
-    )
-
-
-def srp_buckets_all(vec_col, tables: list[list[list[float]]], dim: int):
-    """Bucket ids for ALL sketch tables in ONE pass over the vector.
-
-    The hyperplane matrix is laid out position-major (one row of
-    n_tables×n_planes coefficients per vector position); a single
-    zip_with+aggregate computes every projection simultaneously, and the
-    finish lambda turns sign bits into per-table bucket ids. Versus one
-    fold per (table, plane) this evaluates the vector once and keeps the
-    generated code linear in dim (measured ~4× on the 8×4 default).
-    """
-    n_tables = len(tables)
-    n_planes = len(tables[0])
-    width = n_tables * n_planes
-    # position-major coefficient matrix: row i = plane coefficients at
-    # vector position i, flattened across tables
-    h2d = F.array(
-        *[
-            F.array(
-                *[
-                    F.lit(float(tables[t][p][i]))
-                    for t in range(n_tables)
-                    for p in range(n_planes)
-                ]
-            )
-            for i in range(dim)
-        ]
-    )
-    return F.aggregate(
-        F.zip_with(
-            vec_col, h2d, lambda x, hrow: F.transform(hrow, lambda h: h * x.cast("double"))
-        ),
-        F.array(*[F.lit(0.0)] * width),
-        lambda acc, row: F.zip_with(acc, row, lambda a, b: a + b),
-        lambda projs: F.transform(
-            F.sequence(F.lit(0), F.lit(n_tables - 1)),
-            lambda t: F.aggregate(
-                F.sequence(F.lit(0), F.lit(n_planes - 1)),
-                F.lit(0),
-                lambda acc, p: acc
-                + F.when(
-                    F.element_at(projs, t * n_planes + p + 1) >= 0,
-                    F.pow(F.lit(2.0), p).cast("int"),
-                ).otherwise(F.lit(0)),
-            ).cast("int"),
-        ),
-    )
-
-
 def make_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     """Deterministic pseudo-Gaussian hyperplanes (Box-Muller over a seeded
     PRNG) — fixed across runs so sketches are reproducible."""
@@ -159,11 +103,16 @@ def make_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float
 
 
 def _buckets_from_matrix(vec_col, h2d_col, n_tables: int, n_planes: int):
-    """srp_buckets_all with the coefficient matrix read from a COLUMN
-    instead of inlined literals. Identical arithmetic (same position-major
-    fold), but the hyperplanes travel as data — a dim×(tables·planes)
-    literal matrix (64×32 = 2048 nodes) otherwise dominates whole-stage
-    codegen compile time (~3 s per query at the default shape)."""
+    """SRP bucket ids for ALL sketch tables in ONE pass over the vector.
+
+    ``h2d_col`` is the position-major hyperplane matrix (row i = the
+    plane coefficients at vector position i, flattened across tables);
+    one zip_with+aggregate computes every projection at once and the
+    finish lambda turns sign bits into per-table bucket ids. The
+    matrix travels as a COLUMN, not inlined literals: a
+    dim×(tables·planes) literal matrix (64×32 = 2048 nodes) otherwise
+    dominates whole-stage codegen compile time (~3 s per query at the
+    default shape)."""
     width = n_tables * n_planes
     return F.aggregate(
         F.zip_with(
@@ -311,87 +260,4 @@ def embedding_near_dups(
             "cosine_sim",
         )
         .distinct()
-    )
-
-
-def srp_bucket_table(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_tables: int = 8,
-    n_planes: int = 4,
-) -> DataFrame:
-    """(vec_id, tbl, bucket) — the persistable SRP index (the embedding
-    twin of dedup.band_table): write it out after each ingest so the
-    next increment probes buckets instead of re-sketching the corpus."""
-    tables = [make_hyperplanes(dim, n_planes, seed=42 + t) for t in range(n_tables)]
-    return _sketched(corpus, "c", tables, dim, id_col, vec_col).select(
-        F.col("c_id").alias(id_col), "tbl", "bucket"
-    )
-
-
-def incremental_embedding_neardups(
-    new_vecs: DataFrame,
-    existing_buckets: DataFrame,
-    all_vectors: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_tables: int = 8,
-    n_planes: int = 4,
-    round_dp: int = 4,
-) -> DataFrame:
-    """Near-dup pairs for an embedding INCREMENT: the new batch's
-    bucket rows probe the persisted index (old vectors are never
-    re-sketched; old-vs-old is never re-paired), plus a new-vs-new
-    self-join; exact cosine verifies candidates only. Candidates are
-    ALL bucket collisions (no per-query rank cut — the increment is
-    the bounded side, so the collision set stays proportional to it).
-
-    Returns (id_a, id_b, cosine_sim) with id_a < id_b, each pair
-    touching at least one new vector.
-    """
-    nb = srp_bucket_table(
-        new_vecs, id_col, vec_col, dim, n_tables, n_planes
-    ).transform(pin, eager=False)
-    probe = (
-        existing_buckets.alias("l")
-        .join(
-            nb.alias("r"),
-            (F.col("l.tbl") == F.col("r.tbl"))
-            & (F.col("l.bucket") == F.col("r.bucket")),
-        )
-        .select(
-            F.least(F.col(f"l.{id_col}"), F.col(f"r.{id_col}")).alias("id_a"),
-            F.greatest(F.col(f"l.{id_col}"), F.col(f"r.{id_col}")).alias("id_b"),
-        )
-        .filter(F.col("id_a") != F.col("id_b"))
-    )
-    new_new = (
-        nb.alias("l")
-        .join(
-            nb.alias("r"),
-            (F.col("l.tbl") == F.col("r.tbl"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-        )
-    )
-    cand = probe.unionByName(new_new).distinct()
-    va = all_vectors.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va")
-    )
-    vb = all_vectors.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb")
-    )
-    return (
-        cand.join(va, on="id_a")
-        .join(vb, on="id_b")
-        .withColumn("cosine_sim", dround(cosine(F.col("_va"), F.col("_vb")), round_dp))
-        .filter(F.col("cosine_sim") >= threshold)
-        .select("id_a", "id_b", "cosine_sim")
     )

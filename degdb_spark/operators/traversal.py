@@ -27,14 +27,17 @@ from pyspark.sql import functions as F
 from degdb_spark.plans.pattern import ArrayOp, compile_array_op
 from degdb_spark.persistence import lineage_cut
 
+#: k_hop cuts the frontier's lineage every this many hops.
+CHECKPOINT_EVERY = 5
+
 
 def chain_steps(
     store_df: DataFrame,
     steps: Sequence[ArrayOp | Mapping | Iterable[Mapping]],
-    deduplicate: bool = True,
 ) -> DataFrame:
-    """Execute a multi-step query; returns the triples matched by the FINAL
-    step, constrained hop-by-hop (ExecuteQuery's loop, core/query.go:14-28).
+    """Execute a multi-step query; returns the distinct triples matched by
+    the FINAL step, constrained hop-by-hop (ExecuteQuery's loop,
+    core/query.go:14-28). Raises ValueError on an empty ``steps``.
 
     Each element of ``steps`` is an ArrayOp (or pattern dict / list of
     pattern dicts, wrapped OR-mode as the HTTP layer does).
@@ -50,10 +53,9 @@ def chain_steps(
             frontier = current.select(F.col("obj").alias("subj")).distinct()
             matched = matched.join(frontier, on="subj", how="left_semi")
         current = matched
-    assert current is not None, "at least one step required"
-    if deduplicate:
-        current = current.dropDuplicates(["subj", "pred", "obj"])
-    return current
+    if current is None:
+        raise ValueError("at least one step required")
+    return current.dropDuplicates(["subj", "pred", "obj"])
 
 
 def k_hop(
@@ -61,12 +63,11 @@ def k_hop(
     start_subjects: DataFrame | Sequence[str],
     k: int,
     pred: str | None = None,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """All nodes reachable in exactly k hops along ``pred`` edges.
 
     Iterative frontier expansion; lineage is truncated with lineage_cut()
-    every ``checkpoint_every`` hops (risk §7.1 of SURVEY.md).
+    every ``CHECKPOINT_EVERY`` hops (risk §7.1 of SURVEY.md).
     """
     spark = store_df.sparkSession
     if not isinstance(start_subjects, DataFrame):
@@ -83,7 +84,7 @@ def k_hop(
             .select(F.col("obj").alias("subj"))
             .distinct()
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
+        if (i + 1) % CHECKPOINT_EVERY == 0:
             frontier = frontier.transform(lineage_cut, eager=True)
     return frontier.select(F.col("subj").alias("node"))
 

@@ -64,13 +64,21 @@ class ArrayOp:
 
     @staticmethod
     def from_dict(d: Mapping) -> "ArrayOp":
+        """Parse the JSON form (outside input); anything malformed raises
+        ValueError."""
+        if not isinstance(d, Mapping):
+            raise ValueError("an ArrayOp must be a JSON object")
         mode = str(d.get("mode", OR)).upper()
         if mode not in (AND, OR, NOT):
             raise ValueError(f"unknown ArrayOp mode: {mode!r}")
+        triples, arguments = d.get("triples", []), d.get("arguments", [])
+        for name, items in (("triples", triples), ("arguments", arguments)):
+            if not isinstance(items, list) or not all(isinstance(x, Mapping) for x in items):
+                raise ValueError(f"ArrayOp {name} must be a list of objects")
         return ArrayOp(
             mode=mode,
-            triples=list(d.get("triples", [])),
-            arguments=[ArrayOp.from_dict(a) for a in d.get("arguments", [])],
+            triples=list(triples),
+            arguments=[ArrayOp.from_dict(a) for a in arguments],
         )
 
 

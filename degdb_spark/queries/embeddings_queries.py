@@ -1082,9 +1082,8 @@ def pq_index_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     warehouse / regenerated testdata); emb_pq_index_build is the
     explicit build surface, so benches see build and query costs
     separately. Results are identical to emb_ivfpq_knn's inline
-    encode, so the oracle is the same SQL; the from-index == inline ==
-    incremental-refresh equalities are pytest-enforced
-    (tests/test_pq.py)."""
+    encode, so the oracle is the same SQL; the from-index == inline
+    equality is pytest-enforced (tests/test_pq.py)."""
     from degdb_spark.operators import pq as PQ
 
     table = _contract_index_table(sf_dir)

@@ -106,6 +106,17 @@ def test_query_array_op_json(db):
         ' "arguments": [{"mode": "NOT", "triples": [{"subj": "/m/0hume"}]}]}'
     )
     assert _spo(rows) == [("/m/02mjmr", "/type/object/type", "/people/person")]
+    for q in [
+        "[1]",  # not an object
+        '"x"',
+        "null",
+        '{"arguments": [1]}',  # arguments must be objects
+        '{"arguments": {"mode": "OR"}}',
+        '{"triples": [1]}',  # triples must be objects
+        '{"triples": "ab"}',  # not split into one-character patterns
+    ]:
+        with pytest.raises(ValueError):
+            db.query_array_op_json(q)
 
 
 # --- the node's read path runs no Spark job ---

@@ -394,53 +394,48 @@ def test_stress_and_rules_tolerate_empty_graph(spark, tmp_path):
 
 def test_basket_edges_index_matches_inline(spark, tmp_path):
     """The basket-edge contract index (operators/basket.py) serves the
-    EXACT inline _weighted_edges frame: build == inline, incremental
-    refresh == bigger inline, retraction == smaller inline — the
-    additive-partial-counts design, falsified on integer equality."""
+    EXACT inline _weighted_edges frame, read from the index alone (the
+    source lineitem is deleted before the read), and its unthresholded
+    pair view is the distinct co-purchase pair set."""
+    import shutil
+
     from degdb_spark.operators import basket as B
     from degdb_spark.operators.pq import drop_managed_table
     from degdb_spark.queries.graph_adv_queries import _weighted_edges_inline
 
     rows = [
         (o, p)
-        for o in range(40)
+        for o in range(25)
         for p in {o % 7, (o + 1) % 7, 50 + o % 3, 50 + (o + o // 5) % 3}
     ]
     li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
+    inline_dir = tmp_path / "inline"
+    inline_dir.mkdir()
+    li.write.parquet(str(inline_dir / "lineitem.parquet"))
+    want = {
+        (r.src, r.dst, r.w)
+        for r in _weighted_edges_inline(spark, str(inline_dir)).collect()
+    }
 
-    def inline_of(orders_pred):
-        d = tmp_path / f"d_{orders_pred.replace(' ', '')}"
-        d.mkdir()
-        li.filter(orders_pred).write.parquet(str(d / "lineitem.parquet"))
-        return {
-            (r.src, r.dst, r.w)
-            for r in _weighted_edges_inline(spark, str(d)).collect()
-        }
-
+    source = str(tmp_path / "li.parquet")
+    li.write.parquet(source)
     table = "test_basket_edges_eq"
     drop_managed_table(spark, table)
     try:
-        B.build_basket_edges_index(li.filter("l_orderkey < 25"), table)
+        B.build_basket_edges_index(spark.read.parquet(source), table)
+        shutil.rmtree(source)  # served edges must not need lineitem
         got = {(r.src, r.dst, r.w) for r in B.edges_from_index(spark, table).collect()}
-        assert got == inline_of("l_orderkey < 25")
-        # increment: orders 25..39 arrive — index == inline over all 40
-        B.refresh_basket_edges_index(li.filter("l_orderkey >= 25"), table)
-        got = {(r.src, r.dst, r.w) for r in B.edges_from_index(spark, table).collect()}
-        assert got == inline_of("l_orderkey < 40")
-        # retraction: orders 30..39 deleted — back to the 30-order graph
-        B.retract_basket_edges_index(li.filter("l_orderkey >= 30"), table)
-        got = {(r.src, r.dst, r.w) for r in B.edges_from_index(spark, table).collect()}
-        assert got == inline_of("l_orderkey < 30")
+        assert got == want
         # the UNTHRESHOLDED pair view (min_w=1) equals the distinct
-        # co-purchase pair set of the same survivors — one artifact
-        # serves both the analytics graph and coverage's edge set
+        # co-purchase pair set — one artifact serves both the analytics
+        # graph and coverage's edge set
         pairs = {
             (r.u, r.v) for r in B.pairs_from_index(spark, table, min_w=1).collect()
         }
         want_pairs = {
             (min(a, b), max(a, b))
-            for (o1, a) in [(r.l_orderkey, r.l_partkey) for r in li.filter("l_orderkey < 30").collect()]
-            for (o2, b) in [(r.l_orderkey, r.l_partkey) for r in li.filter("l_orderkey < 30").collect()]
+            for (o1, a) in rows
+            for (o2, b) in rows
             if o1 == o2 and a != b
         }
         assert pairs == want_pairs

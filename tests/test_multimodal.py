@@ -359,75 +359,6 @@ def test_gif_video_frames_match_rawv(spark):
     assert gif_feats == raw_feats
 
 
-def test_incremental_pairs_match_full_under_random_splits(spark):
-    """Definitional property of the incremental banded join: for
-    RANDOM corpora and RANDOM batch boundaries, the union of
-    sequential incremental emissions equals the full-corpus pair set
-    exactly, each pair exactly once."""
-    import numpy as np
-
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    @settings(
-        max_examples=6,
-        deadline=None,
-        suppress_health_check=[HealthCheck.function_scoped_fixture],
-    )
-    @given(st.randoms(use_true_random=False))
-    def prop(rnd):
-        rng = np.random.default_rng(rnd.randrange(2**31))
-        n = int(rng.integers(4, 10))
-        # random smooth images, some duplicated with a tiny nudge so
-        # real collisions exist
-        ramp = np.linspace(0, 255, 32)
-        base_imgs = []
-        for i in range(n):
-            g = np.clip(
-                np.round(np.add.outer(ramp, ramp * float(rng.uniform(0.3, 1.0))) / 2)
-                + float(rng.integers(0, 60)),
-                0,
-                255,
-            ).astype(np.uint8)
-            base_imgs.append(np.repeat(g[:, :, None], 3, axis=2))
-        hashes_rows = []
-        for mid in range(n):
-            src = base_imgs[mid if rng.random() < 0.5 else int(rng.integers(0, n))]
-            px = src.copy()
-            px[0, 0, 0] = (int(px[0, 0, 0]) + int(rng.integers(0, 3))) % 256
-            hashes_rows.append((mid, px))
-        media = spark.createDataFrame(
-            [
-                (mid, "image", bytearray(C.encode_png(px)), ("png", 32, 32, None, None))
-                for mid, px in hashes_rows
-            ],
-            schema=M.MEDIA_SCHEMA,
-        )
-        hashes = M.image_ahash(media).localCheckpoint(eager=True)
-        full = {
-            (r.id_a, r.id_b): (r.hamming, r.near_dup)
-            for r in M.banded_neardup_pairs(hashes).collect()
-        }
-        # random split into 1-3 sequential batches
-        cuts = sorted(rng.choice(range(n + 1), size=int(rng.integers(0, 3))).tolist())
-        bounds = [0, *cuts, n]
-        got = {}
-        emitted = 0
-        for k in range(len(bounds) - 1):
-            lo, hi = bounds[k], bounds[k + 1]
-            new = hashes.filter(
-                (F.col("media_id") >= lo) & (F.col("media_id") < hi)
-            )
-            old = hashes.filter(F.col("media_id") < lo)
-            rows = M.incremental_banded_neardup_pairs(new, old).collect()
-            emitted += len(rows)
-            got.update({(r.id_a, r.id_b): (r.hamming, r.near_dup) for r in rows})
-        assert got == full
-        assert emitted == len(full)  # exactly once across batches
-
-    prop()
-
-
 def test_telephony_wav_through_feature_path(spark):
     """mu-law and A-law WAV payloads flow through the strict feature
     path (sniffed as wav, expanded to int16 by the same decode seam) —
@@ -857,25 +788,6 @@ def test_shot_fingerprints_quarantine_bad_payload(spark):
     assert sum(1 for r in rows if r.media_id != 99) == 3 + 2  # scenes of clips 0,1
     with pytest.raises(Exception):
         M.video_shot_fingerprints(table, strict=True).collect()
-
-
-def test_incremental_shot_neardups_union_matches_full(spark):
-    """Streaming-increment contract: splitting the corpus into two
-    batches and unioning the per-batch emissions (new×new + new×old)
-    reproduces exactly the full-corpus shot_overlap_neardups result,
-    with no pair emitted twice."""
-    media = M.synthetic_shot_media(spark, 12)
-    shots = M.video_shot_fingerprints(media)
-    full = {tuple(r) for r in M.shot_overlap_neardups(shots).collect()}
-    first = shots.filter(F.col("media_id") < 6)
-    second = shots.filter(F.col("media_id") >= 6)
-    empty = spark.createDataFrame(
-        [], "media_id long, shot_idx int, n_frames int, b0 long, b1 long, b2 long, b3 long"
-    )
-    e1 = {tuple(r) for r in M.incremental_shot_neardups(first, empty).collect()}
-    e2 = {tuple(r) for r in M.incremental_shot_neardups(second, first).collect()}
-    assert e1 | e2 == full
-    assert not (e1 & e2)
 
 
 def test_shot_fingerprints_random_scene_structures(spark):

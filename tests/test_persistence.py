@@ -195,3 +195,22 @@ def test_frame_memo_is_bounded(spark):
     # oldest evicted, newest kept
     assert ("k", 0) not in memo
     assert ("k", dedup._FRAME_MEMO_MAX + 2) in memo
+
+
+def test_compact_pinned_folds_small_and_keeps_large(spark):
+    """compact_pinned (r13): a tiny materialized frame folds to
+    ceil(rows/target) partitions via narrow coalesce; a frame already
+    at/below that target keeps every partition (the no-op branch that
+    makes the helper scale-safe). Row content is untouched."""
+    from degdb_spark.operators.balance import compact_pinned
+    from degdb_spark.persistence import pin
+
+    small = pin(spark.range(1000).repartition(16), eager=True)
+    folded = compact_pinned(small, rows_per_partition=65536)
+    assert folded.rdd.getNumPartitions() == 1
+    assert folded.count() == 1000
+
+    # 3 partitions of ~troughly target-sized rows: want >= parts -> unchanged
+    big = pin(spark.range(10_000).repartition(3), eager=True)
+    kept = compact_pinned(big, rows_per_partition=4000)
+    assert kept.rdd.getNumPartitions() == 3

@@ -381,39 +381,6 @@ def test_ivf_lloyd_contract_query_no_python_udf(spark):
     assert "pythonUDF" not in plan
 
 
-def test_bucketed_join_no_exchange(spark, tmp_path):
-    """Fact-to-fact joins on the bucket key must plan with ZERO
-    exchanges — the write-once/join-many co-location contract
-    (operators/bucketed.py). Also asserts the result matches the
-    shuffled join."""
-    from degdb_spark.operators.bucketed import co_located_join, write_bucketed
-
-    li = spark.read.parquet(f"{SF}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    od = spark.read.parquet(f"{SF}/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
-    )
-    spark.sql("DROP TABLE IF EXISTS li_bktest")
-    spark.sql("DROP TABLE IF EXISTS od_bktest")
-    write_bucketed(li, "li_bktest", "l_orderkey", str(tmp_path / "li"), n_buckets=8)
-    write_bucketed(od, "od_bktest", "o_orderkey", str(tmp_path / "od"), n_buckets=8)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = co_located_join(spark, "li_bktest", "od_bktest", "l_orderkey", "o_orderkey")
-        plan = _plan(j)
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-        n_bucketed = j.count()
-        n_shuffled = li.join(od, li.l_orderkey == od.o_orderkey).count()
-        assert n_bucketed == n_shuffled
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS li_bktest")
-        spark.sql("DROP TABLE IF EXISTS od_bktest")
-
-
 def test_filtered_knn_predicate_pushed(spark):
     """Filtered ANN is PRE-filter: the label predicate must reach the
     parquet scan (PushedFilters), so the Q·N distance loop only ever

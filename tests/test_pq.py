@@ -98,59 +98,12 @@ def _drop_index_tables(spark, *tables):
             shutil.rmtree(os.path.join(wh, t + suffix), ignore_errors=True)
 
 
-def test_pq_index_incremental_refresh(spark):
-    """build on 80% + refresh with 20% == build on 100% == inline
-    encode: query results identical, and a replayed refresh (same
-    batch_id — the post-crash retry) converges instead of duplicating
-    codes."""
-    from degdb_spark.queries.embeddings_queries import (
-        _IVF_CENTROIDS,
-        _IVF_N_PROBE,
-        _PQ_CODEBOOK,
-    )
-
-    _drop_index_tables(spark, "pq_inc_test", "pq_full_test")
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cut = 160
-    old = emb.filter(F.col("vec_id") < cut)
-    new = emb.filter(F.col("vec_id") >= cut)
-    queries = emb.filter(F.col("vec_id") < 5)
-
-    PQ.build_pq_index(old, "pq_inc_test", _IVF_CENTROIDS, _PQ_CODEBOOK)
-    PQ.refresh_pq_index(new, "pq_inc_test", _IVF_CENTROIDS, _PQ_CODEBOOK)
-    PQ.build_pq_index(emb, "pq_full_test", _IVF_CENTROIDS, _PQ_CODEBOOK)
-
-    kw = dict(k=5, n_probe=_IVF_N_PROBE, rerank=20)
-    direct = PQ.ivf_pq_topk(emb, queries, _IVF_CENTROIDS, _PQ_CODEBOOK, **kw)
-    inc = PQ.ivf_pq_topk_from_index(
-        spark, "pq_inc_test", emb, queries, _IVF_CENTROIDS, _PQ_CODEBOOK, **kw
-    )
-    full = PQ.ivf_pq_topk_from_index(
-        spark, "pq_full_test", emb, queries, _IVF_CENTROIDS, _PQ_CODEBOOK, **kw
-    )
-    key = lambda df: sorted(tuple(r) for r in df.collect())
-    want = key(direct)
-    assert key(inc) == want and key(full) == want and len(want) > 0
-
-    # replay the increment with its own batch id: state must not change
-    n_rows = spark.table("pq_inc_test").count()
-    replay_id = spark.table("pq_inc_test").agg(F.max("_batch")).first()[0]
-    PQ.refresh_pq_index(
-        new, "pq_inc_test", _IVF_CENTROIDS, _PQ_CODEBOOK, batch_id=replay_id
-    )
-    assert spark.table("pq_inc_test").count() == n_rows
-    again = PQ.ivf_pq_topk_from_index(
-        spark, "pq_inc_test", emb, queries, _IVF_CENTROIDS, _PQ_CODEBOOK, **kw
-    )
-    assert key(again) == want
-    _drop_index_tables(spark, "pq_inc_test", "pq_full_test")
-
-
 def test_pq_index_query_never_reencodes_corpus(spark):
-    """The from-index query plan touches the raw corpus at most once —
-    the top-rerank exact-cosine fetch — never for encoding: the ADC
-    phase starts at the persisted code table (cell is a partition
-    column, so the probe join can prune partitions)."""
+    """The from-index query equals the inline-encode ivf_pq_topk, and
+    its plan touches the raw corpus at most once — the top-rerank
+    exact-cosine fetch — never for encoding: the ADC phase starts at
+    the persisted code table (cell is a partition column, so the probe
+    join can prune partitions)."""
     import contextlib
     import io
 
@@ -169,10 +122,14 @@ def test_pq_index_query_never_reencodes_corpus(spark):
         [Row(vec_id=r.vec_id, embedding=r.embedding) for r in
          emb.filter(F.col("vec_id") < 3).collect()]
     )
+    kw = dict(k=5, n_probe=_IVF_N_PROBE, rerank=20)
     df = PQ.ivf_pq_topk_from_index(
-        spark, "pq_plan_test", emb, queries, _IVF_CENTROIDS, _PQ_CODEBOOK,
-        k=5, n_probe=_IVF_N_PROBE, rerank=20,
+        spark, "pq_plan_test", emb, queries, _IVF_CENTROIDS, _PQ_CODEBOOK, **kw
     )
+    direct = PQ.ivf_pq_topk(emb, queries, _IVF_CENTROIDS, _PQ_CODEBOOK, **kw)
+    key = lambda d: sorted(tuple(r) for r in d.collect())
+    want = key(direct)
+    assert key(df) == want and len(want) > 0
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")

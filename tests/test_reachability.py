@@ -3,11 +3,8 @@
 A static import walk over the AST (every ``import``/``from … import``,
 including function-local ones) starts from ``__spark_entry__``, the
 benchmark harnesses, the tools and the node's public modules. A package
-module the walk never reaches is code that only its own tests run.
-
-``PENDING_DELETION`` names the unreached modules that are still kept,
-with their tests, until they are deleted. It may only shrink: an entry
-that the walk reaches, or whose file is gone, fails the test too.
+module the walk never reaches is code that only its own tests run, and
+fails the test.
 """
 
 from __future__ import annotations
@@ -29,18 +26,6 @@ ENTRY_MODULES = (
     "degdb_spark.operators.bloom",
 )
 ENTRY_DIRS = ("tools", "perfbench")
-
-PENDING_DELETION = frozenset(
-    {
-        "degdb_spark.functions.skew",
-        "degdb_spark.operators.bucketed",
-        "degdb_spark.operators.layout",
-        "degdb_spark.operators.merge",
-        "degdb_spark.sources.documents",
-        "degdb_spark.streaming",
-        "degdb_spark.streaming.ingest",
-    }
-)
 
 
 def _module_file(name: str) -> Path | None:
@@ -91,6 +76,4 @@ def test_every_package_module_is_reached_from_an_entry_point():
         ".".join(p.relative_to(ROOT).with_suffix("").parts).removesuffix(".__init__")
         for p in (ROOT / "degdb_spark").rglob("*.py")
     }
-    unreached = package - reached_modules()
-    assert unreached - PENDING_DELETION == set()
-    assert PENDING_DELETION - unreached == set()
+    assert package - reached_modules() == set()

@@ -1,15 +1,11 @@
-"""Sampling/split determinism + salted-join equivalence + streaming
-triple ingestion."""
+"""Sampling/split determinism."""
 
 from __future__ import annotations
 
-import json
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
-from degdb_spark.functions.skew import salted_join
 from degdb_spark.operators.sampling import (
     deterministic_sample,
     stratified_counts,
@@ -46,62 +42,6 @@ def test_stratified_counts_on_docs(spark):
         per_lang.setdefault(r.lang, {})[r.split] = r.n
     total = sum(sum(v.values()) for v in per_lang.values())
     assert total == docs.count()
-
-
-def test_salted_join_matches_plain(spark):
-    # skewed probe: 80% of rows share one key
-    probe = spark.range(0, 4000).select(
-        F.when(F.col("id") % 5 != 0, F.lit(7)).otherwise(F.col("id") % 50).alias("k"),
-        F.col("id").alias("v"),
-    )
-    build = spark.range(0, 50).select(
-        F.col("id").alias("k"), (F.col("id") * 100).alias("w")
-    )
-    plain = probe.join(build, on="k").select("k", "v", "w")
-    salted = salted_join(probe, build, "k", salt=8, tiebreak_col="v").select("k", "v", "w")
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_streaming_triple_ingest(spark, tmp_path):
-    from degdb_spark.operators.triplestore import TripleStore
-    from degdb_spark.streaming.ingest import ingest_stream, stream_triples_jsonl
-
-    src = tmp_path / "in"
-    src.mkdir()
-    store = str(tmp_path / "store")
-    ck = str(tmp_path / "ck")
-
-    def write_batch(name, rows):
-        with open(src / name, "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-
-    write_batch("b1.jsonl", [
-        {"subj": "a", "pred": "p", "obj": "1"},
-        {"subj": "a", "pred": "p", "obj": "1"},  # in-batch dup
-        {"subj": "b", "pred": "p", "obj": "2"},
-    ])
-    q = ingest_stream(stream_triples_jsonl(spark, str(src)), store, ck, signing_key=b"k")
-    q.awaitTermination()
-    df1 = spark.read.parquet(store)
-    assert df1.count() == 2
-
-    # second file re-delivers an existing triple + one new one (the
-    # reference's gossip re-delivery case — must stay idempotent)
-    write_batch("b2.jsonl", [
-        {"subj": "a", "pred": "p", "obj": "1"},
-        {"subj": "c", "pred": "p", "obj": "3"},
-    ])
-    q = ingest_stream(stream_triples_jsonl(spark, str(src)), store, ck, signing_key=b"k")
-    q.awaitTermination()
-    df2 = spark.read.parquet(store)
-    assert df2.count() == 3
-    assert {r.subj for r in df2.collect()} == {"a", "b", "c"}
-    # signed on the way in
-    assert all(r.author.startswith("degdb:author_") for r in df2.collect())
-    # and queryable through the TripleStore surface
-    ts = TripleStore(spark, df=spark.read.parquet(store))
-    assert ts.query({"subj": "a"}).count() == 1
 
 
 def test_weighted_sample_prefers_heavy_rows(spark):

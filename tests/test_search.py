@@ -76,153 +76,6 @@ def test_phrase_count(spark):
     assert out == {1: 2, 2: 0, 3: 0, 4: 0, 5: 0}
 
 
-def test_bm25_from_index_equals_direct(spark, tmp_path):
-    """Query-from-materialized-index == query-from-corpus, and the
-    index plan never touches the documents scan (no tokenize/explode)."""
-    from degdb_spark.operators.search import (
-        bm25_topk,
-        bm25_topk_from_index,
-        build_postings_index,
-    )
-
-    import shutil
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for t in ("bm25_idx_test", "bm25_idx_test_stats"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
-    build_postings_index(docs, "bm25_idx_test")
-    terms = ["dup", "spark", "the"]
-    direct = bm25_topk(docs, terms, k=10).collect()
-    indexed = bm25_topk_from_index(spark, "bm25_idx_test", terms, k=10).collect()
-    assert [tuple(r) for r in direct] == [tuple(r) for r in indexed]
-    # plan: no Generate (explode) and the term filter reaches the scan
-    import contextlib, io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        bm25_topk_from_index(spark, "bm25_idx_test", terms, k=10).explain("formatted")
-    plan = buf.getvalue()
-    assert "documents.parquet" not in plan  # corpus never rescanned
-    # the term filter reaches the postings-table scan
-    pushed = [l for l in plan.splitlines() if "PushedFilters" in l and "token" in l]
-    assert pushed, plan
-    # no tokenizer in the plan: the only Generate is the k-row rank
-    # posexplode, never a corpus-wide token explode (the split regex
-    # marks the tokenizer)
-    assert "split(" not in plan.lower()
-    spark.sql("DROP TABLE IF EXISTS bm25_idx_test")
-    spark.sql("DROP TABLE IF EXISTS bm25_idx_test_stats")
-
-
-def test_postings_index_incremental_refresh(spark, tmp_path):
-    """Build on 80% + refresh with 20% == build on 100%: query results
-    identical, historical text never re-read."""
-    import shutil
-
-    from degdb_spark.operators.search import (
-        bm25_topk_from_index,
-        build_postings_index,
-        refresh_postings_index,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for t in ("bm25_inc_test", "bm25_inc_test_stats", "bm25_inc_test_stats_new",
-              "bm25_full_test", "bm25_full_test_stats"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
-    old = docs.filter(F.col("doc_id") < 160)
-    new = docs.filter(F.col("doc_id") >= 160)
-    build_postings_index(old, "bm25_inc_test")
-    refresh_postings_index(new, "bm25_inc_test")
-    build_postings_index(docs, "bm25_full_test")
-    terms = ["dup", "spark", "the"]
-    inc = bm25_topk_from_index(spark, "bm25_inc_test", terms, k=10).collect()
-    full = bm25_topk_from_index(spark, "bm25_full_test", terms, k=10).collect()
-    assert [tuple(r) for r in inc] == [tuple(r) for r in full] and len(full) > 0
-    # stats rolled forward exactly (per-batch rows, summed at read)
-    from degdb_spark.operators.search import index_corpus_stats
-
-    s_inc = index_corpus_stats(spark, "bm25_inc_test").collect()[0]
-    s_full = index_corpus_stats(spark, "bm25_full_test").collect()[0]
-    assert (s_inc["_n_docs"], s_inc["_total_dl"]) == (
-        s_full["_n_docs"], s_full["_total_dl"]
-    )
-    # replay idempotency: re-running the increment with its batch id
-    # (what Structured Streaming does after a mid-step crash) overwrites
-    # the batch partition instead of double-appending — results and
-    # stats are unchanged
-    replay_id = spark.table("bm25_inc_test").agg(F.max("_batch")).first()[0]
-    refresh_postings_index(new, "bm25_inc_test", batch_id=replay_id)
-    again = bm25_topk_from_index(spark, "bm25_inc_test", terms, k=10).collect()
-    assert [tuple(r) for r in again] == [tuple(r) for r in full]
-    s_again = index_corpus_stats(spark, "bm25_inc_test").collect()[0]
-    assert (s_again["_n_docs"], s_again["_total_dl"]) == (
-        s_full["_n_docs"], s_full["_total_dl"]
-    )
-    for t in ("bm25_inc_test", "bm25_inc_test_stats",
-              "bm25_full_test", "bm25_full_test_stats"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_postings_refresh_crash_between_postings_and_stats(spark, tmp_path):
-    """Crash window between the postings insert and the stats insert:
-    the retry re-overwrites both partitions with identical rows, so
-    index and stats converge to the clean state (the r4 ADVICE failure
-    mode — double-appended postings, double-counted stats — cannot
-    happen)."""
-    import shutil
-
-    from degdb_spark.operators.search import (
-        bm25_topk_from_index,
-        build_postings_index,
-        index_corpus_stats,
-        postings,
-        refresh_postings_index,
-    )
-
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for t in ("bm25_crash_idx", "bm25_crash_idx_stats",
-              "bm25_clean_idx", "bm25_clean_idx_stats"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    old = docs.filter(F.col("doc_id") < 150)
-    new = docs.filter(F.col("doc_id") >= 150)
-
-    build_postings_index(old, "bm25_clean_idx", batch_id=0)
-    refresh_postings_index(new, "bm25_clean_idx", batch_id=1)
-    terms = ["dup", "spark", "the"]
-    want = [tuple(r) for r in
-            bm25_topk_from_index(spark, "bm25_clean_idx", terms, k=10).collect()]
-
-    build_postings_index(old, "bm25_crash_idx", batch_id=0)
-    # simulate the crash: batch 1's postings landed, stats did not
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (postings(new).withColumn("_batch", F.lit(1))
-         .select("doc_id", "token", "tf", "dl", "_batch")
-         .write.mode("overwrite").insertInto("bm25_crash_idx"))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    # retry the whole refresh for batch 1
-    refresh_postings_index(new, "bm25_crash_idx", batch_id=1)
-    got = [tuple(r) for r in
-           bm25_topk_from_index(spark, "bm25_crash_idx", terms, k=10).collect()]
-    assert got == want and len(want) > 0
-    s_got = index_corpus_stats(spark, "bm25_crash_idx").collect()[0]
-    s_want = index_corpus_stats(spark, "bm25_clean_idx").collect()[0]
-    assert (s_got["_n_docs"], s_got["_total_dl"]) == (
-        s_want["_n_docs"], s_want["_total_dl"]
-    )
-    for t in ("bm25_crash_idx", "bm25_crash_idx_stats",
-              "bm25_clean_idx", "bm25_clean_idx_stats"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
 def _drop(spark, *tables):
     import shutil
 
@@ -293,35 +146,6 @@ def test_positional_index_phrase_and_proximity_parity(spark):
     assert pushed, plan
     assert "split(" not in plan.lower()  # no tokenizer anywhere
     _drop(spark, "pos_idx_test")
-
-
-def test_positional_index_refresh_and_replay(spark):
-    """Build on 80% + refresh 20% == full build; replaying the same
-    batch_id converges instead of double-appending positions."""
-    from degdb_spark.operators.search import (
-        build_positional_index,
-        phrase_topk_from_index,
-        refresh_positional_index,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    _drop(spark, "pos_inc_test", "pos_full_test")
-    old = docs.filter(F.col("doc_id") < 160)
-    new = docs.filter(F.col("doc_id") >= 160)
-    build_positional_index(old, "pos_inc_test")
-    refresh_positional_index(new, "pos_inc_test")
-    build_positional_index(docs, "pos_full_test")
-    phrase = ["hash", "join"]
-    full = phrase_topk_from_index(spark, "pos_full_test", phrase, k=25).collect()
-    inc = phrase_topk_from_index(spark, "pos_inc_test", phrase, k=25).collect()
-    assert [tuple(r) for r in inc] == [tuple(r) for r in full] and len(full) > 0
-    replay_id = spark.table("pos_inc_test").agg(F.max("_batch")).first()[0]
-    refresh_positional_index(new, "pos_inc_test", batch_id=replay_id)
-    again = phrase_topk_from_index(spark, "pos_inc_test", phrase, k=25).collect()
-    assert [tuple(r) for r in again] == [tuple(r) for r in full]
-    n_rows = spark.table("pos_inc_test").count()
-    assert n_rows == spark.table("pos_full_test").count()
-    _drop(spark, "pos_inc_test", "pos_full_test")
 
 
 def test_positional_index_position_numbering_matches_tokenizer(spark):

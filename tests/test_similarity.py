@@ -77,56 +77,6 @@ def test_ivf_recall_on_testdata(spark):
     assert recall >= 0.4, f"IVF recall too low: {recall}"
 
 
-def test_incremental_embedding_neardups_matches_full_collisions(spark):
-    """Incremental pairs == all-bucket-collision pairs of the full
-    corpus, restricted to pairs touching a new vector."""
-    from pyspark.sql import functions as F
-
-    from degdb_spark.operators.similarity import (
-        incremental_embedding_neardups,
-        srp_bucket_table,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    split = 60
-    old = emb.filter(F.col("vec_id") < split)
-    new = emb.filter(F.col("vec_id") >= split)
-    got = {
-        (r.id_a, r.id_b)
-        for r in incremental_embedding_neardups(
-            new, srp_bucket_table(old), emb, threshold=0.2
-        ).collect()
-    }
-    # ground truth: full bucket-collision candidates + cosine, restricted
-    full_b = srp_bucket_table(emb)
-    pairs = (
-        full_b.alias("l")
-        .join(
-            full_b.alias("r"),
-            (F.col("l.tbl") == F.col("r.tbl"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.vec_id") < F.col("r.vec_id")),
-        )
-        .select(F.col("l.vec_id").alias("id_a"), F.col("r.vec_id").alias("id_b"))
-        .distinct()
-    )
-    from degdb_spark.operators.similarity import cosine
-    from degdb_spark.queries.rounding import dround
-
-    va = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"))
-    vb = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("_vb"))
-    want = {
-        (r.id_a, r.id_b)
-        for r in pairs.join(va, on="id_a").join(vb, on="id_b")
-        .withColumn("c", dround(cosine(F.col("_va"), F.col("_vb")), 4))
-        .filter(F.col("c") >= 0.2)
-        .collect()
-        if r.id_a >= split or r.id_b >= split
-    }
-    assert got == want
-    assert all(a >= split or b >= split for a, b in got)
-
-
 def test_lloyd_centroids_deterministic_and_empty_cells_keep_init(spark):
     """Seeded Lloyd: (a) two runs over differently-partitioned input
     give bit-identical centroids (decimal-sum means are order-
@@ -172,49 +122,6 @@ def test_semantic_dedup_keeps_farthest_from_centroid(spark):
         ).collect()
     }
     assert got == {(0, 3, 1, 2), (1, 1, 0, 1)}
-
-
-def test_incremental_semantic_dedup_equals_full(spark):
-    """Sequential SemDeDup increments over a pinned quantizer must
-    union to exactly the full-corpus drop-pair set: each batch assigns
-    only itself, probes the persisted (vec_id, cell, csim) index, and
-    never re-pairs old-vs-old — yet nothing is missed and nothing is
-    emitted twice (pair decisions are pure functions of the two rows,
-    so batch boundaries can't change them)."""
-    from degdb_spark.operators.ml_lsh import (
-        _semantic_assigned,
-        incremental_semantic_dedup,
-        lloyd_centroids,
-        semantic_cell_table,
-        semantic_drop_pairs,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    init_rows = (
-        emb.filter(F.col("vec_id") < 10).orderBy("vec_id")
-        .select(F.col("embedding").cast("array<double>").alias("v")).collect()
-    )
-    cents = lloyd_centroids(emb, [list(r["v"]) for r in init_rows], n_rounds=2)
-    tau = 0.35
-
-    full = {
-        (r.drop_id, r.keep_id, r.pair_sim)
-        for r in semantic_drop_pairs(
-            _semantic_assigned(emb, cents).localCheckpoint(), tau
-        ).collect()
-    }
-    assert full, "corpus/threshold must produce a non-trivial pair set"
-
-    index = spark.createDataFrame([], "vec_id: long, cell: int, csim: double")
-    emitted: list[tuple] = []
-    for i in range(3):
-        batch = emb.filter(F.col("vec_id") % 3 == i)
-        inc = incremental_semantic_dedup(batch, index, emb, cents, tau).collect()
-        emitted.extend((r.drop_id, r.keep_id, r.pair_sim) for r in inc)
-        index = index.unionByName(semantic_cell_table(batch, cents)).localCheckpoint()
-
-    assert len(emitted) == len(set(emitted)), "no pair emitted twice"
-    assert set(emitted) == full
 
 
 def test_semantic_dedup_clustered_corpus_keeps_one_per_cluster(spark):
@@ -871,21 +778,17 @@ def test_graph_knn_recall_beats_ivf_at_matched_budget(spark):
 
 
 def test_graph_index_lifecycle_serve_refresh(spark):
-    """Lifecycle #16: (a) the from-index walk equals the in-plan walk
-    on a fresh single-batch build; (b) refresh inserts new vectors
-    whose persisted neighbor lists are high-quality (each new
-    cluster-member vector links into its own cluster) with historical
-    vectors never re-read in bulk (search-then-link)."""
+    """The persisted k-NN graph index serves the same walk as the
+    in-plan graph: the from-index walk equals the in-plan walk on a
+    fresh build."""
     from pyspark.sql import functions as F
 
     from degdb_spark.operators.knngraph import (
-        adjacency_from_index,
         build_knn_graph_index,
         graph_index_knn,
         graph_knn_search,
         knn_graph_descent,
         navigable_adjacency,
-        refresh_knn_graph_index,
     )
     from degdb_spark.operators.pq import drop_managed_table
 
@@ -916,43 +819,6 @@ def test_graph_index_lifecycle_serve_refresh(spark):
             ).collect()
         )
         assert served == inplan
-
-        # refresh: 6 new vectors, each a copy-with-noise of an existing
-        # cluster member — their persisted lists must hit that cluster
-        import numpy as np
-
-        rng = np.random.default_rng(4)
-        new_rows = []
-        anchors = [3, 77, 141, 260, 333, 481]
-        for j, a in enumerate(anchors):
-            new_rows.append(
-                (n + j, [float(x) for x in V[a] + 0.02 * rng.normal(size=V.shape[1])])
-            )
-        new_emb = spark.createDataFrame(
-            new_rows, "vec_id long, embedding array<double>"
-        )
-        refresh_knn_graph_index(new_emb, table, k=8, beam=8, hops=3)
-        idx = spark.table(table)
-        assert sorted(
-            r["_batch"] for r in idx.select("_batch").distinct().collect()
-        ) == [0, 1]
-        lists = {
-            r["id"]: r["nbrs"]
-            for r in idx.filter(F.col("_batch") == 1)
-            .groupBy("id")
-            .agg(F.collect_set("neighbor_id").alias("nbrs"))
-            .collect()
-        }
-        assert set(lists) == {n + j for j in range(len(anchors))}
-        for j, a in enumerate(anchors):
-            assert a in lists[n + j], f"new vec {n+j} missed its anchor {a}"
-            assert len(lists[n + j]) == 8
-        # the new ids are now searchable
-        post = graph_index_knn(
-            spark, table,
-            new_emb.filter(F.col("vec_id") == n), k=5, beam=8, hops=3, k_long=8,
-        ).collect()
-        assert [r.neighbor_id for r in post][0] == anchors[0]
     finally:
         for t in (table, f"{table}_vectors"):
             drop_managed_table(spark, t)

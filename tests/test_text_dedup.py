@@ -534,44 +534,6 @@ def test_minhash_band_hashes_match_python_oracle(spark, token_lists):
 
 
 @settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(random_corpora(), st.integers(min_value=1, max_value=3))
-def test_incremental_span_dedup_random_splits_equal_batch(spark, texts, n_batches):
-    """Doc-ordered batches of ANY size through the incremental span
-    path (probe the hash index, dedup within the increment, extend the
-    index) must reproduce the one-shot batch operator bit-for-bit —
-    the replay contract under arbitrary batch boundaries, on random
-    dense-collision corpora."""
-    import degdb_spark.operators.dedup as D
-
-    k = 3
-    docs = [(i, t) for i, t in enumerate(texts)]
-    full = spark.createDataFrame(docs, "doc_id long, text string")
-    want = {
-        r.doc_id: (r.n_spans, r.n_kept, r.text_clean)
-        for r in D.span_dedup(full, span_tokens=k).collect()
-    }
-
-    existing = spark.createDataFrame([], "span_h1 long, span_h2 long")
-    got = {}
-    per = max(1, (len(docs) + n_batches - 1) // n_batches)
-    for b in range(0, len(docs), per):
-        batch = spark.createDataFrame(docs[b : b + per], "doc_id long, text string")
-        report, fresh = D.incremental_span_dedup(
-            batch, existing, span_tokens=k
-        )
-        got.update(
-            (r.doc_id, (r.n_spans, r.n_kept, r.text_clean))
-            for r in report.collect()
-        )
-        existing = existing.unionByName(fresh.select("span_h1", "span_h2")).distinct()
-    assert got == want
-
-
-@settings(
     max_examples=10,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
@@ -1085,44 +1047,6 @@ def test_substring_dedup_matches_python_oracle(spark, texts):
 
 
 @settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(random_corpora(), st.integers(min_value=1, max_value=3))
-def test_incremental_substring_dedup_random_splits_equal_batch(spark, texts, n_batches):
-    """Doc-ordered batches of ANY size through the incremental window
-    path (probe the hash index, first-occurrence within the increment,
-    extend the index) reproduce the one-shot operator bit-for-bit."""
-    import degdb_spark.operators.dedup as D
-
-    L = 3
-    docs = [(i, t) for i, t in enumerate(texts)]
-    full = spark.createDataFrame(docs, "doc_id long, text string")
-    want = {
-        r.doc_id: (r.n_tokens, r.n_removed, r.text_clean)
-        for r in D.substring_dedup(full, min_tokens=L).collect()
-    }
-
-    existing = spark.createDataFrame([], "win_h1 long, win_h2 long")
-    got = {}
-    per = max(1, (len(docs) + n_batches - 1) // n_batches)
-    for b in range(0, len(docs), per):
-        batch = spark.createDataFrame(docs[b : b + per], "doc_id long, text string")
-        report, fresh = D.incremental_substring_dedup(
-            batch, existing, min_tokens=L
-        )
-        got.update(
-            (r.doc_id, (r.n_tokens, r.n_removed, r.text_clean))
-            for r in report.collect()
-        )
-        existing = existing.unionByName(
-            fresh.select("win_h1", "win_h2")
-        ).distinct()
-    assert got == want
-
-
-@settings(
     max_examples=10,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
@@ -1290,43 +1214,6 @@ def test_paragraph_dedup_matches_python_reference(spark):
     assert got[1][1] == 1               # case variant of the banner dropped
     assert got[2][0] == 3               # blank paragraphs never counted
     assert got[5] == (0, 0, "")
-
-
-def test_incremental_paragraph_dedup_batches_equal_full(spark):
-    """Doc-ordered batches through the incremental paragraph path
-    (probe the normalized-fingerprint index, dedup within the
-    increment, extend the index) reproduce the one-shot
-    paragraph_dedup bit-for-bit — including a case-variant banner
-    whose FIRST occurrence sits in an earlier batch (normalization
-    must hold across the index boundary)."""
-    import degdb_spark.operators.dedup as D
-
-    banner = "Accept our cookies to continue."
-    docs = [
-        (0, f"alpha one\n{banner}\ntail zero"),
-        (1, "beta body\nbeta extra"),
-        (2, f"{banner.upper()}\ngamma text"),       # banner variant, batch 2
-        (3, "alpha one\ndelta closes"),              # p0 dup of doc 0's p0
-        (4, banner),                                 # fully duplicated
-        (5, "epsilon solo"),
-    ]
-    full = spark.createDataFrame(docs, "doc_id long, text string")
-    want = {
-        r.doc_id: (r.n_paras, r.n_kept, r.text_clean)
-        for r in D.paragraph_dedup(full).collect()
-    }
-    existing = spark.createDataFrame([], "span_h1 long, span_h2 long")
-    got = {}
-    for b in range(0, len(docs), 2):
-        batch = spark.createDataFrame(docs[b : b + 2], "doc_id long, text string")
-        report, fresh = D.incremental_paragraph_dedup(batch, existing)
-        got.update(
-            (r.doc_id, (r.n_paras, r.n_kept, r.text_clean))
-            for r in report.collect()
-        )
-        existing = existing.unionByName(fresh).distinct()
-    assert got == want
-    assert got[2][1] == 1 and got[4] == (1, 0, "")
 
 
 def test_fuzzy_contamination_catches_edited_benchmark_copy(spark):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from degdb_spark.operators.triplestore import TripleStore
 from degdb_spark.operators.traversal import chain_steps, k_hop
 
@@ -43,6 +45,13 @@ def test_chain_result_deduplicated(spark):
     store = _graph_store(spark)
     out = chain_steps(store.df, [{"subj": "b"}, {}, {"subj": "e"}])
     assert spo(out) == [("e", "knows", "a")]
+
+
+def test_chain_steps_rejects_no_steps(spark):
+    # a ValueError, not an assert (which `python -O` strips)
+    store = _graph_store(spark)
+    with pytest.raises(ValueError, match="at least one step"):
+        chain_steps(store.df, [])
 
 
 def test_k_hop(spark):
