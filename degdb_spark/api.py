@@ -13,9 +13,12 @@ workflow maps 1:1:
 
 Inserts, pattern reads, ``triples()`` and ``info()`` run in-process
 over the store's driver-resident Arrow table, with no Spark job: a JSON
-batch is parsed, signed and deduplicated in Arrow. Only ``insert`` of a
-DataFrame (a bulk load) runs one job, to materialise it; path queries
-are Spark joins over the store's Spark view.
+batch is parsed and signed in Arrow and deduplicated against the
+store's key index, at a cost that grows with the batch, not the store.
+Only ``insert`` of a DataFrame (a bulk load) runs one job, to
+materialise it, and ``DegDB(path=…)`` seeds the store with
+``pyarrow.parquet``; path queries are Spark joins over the store's
+Spark view.
 
 Differences by design: signing is opt-in (pass a key) because Spark jobs
 are trusted-perimeter; gossip/keyspace routing is replaced by Spark's own

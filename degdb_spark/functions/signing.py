@@ -8,7 +8,7 @@ fingerprint; signatures are non-deterministic per signing, so its own
 tests strip them before comparison (core/query_test.go:64-72) — ours do
 the same.
 
-Implementation: one per-row signer (``signature``), run in-process over
+Implementation: one per-row signer (``signer``), run in-process over
 an Arrow table for node inserts and inside a vectorized pandas UDF for
 DataFrames (the ``triple_signature_parity`` registry query is the one
 DataFrame caller). The signer is HMAC-SHA256 (same shape as the reference's:
@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import hashlib
 import hmac
+from typing import Callable
 
 import pandas as pd
 import pyarrow as pa
@@ -36,7 +37,7 @@ def fingerprint(subj: str, pred: str, obj: str, algo: str = "sha1") -> bytes:
     reference's digest; 'sha256' is the portable profile (DuckDB has no
     sha1, so cross-engine signature replay uses sha256)."""
     payload = "\t".join([subj or "", pred or "", obj or ""]).encode()
-    return hashlib.new(algo, payload).digest()
+    return (hashlib.sha1(payload) if algo == "sha1" else hashlib.new(algo, payload)).digest()
 
 
 def author_id(key: bytes) -> str:
@@ -67,14 +68,23 @@ def hex_hmac_sha256(key: bytes, msg_hex: str) -> str:
     return hashlib.sha256((opad + inner).encode()).hexdigest()
 
 
-def signature(key: bytes, subj: str | None, pred: str | None, obj: str | None, fp_algo: str = "sha1") -> str:
-    """Hex signature of one triple — the one per-row signer behind every
-    signing and verifying path. 'sha256-hex' is the portable hex-domain
-    profile (``hex_hmac_sha256`` over the sha256 fingerprint's hex); any
-    other ``fp_algo`` is HMAC-SHA256 over that fingerprint's bytes."""
+def signer(key: bytes, fp_algo: str = "sha1") -> Callable[[str | None, str | None, str | None], str]:
+    """The hex signature of one triple, as a function of its fields — the
+    one per-row signer behind every signing and verifying path.
+    'sha256-hex' is the portable hex-domain profile (``hex_hmac_sha256``
+    over the sha256 fingerprint's hex); any other ``fp_algo`` is
+    HMAC-SHA256 over that fingerprint's bytes. The HMAC key schedule runs
+    once, here; each row signs with a copy of it."""
     if fp_algo == "sha256-hex":
-        return hex_hmac_sha256(key, fingerprint(subj, pred, obj, "sha256").hex())
-    return hmac.new(key, fingerprint(subj, pred, obj, fp_algo), hashlib.sha256).hexdigest()
+        return lambda s, p, o: hex_hmac_sha256(key, fingerprint(s, p, o, "sha256").hex())
+    keyed = hmac.new(key, digestmod=hashlib.sha256)
+
+    def sign(s: str | None, p: str | None, o: str | None) -> str:
+        mac = keyed.copy()
+        mac.update(fingerprint(s, p, o, fp_algo))
+        return mac.hexdigest()
+
+    return sign
 
 
 def sign_triples(rows: DataFrame | pa.Table, key: bytes, fp_algo: str = "sha1") -> DataFrame | pa.Table:
@@ -90,8 +100,9 @@ def sign_triples(rows: DataFrame | pa.Table, key: bytes, fp_algo: str = "sha1") 
     author = author_id(key)
     if isinstance(rows, pa.Table):
         table = conform_triples(rows)
-        subj, pred, obj = (table[c].to_pylist() for c in ("subj", "pred", "obj"))
-        sigs = [signature(key, s, p, o, fp_algo) for s, p, o in zip(subj, pred, obj)]
+        sign = signer(key, fp_algo)
+        subj, pred, obj = (table[c].to_numpy(zero_copy_only=False) for c in ("subj", "pred", "obj"))
+        sigs = list(map(sign, subj, pred, obj))
         for name, values in (("author", [author] * table.num_rows), ("sig", sigs)):
             field = ARROW_SCHEMA.field(name)
             table = table.set_column(ARROW_SCHEMA.get_field_index(name), field, pa.array(values, field.type))
@@ -99,7 +110,7 @@ def sign_triples(rows: DataFrame | pa.Table, key: bytes, fp_algo: str = "sha1") 
 
     @F.pandas_udf("string")
     def _sig(subj: pd.Series, pred: pd.Series, obj: pd.Series) -> pd.Series:
-        return pd.Series([signature(key, s, p, o, fp_algo) for s, p, o in zip(subj, pred, obj)])
+        return pd.Series(list(map(signer(key, fp_algo), subj, pred, obj)))
 
     return rows.withColumn("author", F.lit(author)).withColumn(
         "sig", _sig(F.col("subj"), F.col("pred"), F.col("obj"))
@@ -112,6 +123,7 @@ def verify_triples(df: DataFrame, key: bytes, fp_algo: str = "sha1") -> DataFram
     'sha256-hex' hex-domain MAC."""
     @F.pandas_udf("boolean")
     def _ok(subj: pd.Series, pred: pd.Series, obj: pd.Series, sig: pd.Series) -> pd.Series:
-        return pd.Series([signature(key, s, p, o, fp_algo) == g for s, p, o, g in zip(subj, pred, obj, sig)])
+        sign = signer(key, fp_algo)
+        return pd.Series([sign(s, p, o) == g for s, p, o, g in zip(subj, pred, obj, sig)])
 
     return df.withColumn("sig_ok", _ok("subj", "pred", "obj", "sig"))

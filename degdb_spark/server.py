@@ -20,9 +20,9 @@ user's first touch (`curl localhost:PORT/api/v1/...`) works unchanged:
 Deliberately stdlib-only (ThreadingHTTPServer): the shim is an edge
 adapter — every request body is parsed once on the HTTP thread and
 handed to the same DegDB methods the Python API uses, with one lock
-serializing every store access: an insert reads the store's keys and
-then swaps in the appended table, so two unserialized inserts could each
-miss the other's rows. No route runs a Spark job. The store is an Arrow
+serializing every store access: an insert probes the store's key index
+and then swaps in a new snapshot of the table and its index, so two
+unserialized inserts could each miss the other's rows. No route runs a Spark job. The store is an Arrow
 table in this process's memory (operators/triplestore.py), so inserts
 do not survive a restart and replicas cannot share it.
 """

@@ -3,10 +3,15 @@ table-driven suite (triplestore/triplestore_test.go)."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
+from degdb_spark.operators import triplestore
 from degdb_spark.operators.triplestore import TripleStore
 from degdb_spark.plans.pattern import ArrayOp
+from degdb_spark.schemas import ARROW_SCHEMA
 
 from tests.conftest import spo
 
@@ -107,6 +112,88 @@ def test_insert_idempotent(spark):
     )
     assert store.insert(df) == 0
     assert store.size()["triples"] == 2
+
+
+# --- the key index: hash collisions and NULL keys ---
+
+null_key_st = st.tuples(
+    st.sampled_from(["a", "b"]), st.sampled_from(["p", "q", None]), st.sampled_from(["1", "2", None])
+)
+
+
+def _batch(keys) -> pa.Table:
+    return pa.Table.from_pylist([dict(zip(("subj", "pred", "obj"), k)) for k in keys], schema=ARROW_SCHEMA)
+
+
+def _keys(store) -> list[tuple]:
+    t = store.table
+    return list(zip(*(t[c].to_pylist() for c in ("subj", "pred", "obj"))))
+
+
+@pytest.fixture()
+def colliding(monkeypatch):
+    """Every key hashes alike, so every probe hits and only the check
+    against the stored key tells keys apart."""
+    monkeypatch.setattr(triplestore, "_key_hash", lambda key: 7)
+
+
+@settings(max_examples=60, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(batches=st.lists(st.lists(null_key_st, max_size=12), max_size=10))
+def test_index_survives_collisions_and_nulls(colliding, batches):
+    store, model = TripleStore(None), []
+    for batch in batches:
+        seen, added = set(), []
+        for k in batch:
+            if k not in seen and (None in k or k not in model):
+                added.append(k)
+            seen.add(k)
+        assert store.insert(_batch(batch)) == len(added)
+        model += added
+        assert _keys(store) == model
+
+
+@pytest.mark.parametrize("hashing", ["python", "colliding"])
+def test_null_key_row_stored_once_per_batch(request, hashing):
+    if hashing == "colliding":
+        request.getfixturevalue("colliding")
+    store = TripleStore(None)
+    row = ("a", None, "1")
+    assert store.insert(_batch([row, ("a", "p", "1"), row])) == 2
+    assert store.insert(_batch([row, ("a", "p", "1")])) == 1
+    assert _keys(store) == [row, ("a", "p", "1"), row]
+
+
+def test_path_seed_reads_as_spark_does(spark, tmp_path):
+    """``path=`` reads parquet with pyarrow exactly as Spark's
+    ``read.schema(TRIPLE_SCHEMA)`` does: NULLs kept, a column a file lacks
+    read as NULL, INT96 and micros ``created`` alike, ``_SUCCESS``
+    skipped; and the seeded keys are indexed."""
+    import datetime
+
+    from degdb_spark.schemas import TRIPLE_SCHEMA, conform_triples
+
+    out = str(tmp_path / "seed")
+    utc = datetime.timezone.utc
+    full = [
+        ("a", "p", "1", "en", None, "sig-a", datetime.datetime(2024, 5, 1, 12, 30, 1, 250, tzinfo=utc)),
+        ("b", None, "2", None, "me", None, None),
+        ("c", "p", None, None, None, None, datetime.datetime(1999, 12, 31, 23, 59, 59, tzinfo=utc)),
+    ]
+    conf = "spark.sql.parquet.outputTimestampType"
+    try:
+        for ts_type in ("INT96", "TIMESTAMP_MICROS"):
+            spark.conf.set(conf, ts_type)
+            spark.createDataFrame(full, schema=TRIPLE_SCHEMA).write.mode("append").parquet(out)
+    finally:
+        spark.conf.unset(conf)
+    spark.createDataFrame([("d", "q", "3")], "subj string, pred string, obj string").write.mode("append").parquet(out)
+
+    order = [(c, "ascending") for c in TRIPLE_SCHEMA.names]
+    want = conform_triples(spark.read.schema(TRIPLE_SCHEMA).parquet(out).toArrow())
+    store = TripleStore(spark, path=out)
+    assert store.table.num_rows == 7
+    assert store.table.sort_by(order).equals(want.sort_by(order))
+    assert store.insert(_batch([("a", "p", "1"), ("d", "q", "3"), ("b", None, "2")])) == 1
 
 
 def test_batch_scan(obama_store):

@@ -4,12 +4,15 @@ benchmark harness (/root/reference/triplestore/triplestore_test.go:
 237-279: single-triple insert and 1000-triple batch insert).
 
 The batches here are DataFrames: each insert materialises its batch
-with one Spark job and anti-joins it against the driver-resident store's
-keys in Arrow, so the single-row path pays a whole job per row; it is
-reported for parity, not as a recommendation. The node's own insert
-path is also timed: ten signed ``DegDB.insert_json`` batches of 500
-triples, parsed, signed and deduplicated in-process (reported as the
-median milliseconds per batch).
+with one Spark job and probes the driver-resident store's key index, so
+the single-row path pays a whole job per row; it is reported for parity,
+not as a recommendation. The node's own insert path is also timed:
+signed ``DegDB.insert_json`` batches of 500 triples, parsed, signed and
+deduplicated in-process, each timed on its own and reported as the
+median milliseconds per batch. Ten go into an empty store; then
+``SWEEP_BATCHES`` go into each of three stores that hold
+``SWEEP_STORED`` triples, a quarter of each batch repeating stored keys,
+which shows whether an insert's cost grows with the store.
 
 Usage: python tools/insert_bench.py [--rows 10000] [--batch 1000]
 Prints one JSON line.
@@ -28,6 +31,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 JSON_BATCH = 500  # triples per signed insert_json batch
 JSON_BATCHES = 10  # insert_json batches timed
+SWEEP_STORED = (10_000, 100_000, 1_000_000)  # store sizes the sweep times inserts at
+SWEEP_FILL = 100_000  # triples per unsigned in-process fill insert
+SWEEP_BATCHES = 20  # insert_json batches timed per sweep size
 
 
 def main() -> None:
@@ -90,6 +96,28 @@ def main() -> None:
         assert db.insert_json(payload) == JSON_BATCH
         json_ms.append(1000 * (time.perf_counter() - t0))
 
+    # signed batches on one store per sweep size, taken in turn so that
+    # the host's load falls alike on every size
+    import pyarrow as pa
+
+    stores = {size: DegDB(spark, signing_key=b"insert-bench-key") for size in SWEEP_STORED}
+    for size, sdb in stores.items():  # fill triples ("s<i>", "p<i % 8>", "o<i>"), i < size
+        for start in range(0, size, SWEEP_FILL):
+            ids = range(start, min(start + SWEEP_FILL, size))
+            sdb.store.insert(pa.table({
+                "subj": [f"s{i}" for i in ids], "pred": [f"p{i % 8}" for i in ids], "obj": [f"o{i}" for i in ids],
+            }))
+    sweep_ms: dict[int, list[float]] = {size: [] for size in SWEEP_STORED}
+    n_dups = JSON_BATCH // 4
+    for b in range(SWEEP_BATCHES):
+        for size, sdb in stores.items():
+            fresh = [{"subj": f"new{b}_{i}", "pred": "p0", "obj": "o"} for i in range(JSON_BATCH - n_dups)]
+            dups = [{"subj": f"s{i}", "pred": f"p{i % 8}", "obj": f"o{i}"} for i in range(b, size, size // n_dups)]
+            payload = json.dumps(fresh + dups[:n_dups])
+            t0 = time.perf_counter()
+            assert sdb.insert_json(payload) == len(fresh)
+            sweep_ms[size].append(1000 * (time.perf_counter() - t0))
+
     print(
         json.dumps(
             {
@@ -99,6 +127,9 @@ def main() -> None:
                 "single_inserts_per_sec": round(args.single / single_secs, 2),
                 "signed_insert_json_batch_size": JSON_BATCH,
                 "signed_insert_json_ms_per_batch": round(statistics.median(json_ms), 1),
+                "signed_insert_json_ms_by_stored": {
+                    str(size): round(statistics.median(ms), 2) for size, ms in sweep_ms.items()
+                },
                 "unit": "rows/sec",
             }
         )
