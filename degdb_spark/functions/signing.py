@@ -8,12 +8,12 @@ fingerprint; signatures are non-deterministic per signing, so its own
 tests strip them before comparison (core/query_test.go:64-72) — ours do
 the same.
 
-Implementation: one per-row signer (``signer``), run in-process over
-an Arrow table for node inserts and inside a vectorized pandas UDF for
-DataFrames (the ``triple_signature_parity`` registry query is the one
-DataFrame caller). The signer is HMAC-SHA256 (same shape as the reference's:
-keyed, verifiable, per-key author id); `cryptography`, which ECDSA-P256
-would need, is not a dependency.
+Implementation: one per-row signer (``signer``), run in-process over an
+Arrow table by ``sign_triples``; no Spark job signs. A caller with a
+DataFrame materialises it first (``DegDB.insert``, the
+``triple_signature_parity`` registry query). The signer is HMAC-SHA256
+(same shape as the reference's: keyed, verifiable, per-key author id);
+`cryptography`, which ECDSA-P256 would need, is not a dependency.
 """
 
 from __future__ import annotations
@@ -22,10 +22,7 @@ import hashlib
 import hmac
 from typing import Callable
 
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from degdb_spark.schemas import ARROW_SCHEMA, conform_triples
 
@@ -70,7 +67,8 @@ def hex_hmac_sha256(key: bytes, msg_hex: str) -> str:
 
 def signer(key: bytes, fp_algo: str = "sha1") -> Callable[[str | None, str | None, str | None], str]:
     """The hex signature of one triple, as a function of its fields — the
-    one per-row signer behind every signing and verifying path.
+    one per-row signer: ``sign_triples`` runs it on every row, and a
+    verifier recomputes it and compares.
     'sha256-hex' is the portable hex-domain profile (``hex_hmac_sha256``
     over the sha256 fingerprint's hex); any other ``fp_algo`` is
     HMAC-SHA256 over that fingerprint's bytes. The HMAC key schedule runs
@@ -87,43 +85,19 @@ def signer(key: bytes, fp_algo: str = "sha1") -> Callable[[str | None, str | Non
     return sign
 
 
-def sign_triples(rows: DataFrame | pa.Table, key: bytes, fp_algo: str = "sha1") -> DataFrame | pa.Table:
-    """Set author + sig on every row (SignTriple, crypto/crypto.go:62-80).
-
-    An Arrow table is signed in-process and returned in ARROW_SCHEMA; a
-    DataFrame gets the same signatures from a pandas UDF, lazily.
+def sign_triples(rows: pa.Table, key: bytes, fp_algo: str = "sha1") -> pa.Table:
+    """Set author + sig on every row (SignTriple, crypto/crypto.go:62-80),
+    in-process; the result is in ARROW_SCHEMA.
 
     HMAC signatures are deterministic; like the reference's ECDSA ones they
     must still be stripped for cross-store comparison because the key
     differs per writer.
     """
-    author = author_id(key)
-    if isinstance(rows, pa.Table):
-        table = conform_triples(rows)
-        sign = signer(key, fp_algo)
-        subj, pred, obj = (table[c].to_numpy(zero_copy_only=False) for c in ("subj", "pred", "obj"))
-        sigs = list(map(sign, subj, pred, obj))
-        for name, values in (("author", [author] * table.num_rows), ("sig", sigs)):
-            field = ARROW_SCHEMA.field(name)
-            table = table.set_column(ARROW_SCHEMA.get_field_index(name), field, pa.array(values, field.type))
-        return table
-
-    @F.pandas_udf("string")
-    def _sig(subj: pd.Series, pred: pd.Series, obj: pd.Series) -> pd.Series:
-        return pd.Series(list(map(signer(key, fp_algo), subj, pred, obj)))
-
-    return rows.withColumn("author", F.lit(author)).withColumn(
-        "sig", _sig(F.col("subj"), F.col("pred"), F.col("obj"))
-    )
-
-
-def verify_triples(df: DataFrame, key: bytes, fp_algo: str = "sha1") -> DataFrame:
-    """Boolean ``sig_ok`` per row — verification counterpart. Supports
-    every profile ``sign_triples`` can produce, including the portable
-    'sha256-hex' hex-domain MAC."""
-    @F.pandas_udf("boolean")
-    def _ok(subj: pd.Series, pred: pd.Series, obj: pd.Series, sig: pd.Series) -> pd.Series:
-        sign = signer(key, fp_algo)
-        return pd.Series([sign(s, p, o) == g for s, p, o, g in zip(subj, pred, obj, sig)])
-
-    return df.withColumn("sig_ok", _ok("subj", "pred", "obj", "sig"))
+    table = conform_triples(rows)
+    sign = signer(key, fp_algo)
+    subj, pred, obj = (table[c].to_numpy(zero_copy_only=False) for c in ("subj", "pred", "obj"))
+    sigs = list(map(sign, subj, pred, obj))
+    for name, values in (("author", [author_id(key)] * table.num_rows), ("sig", sigs)):
+        field = ARROW_SCHEMA.field(name)
+        table = table.set_column(ARROW_SCHEMA.get_field_index(name), field, pa.array(values, field.type))
+    return table

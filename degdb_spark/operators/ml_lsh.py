@@ -471,7 +471,7 @@ def semantic_dedup(
     """
     # Reused three times (both pair sides + the summary); pinned so
     # the corpus scan + assignment runs once, not three times
-    # (persistence.pin — spark.degdb.pin picks the cluster-safe flavor).
+    # (persistence.pin picks the cluster-safe flavor from the master).
     from degdb_spark.persistence import pin
 
     assigned = pin(_semantic_assigned(corpus, centroids, id_col, vec_col, round_dp))

@@ -8,13 +8,14 @@ the previous step's objects on the coordinator; we express the same
 semantics as a distributed self-equi-join, and add the dedup the reference
 acknowledges it is missing (core/query.go:58 TODO).
 
-Scale design: each hop is a shuffle-on-key equi-join — the direct analogue
+Scale design: each hop is an equi-join on the key — the direct analogue
 of degdb's shard fan-out by murmur3(subj) (query/query.go:24-47), except
 Spark parallelises the per-shard requests that the reference issues
-sequentially (core/query.go:97 TODO "Parallelize"). For deep traversals the
-frontier is re-partitioned on the join key and checkpointed every few hops
-to cut lineage; with a subj-bucketed store the hop join is shuffle-free on
-the store side.
+sequentially (core/query.go:97 TODO "Parallelize"). The node passes its
+store's Spark view (``TripleStore.df``), an in-memory relation with no
+bucketing, so a hop shuffles on the key unless Spark broadcasts one side.
+``k_hop`` broadcasts its seeds into the first hop and cuts the frontier's
+lineage every ``CHECKPOINT_EVERY`` hops.
 """
 
 from __future__ import annotations

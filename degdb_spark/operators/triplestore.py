@@ -7,12 +7,13 @@ Capability parity with /root/reference/triplestore/triplestore.go:
                      index beside the table.
 - ``read``         → boolean pattern tree w/ limit (triplestore.go:49-77),
                      in-process, no Spark job.
-- ``query``/``query_array_op`` → the same reads as Spark DataFrames, for
-                     plans that go on to join (traversal, Bloom sync).
-- ``each_triple_batch`` → batched full scan (triplestore.go:172-195).
+- ``query``/``query_array_op`` → the same reads as Spark DataFrames over
+                     ``df``, for plans that go on to join.
 - ``size``         → count + storage stats (triplestore.go:150-170).
-- ``matching_bloom`` → bloom semi-join (bloom.go:39-73), expressed as a
-                     left-semi join on the triple key.
+- ``sort_canonical`` → the full dump in canonical key order.
+
+The Bloom semi-join (bloom.go:39-73) is ``bloom.triples_matching_bloom``
+over ``df``.
 
 Storage: the store is one driver-resident ``pyarrow.Table`` — the node's
 local store, as each degdb node keeps its triples in its own SQLite file
@@ -31,7 +32,9 @@ table and its index are swapped in together as one immutable snapshot.
 No insert runs a Spark job, except that a DataFrame batch (a bulk load)
 runs one, to materialise it. Pattern reads compile the ArrayOp to a
 ``pyarrow.compute`` expression and filter in-process. ``df`` is a Spark
-view of the table, built once per store version, for Catalyst plans.
+view of the table for Catalyst plans (traversal, Bloom sync, sharding),
+cached with the snapshot it was built from and rebuilt once the store
+has moved on.
 Subject-sharded layouts live in operators/sharded.py.
 """
 
@@ -45,7 +48,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from degdb_spark.plans.pattern import OR, ArrayOp, compile_array_op, compile_arrow_op
 from degdb_spark.schemas import ARROW_SCHEMA, TRIPLE_KEY, TRIPLE_SCHEMA, conform_triples
@@ -169,26 +172,14 @@ def _read_parquet(path: str) -> pa.Table:
 class TripleStore:
     """Driver-resident universal triple table with a Spark view."""
 
-    def __init__(self, spark: SparkSession, df: DataFrame | None = None, path: str | None = None):
+    def __init__(self, spark: SparkSession, path: str | None = None):
         self.spark = spark
         self.path = path
-        if df is not None:
-            seed = conform_triples(df.toArrow())
-        elif path is not None:
-            seed = _read_parquet(path)
-        else:
-            seed = ARROW_SCHEMA.empty_table()
+        seed = _read_parquet(path) if path is not None else ARROW_SCHEMA.empty_table()
         seed = seed.combine_chunks().to_batches()
         self._snap = _Snapshot.of(_chunk(b, _Hashed.of(_keys(b))) for b in seed)
-        self._df: DataFrame | None = None
-
-    # ------------------------------------------------------------------ io
-    @staticmethod
-    def from_rows(spark: SparkSession, rows: Iterable[Mapping[str, str]]) -> "TripleStore":
-        """Build from partial-triple dicts (missing fields → NULL)."""
-        store = TripleStore(spark)
-        store.insert(pa.Table.from_pylist(list(rows), schema=ARROW_SCHEMA))
-        return store
+        #: the Spark view and the snapshot it shows, swapped in together
+        self._view: tuple[_Snapshot, DataFrame] | None = None
 
     @property
     def table(self) -> pa.Table:
@@ -198,10 +189,12 @@ class TripleStore:
     @property
     def df(self) -> DataFrame:
         """Spark view of the current table, built on first use after each
-        insert."""
-        if self._df is None:
-            self._df = self.spark.createDataFrame(self.table, schema=TRIPLE_SCHEMA)
-        return self._df
+        insert. The view is cached with the snapshot it shows, so a view
+        whose build an insert overtook is rebuilt on the next read."""
+        snap, cached = self._snap, self._view
+        if cached is None or cached[0] is not snap:
+            cached = self._view = (snap, self.spark.createDataFrame(snap.table, schema=TRIPLE_SCHEMA))
+        return cached[1]
 
     def insert(self, new: DataFrame | pa.Table) -> int:
         """Idempotent insert with set semantics on (subj,pred,obj).
@@ -233,7 +226,6 @@ class TripleStore:
             )
             rows = rows.combine_chunks().to_batches()[0]
             self._snap = self._snap.append(_chunk(rows, keys.where(fresh)))
-        self._df = None
         return rows.num_rows
 
     # --------------------------------------------------------------- query
@@ -252,24 +244,15 @@ class TripleStore:
             patterns = [patterns]
         return self.query_array_op(ArrayOp(mode=OR, triples=list(patterns)), limit=limit)
 
-    def query_array_op(self, op: ArrayOp | Mapping | Column, limit: int = -1) -> DataFrame:
+    def query_array_op(self, op: ArrayOp | Mapping, limit: int = -1) -> DataFrame:
         """Boolean pattern tree on the Spark view (QueryArrayOp,
         triplestore.go:62-77)."""
-        pred = op if isinstance(op, Column) else compile_array_op(op)
-        out = self.df.filter(pred)
+        out = self.df.filter(compile_array_op(op))
         if limit and limit > 0:
             out = out.limit(limit)
         return out
 
-    # ---------------------------------------------------------------- scan
-    def each_triple_batch(self, batch_size: int = 1000):
-        """Batched full scan (EachTripleBatch, triplestore.go:172-195):
-        lists of triple dicts of ``batch_size`` — the reference's
-        LIMIT/OFFSET pages over the driver-resident table."""
-        table = self.table
-        for start in range(0, table.num_rows, batch_size):
-            yield table.slice(start, batch_size).to_pylist()
-
+    # ---------------------------------------------------------------- stats
     def size(self) -> dict:
         """Count + storage stats (Size, triplestore.go:150-170)."""
         disk = 0
@@ -277,17 +260,6 @@ class TripleStore:
             for root, _, files in os.walk(self.path):
                 disk += sum(os.path.getsize(os.path.join(root, f)) for f in files)
         return {"triples": self.table.num_rows, "disk_size_bytes": disk}
-
-    # --------------------------------------------------------------- bloom
-    def matching_bloom(self, other_keys: DataFrame) -> DataFrame:
-        """Triples present in another node's summary (TriplesMatchingBloom,
-        bloom.go:39-73) — expressed exactly: a left-semi join on the triple
-        key. At scale Spark's runtime bloom-filter join
-        (spark.sql.optimizer.runtime.bloomFilter.enabled) builds the actual
-        bloom on the small side automatically."""
-        return self.df.join(
-            other_keys.select(TRIPLE_KEY), on=TRIPLE_KEY, how="left_semi"
-        )
 
     def sort_canonical(self) -> pa.Table:
         """The store in lexicographic (subj, pred, obj) canonical order

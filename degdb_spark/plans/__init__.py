@@ -2,8 +2,7 @@ from degdb_spark.plans.pattern import (
     ArrayOp,
     compile_array_op,
     compile_arrow_op,
-    compile_pattern,
     parse_query_json,
 )
 
-__all__ = ["ArrayOp", "compile_array_op", "compile_arrow_op", "compile_pattern", "parse_query_json"]
+__all__ = ["ArrayOp", "compile_array_op", "compile_arrow_op", "parse_query_json"]

@@ -6,11 +6,11 @@ Re-implements the *semantics* of the reference's ArrayOp query IR
 a boolean tree of exact-match triple patterns into one SQLite WHERE
 string, we compile the same tree into one predicate for either engine:
 
-- ``compile_array_op`` → a Catalyst ``Column``, for Spark plans (joins,
-  traversal, bulk scans). Catalyst pushes it down to a parquet scan, so
-  a rooted pattern only reads the row groups whose min/max subj range can
-  match (the Spark analogue of degdb routing a query to the shard owning
-  murmur3(subj)).
+- ``compile_array_op`` → a Catalyst ``Column``, for Spark plans: path
+  traversal and ``TripleStore.query_array_op`` filter the node store's
+  Spark view (an in-memory relation built from its Arrow table) with it,
+  and the registry's triple queries the derived triple table. Applied to
+  a parquet scan, Catalyst pushes its equalities into the scan.
 - ``compile_arrow_op`` → a ``pyarrow.compute`` expression, which the
   node's driver-resident store (operators/triplestore.py) filters
   in-process with no Spark job.
@@ -124,11 +124,6 @@ def _compile(op: ArrayOp | Mapping, eq: Callable, true: Callable):
 #: per target: (equality leaf, always-true predicate)
 _CATALYST = (lambda f, v: F.col(f) == F.lit(v), lambda: F.lit(True))
 _ARROW = (lambda f, v: pc.field(f) == v, lambda: pc.scalar(True))
-
-
-def compile_pattern(pattern: Mapping[str, str]) -> Column:
-    """One partial triple → Catalyst conjunction of equalities."""
-    return _compile_pattern(pattern, *_CATALYST)
 
 
 def compile_array_op(op: ArrayOp | Mapping) -> Column:

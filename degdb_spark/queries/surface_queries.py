@@ -179,14 +179,13 @@ def triple_signature_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     can only hash VARCHAR) over the canonical first 50 triples. The
     oracle rebuilds the full keyed MAC (ipad/opad key schedule, inner +
     outer digest) in SQL, so every signature is replayed outside
-    Spark."""
+    Spark. The 50 rows are signed in-process, as a node signs an insert."""
     register_all(spark, sf_dir)
     from degdb_spark.functions.signing import sign_triples
 
     base = triples_df(spark).orderBy("subj", "pred", "obj").limit(50)
-    return sign_triples(base, _SIG_KEY, fp_algo="sha256-hex").select(
-        "subj", "pred", "obj", "author", "sig"
-    )
+    signed = sign_triples(base.toArrow(), _SIG_KEY, fp_algo="sha256-hex")
+    return spark.createDataFrame(signed.select(["subj", "pred", "obj", "author", "sig"]))
 
 
 def _signature_sql() -> str:

@@ -46,15 +46,26 @@ def registry_plans(spark, testdata):
 def obama_store(spark):
     """The reference's canonical 4-row fixture
     (triplestore/triplestore_test.go:15-36)."""
-    from degdb_spark.operators.triplestore import TripleStore
-
     rows = [
         {"subj": "/m/02mjmr", "pred": "/type/object/name", "obj": "Barack Obama"},
         {"subj": "/m/02mjmr", "pred": "/type/object/type", "obj": "/people/person"},
         {"subj": "/m/0hume", "pred": "/type/object/name", "obj": "Hume"},
         {"subj": "/m/0hume", "pred": "/type/object/type", "obj": "/organization/team"},
     ]
-    return TripleStore.from_rows(spark, rows)
+    return store_of(spark, rows)
+
+
+def store_of(spark, rows):
+    """A TripleStore holding ``rows``, partial-triple dicts (a missing
+    field is NULL)."""
+    import pyarrow as pa
+
+    from degdb_spark.operators.triplestore import TripleStore
+    from degdb_spark.schemas import ARROW_SCHEMA
+
+    store = TripleStore(spark)
+    store.insert(pa.Table.from_pylist(list(rows), schema=ARROW_SCHEMA))
+    return store
 
 
 def spo(df):

@@ -11,17 +11,25 @@ BY); ``info()["triples"]`` must equal the model's size and never go down.
 Insert batches plan in-batch duplicates, stored duplicates and NULL
 ``pred``/``obj``. A row with a NULL key field never equals a stored row,
 so it is stored once per batch that carries it.
+
+The machine runs twice: calling ``DegDB`` in-process, and with inserts,
+pattern queries, ``triples()`` and ``info()`` sent to a ``DegDBServer``
+over HTTP (ArrayOp and path queries have no HTTP route and stay
+in-process on the same ``DegDB``).
 """
 
 from __future__ import annotations
 
 import json
+import urllib.parse
+import urllib.request
 
 from hypothesis import HealthCheck, settings
 from hypothesis import strategies as st
 from hypothesis.stateful import RuleBasedStateMachine, initialize, invariant, precondition, rule, run_state_machine_as_test
 
 from degdb_spark.api import DegDB
+from degdb_spark.server import DegDBServer
 from perfbench.oracle import TripleOracle, expected_sig
 
 KEY = b"model-key"
@@ -99,9 +107,15 @@ def canonical(key: tuple) -> tuple:
 class NodeMachine(RuleBasedStateMachine):
     spark = None  # set by the test
 
+    def connect(self, db: DegDB):
+        """The node that inserts, pattern queries, ``triples()`` and
+        ``info()`` go to."""
+        return db
+
     @initialize()
     def start(self):
         self.db = DegDB(self.spark, signing_key=KEY)
+        self.node = self.connect(self.db)
         #: stored keys in insertion order; a NULL-key row may repeat
         self.rows: list[tuple] = []
         #: the same keys as a set, for set-level answers and paths
@@ -128,13 +142,13 @@ class NodeMachine(RuleBasedStateMachine):
             if k not in seen and (None in k or k not in self.oracle.keys):
                 added.append(k)
             seen.add(k)
-        assert self.db.insert_json(payload) == len(added)
+        assert self.node.insert_json(payload) == len(added)
         self.rows += added
         self.oracle.add(added)
 
     @rule(patterns=st.lists(pattern_st, min_size=1, max_size=3), limit=limit_st)
     def query_json(self, patterns, limit):
-        got = [key_of(r) for r in self.db.query_json(json.dumps(patterns), limit=limit)]
+        got = [key_of(r) for r in self.node.query_json(json.dumps(patterns), limit=limit)]
         want = [k for k in self.rows if any(eval_pattern(p, k) for p in patterns)]
         assert got == (want[:limit] if limit > 0 else want)
         if limit <= 0:
@@ -148,7 +162,7 @@ class NodeMachine(RuleBasedStateMachine):
 
     @rule()
     def triples(self):
-        dump = self.db.triples()
+        dump = self.node.triples()
         assert [key_of(r) for r in dump] == sorted(self.rows, key=canonical)
         assert all(r["sig"] == expected_sig(KEY, *key_of(r)) for r in dump)
 
@@ -162,19 +176,66 @@ class NodeMachine(RuleBasedStateMachine):
 
     @invariant()
     def info_counts_the_model(self):
-        size = self.db.info()["triples"]
+        size = self.node.info()["triples"]
         assert size == len(self.rows) and size >= self.last_size
         self.last_size = size
 
 
-def test_node_matches_model(spark):
-    NodeMachine.spark = spark
+class HttpClient:
+    """A node's insert, pattern query, dump and info routes, over HTTP."""
+
+    def __init__(self, server: DegDBServer):
+        self.base = f"http://{server.host}:{server.port}/api/v1"
+
+    def _get(self, route: str):
+        with urllib.request.urlopen(self.base + route, timeout=30) as r:
+            return json.loads(r.read())
+
+    def insert_json(self, payload: str) -> int:
+        """The rows added. The reply counts the triples sent, so the rows
+        added are read from ``info`` before and after."""
+        before = self.info()["triples"]
+        req = urllib.request.Request(self.base + "/insert", data=payload.encode(), method="POST")
+        with urllib.request.urlopen(req, timeout=30) as r:
+            assert r.read().decode() == f"Inserted {len(json.loads(payload))} triples."
+        return self.info()["triples"] - before
+
+    def query_json(self, q: str, limit: int = -1) -> list[dict]:
+        return self._get("/query?" + urllib.parse.urlencode({"q": q, "limit": limit}))
+
+    def triples(self) -> list[dict]:
+        return self._get("/triples")
+
+    def info(self) -> dict:
+        return self._get("/info")
+
+
+class HttpNodeMachine(NodeMachine):
+    server: DegDBServer | None = None  # set by the test
+
+    def connect(self, db: DegDB):
+        self.server.db = db
+        return HttpClient(self.server)
+
+
+def _run(machine, spark, max_examples: int):
+    machine.spark = spark
     run_state_machine_as_test(
-        NodeMachine,
+        machine,
         settings=settings(
-            max_examples=100,
+            max_examples=max_examples,
             stateful_step_count=30,
             deadline=None,
             suppress_health_check=[HealthCheck.too_slow],
         ),
     )
+
+
+def test_node_matches_model(spark):
+    _run(NodeMachine, spark, max_examples=100)
+
+
+def test_node_matches_model_over_http(spark):
+    with DegDBServer(DegDB(spark)) as server:
+        HttpNodeMachine.server = server
+        _run(HttpNodeMachine, spark, max_examples=40)

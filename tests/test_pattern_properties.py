@@ -137,9 +137,9 @@ nullable_pattern_st = st.fixed_dictionaries(
 
 @pytest.fixture(scope="module")
 def nullable_store(spark):
-    from degdb_spark.operators.triplestore import TripleStore
+    from tests.conftest import store_of
 
-    store = TripleStore.from_rows(spark, NULLABLE_TRIPLES)
+    store = store_of(spark, NULLABLE_TRIPLES)
     assert store.size()["triples"] == len(NULLABLE_TRIPLES)
     store.df.cache()
     return store

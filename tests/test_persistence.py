@@ -1,22 +1,30 @@
-"""persistence.pin: the session knob that picks how multi-consumer
-intermediates are materialized (executor-local checkpoint / replicated
-persist / reliable checkpoint). All flavors must be bit-identical —
-the pin only cuts lineage — and the knob must restore cleanly."""
+"""persistence.pin / lineage_cut: the flavor follows the master —
+executor-local checkpoints on a single-JVM local master; replicated
+persist (pin) and reliable checkpoints (lineage_cut) on a cluster. All
+flavors must be bit-identical: a pin only cuts lineage. A cluster is
+stood in for by patching ``persistence._master``."""
 
 from __future__ import annotations
 
-
-
 import pytest
+from pyspark import SparkContext
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
+CLUSTER = "spark://host:7077"
 
 
 @pytest.fixture()
-def _clean_knob(spark):
-    yield
-    spark.conf.unset("spark.degdb.pin")
+def on_cluster(spark, tmp_path, monkeypatch):
+    """Call to act as a cluster master from then on, with a checkpoint
+    dir for lineage_cut's reliable checkpoints."""
+    from degdb_spark import persistence
+
+    def switch():
+        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+        monkeypatch.setattr(persistence, "_master", lambda df: CLUSTER)
+
+    return switch
 
 
 def _dsir_rows(spark):
@@ -25,44 +33,39 @@ def _dsir_rows(spark):
     return [tuple(r) for r in dsir_selection(spark, SF).collect()]
 
 
-def test_pin_modes_bit_identical(spark, tmp_path, _clean_knob):
-    want = _dsir_rows(spark)  # default: localCheckpoint
-    spark.conf.set("spark.degdb.pin", "persist")
-    assert _dsir_rows(spark) == want
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    spark.conf.set("spark.degdb.pin", "checkpoint")
+def test_pin_modes_bit_identical(spark, on_cluster):
+    want = _dsir_rows(spark)  # local master: localCheckpoint
+    on_cluster()
     assert _dsir_rows(spark) == want
 
 
-def test_pin_persist_mode_covers_migrated_paths(spark, _clean_knob):
-    """After the round-9 migration, pin() sits under MLlib fit inputs
-    (ml_lsh — where an unmaterialized Python-UDF tree historically
-    threw INTERNAL_ERROR), graph base-edge frames, and the setsim
-    prefix build. Run one query of each shape under pin=persist — the
-    cluster default — and compare to the local-checkpoint rows."""
+def test_pin_persist_mode_covers_migrated_paths(spark, on_cluster):
+    """pin() sits under MLlib fit inputs (ml_lsh — where an
+    unmaterialized Python-UDF tree historically threw INTERNAL_ERROR),
+    graph base-edge frames, and the setsim prefix build. Run one query
+    of each shape as on a cluster master (replicated persist, reliable
+    lineage cuts) and compare to the local-checkpoint rows."""
     from degdb_spark.queries.graph_adv_queries import QUERIES as COV
     from degdb_spark.queries.text_queries import QUERIES as TXT
 
-    def rows(name, q):
+    def rows(q):
         return sorted(tuple(r) for r in q.spark(spark, SF).collect())
 
-    for name, q in (
-        ("docs_minhash_neardups", TXT["docs_minhash_neardups"]),
-        ("basket_kcore", COV["basket_kcore"]),
-        ("docs_setsim_join", TXT["docs_setsim_join"]),
-    ):
-        want = rows(name, q)
-        spark.conf.set("spark.degdb.pin", "persist")
-        try:
-            assert rows(name, q) == want, name
-        finally:
-            spark.conf.unset("spark.degdb.pin")
+    queries = {
+        "docs_minhash_neardups": TXT["docs_minhash_neardups"],
+        "basket_kcore": COV["basket_kcore"],
+        "docs_setsim_join": TXT["docs_setsim_join"],
+    }
+    want = {name: rows(q) for name, q in queries.items()}
+    on_cluster()
+    for name, q in queries.items():
+        assert rows(q) == want[name], name
 
 
-def test_pin_persist_mode_uses_storage(spark, _clean_knob):
+def test_pin_persist_mode_uses_storage(spark, on_cluster):
     from degdb_spark.persistence import pin
 
-    spark.conf.set("spark.degdb.pin", "persist")
+    on_cluster()
     df = pin(spark.range(10).withColumn("x", F.col("id") * 2), eager=True)
     try:
         assert df.storageLevel.useDisk or df.storageLevel.useMemory
@@ -73,26 +76,22 @@ def test_pin_persist_mode_uses_storage(spark, _clean_knob):
 
 
 def test_default_pin_mode_follows_master(spark, monkeypatch):
-    """Behavior table for the UNSET knob (VERDICT r7 #2): local master
-    → executor-local checkpoint; any cluster master → replicated
-    persist. The explicit conf always wins over the default."""
+    """Behavior table: a single-JVM local master → executor-local
+    checkpoint; any cluster master → replicated persist."""
     from degdb_spark import persistence
 
     df = spark.range(5)
     # this suite runs on local[N]
     assert spark.conf.get("spark.master").startswith("local")
-    assert persistence.default_pin_mode(df) == "local"
+    assert persistence._single_jvm(df)
 
-    monkeypatch.setattr(persistence, "_master", lambda f: "spark://host:7077")
-    assert persistence.default_pin_mode(df) == "persist"
     # local-cluster runs REAL separate executor JVMs — it must get the
-    # cluster-safe default despite the "local" prefix
-    monkeypatch.setattr(persistence, "_master", lambda f: "local-cluster[2,1,1024]")
-    assert persistence.default_pin_mode(df) == "persist"
-    monkeypatch.setattr(persistence, "_master", lambda f: "local[8]")
-    assert persistence.default_pin_mode(df) == "local"
-    # unset knob on a "cluster" master → the pin really persists
-    monkeypatch.setattr(persistence, "_master", lambda f: "spark://host:7077")
+    # cluster-safe flavor despite the "local" prefix
+    for master, single in ((CLUSTER, False), ("local-cluster[2,1,1024]", False), ("local[8]", True)):
+        monkeypatch.setattr(persistence, "_master", lambda f: master)
+        assert persistence._single_jvm(df) is single, master
+    # on a "cluster" master the pin really persists
+    monkeypatch.setattr(persistence, "_master", lambda f: CLUSTER)
     out = persistence.pin(df.withColumn("x", F.col("id") + 1), eager=True)
     try:
         assert out.storageLevel.replication == 2
@@ -100,13 +99,13 @@ def test_default_pin_mode_follows_master(spark, monkeypatch):
     finally:
         out.unpersist()
     monkeypatch.undo()
-    # unset knob on the real local master → localCheckpoint, not persist
+    # on the real local master → localCheckpoint, not persist
     out_local = persistence.pin(df.withColumn("x", F.col("id") + 2))
     assert out_local.storageLevel.replication <= 1
     assert out_local.count() == 5
 
 
-def test_lineage_cut_modes_bit_identical(spark, tmp_path):
+def test_lineage_cut_modes_bit_identical(spark, on_cluster):
     """lineage_cut's two flavors (executor-local / reliable checkpoint)
     must produce bit-identical results on an iterative algorithm —
     connected_components exercises both the pinned base edges and the
@@ -120,53 +119,32 @@ def test_lineage_cut_modes_bit_identical(spark, tmp_path):
         [(i,) for i in (1, 2, 3, 10, 11, 20, 99)], ["id"]
     )
     want = sorted(tuple(r) for r in hash_min_components(vertices, edges).collect())
-    try:
-        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-        spark.conf.set("spark.degdb.lineage_cut", "reliable")
-        got = sorted(tuple(r) for r in hash_min_components(vertices, edges).collect())
-    finally:
-        spark.conf.unset("spark.degdb.lineage_cut")
+    on_cluster()
+    got = sorted(tuple(r) for r in hash_min_components(vertices, edges).collect())
     assert got == want
 
 
 def test_lineage_cut_reliable_requires_checkpoint_dir(spark, monkeypatch):
-    """'reliable' without setCheckpointDir must fail LOUDLY with the
-    fix, and a typo'd knob must raise — never silently degrade to the
-    executor-local flavor the knob exists to avoid. Also: the UNSET
-    knob follows the master like pin (local → localCheckpoint, cluster
-    → reliable)."""
+    """On a cluster master with no checkpoint dir, lineage_cut must fail
+    LOUDLY with the fix — never silently degrade to the executor-local
+    flavor. A local master needs no checkpoint dir."""
     from degdb_spark import persistence
 
     df = spark.range(5)
-    had_dir = not spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty()
-    if not had_dir:
-        spark.conf.set("spark.degdb.lineage_cut", "reliable")
-        try:
-            with pytest.raises(ValueError, match="setCheckpointDir"):
-                persistence.lineage_cut(df)
-        finally:
-            spark.conf.unset("spark.degdb.lineage_cut")
-    spark.conf.set("spark.degdb.lineage_cut", "relaible")  # typo'd
-    try:
-        with pytest.raises(ValueError, match="lineage_cut"):
-            persistence.lineage_cut(df)
-    finally:
-        spark.conf.unset("spark.degdb.lineage_cut")
-    # unset knob: local master → 'local'; cluster master → 'reliable'
+    monkeypatch.setattr(SparkContext, "getCheckpointDir", lambda self: None)
     assert persistence.lineage_cut(df, eager=True).count() == 5
-    monkeypatch.setattr(persistence, "_master", lambda f: "spark://host:7077")
-    if not had_dir:
-        with pytest.raises(ValueError, match="setCheckpointDir"):
-            persistence.lineage_cut(df)
+    monkeypatch.setattr(persistence, "_master", lambda f: CLUSTER)
+    with pytest.raises(ValueError, match="setCheckpointDir"):
+        persistence.lineage_cut(df)
 
 
-def test_persist_ring_prunes_stopped_sessions(spark, _clean_knob, monkeypatch):
+def test_persist_ring_prunes_stopped_sessions(spark, on_cluster, monkeypatch):
     """Ring entries whose owning session has stopped are dropped on the
     next pin instead of being kept alive until 16 newer pins displace
     them (ADVICE r7)."""
     from degdb_spark import persistence
 
-    spark.conf.set("spark.degdb.pin", "persist")
+    on_cluster()
     dead = persistence.pin(spark.range(3))
     assert dead in persistence._PERSIST_RING
     monkeypatch.setattr(

@@ -79,10 +79,10 @@ def test_q1_single_shuffle(spark):
 def test_pattern_query_prunes_columns_and_pushes_subject(spark, tmp_path):
     """A rooted pattern's Catalyst compilation, applied to a parquet scan,
     pushes the subject equality into the scan."""
-    from degdb_spark.operators.triplestore import TripleStore
     from degdb_spark.plans.pattern import ArrayOp, compile_array_op
+    from tests.conftest import store_of
 
-    store = TripleStore.from_rows(
+    store = store_of(
         spark, [{"subj": f"s{i}", "pred": "p", "obj": str(i)} for i in range(100)]
     )
     path = str(tmp_path / "triples")
@@ -745,9 +745,9 @@ def test_no_raw_checkpoint_calls():
     ``persistence.py`` is the ONLY module allowed to call
     ``DataFrame.localCheckpoint``/``checkpoint`` directly — everything
     else must route through pin() (one-shot multi-consumer pins) or
-    lineage_cut() (iterative lineage truncation) so the
-    ``spark.degdb.pin`` / ``spark.degdb.lineage_cut`` session knobs
-    actually govern every materialization in every query path. An AST
+    lineage_cut() (iterative lineage truncation) so their
+    master-derived choice of flavor governs every materialization in
+    every query path. An AST
     walk (not grep) so comments/docstrings can mention the methods."""
     import ast
     import pathlib

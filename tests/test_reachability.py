@@ -1,10 +1,16 @@
-"""Every module under degdb_spark/ is reached from an entry point.
+"""Every module under degdb_spark/ is reached from an entry point, and
+every public function of the node's modules is used outside the tests.
 
 A static import walk over the AST (every ``import``/``from … import``,
 including function-local ones) starts from ``__spark_entry__``, the
 benchmark harnesses, the tools and the node's public modules. A package
 module the walk never reaches is code that only its own tests run, and
 fails the test.
+
+The node's modules are held to more: each public function and public
+method they define must be referenced by name — a call, an attribute
+read or a value passed — from a file outside ``tests/``. Importing or
+re-exporting a name is not a use.
 """
 
 from __future__ import annotations
@@ -77,3 +83,64 @@ def test_every_package_module_is_reached_from_an_entry_point():
         for p in (ROOT / "degdb_spark").rglob("*.py")
     }
     assert package - reached_modules() == set()
+
+
+NODE_MODULES = (
+    "degdb_spark/api.py",
+    "degdb_spark/server.py",
+    "degdb_spark/operators/triplestore.py",
+    "degdb_spark/operators/traversal.py",
+    "degdb_spark/operators/bloom.py",
+    "degdb_spark/operators/sharded.py",
+    "degdb_spark/plans/pattern.py",
+    "degdb_spark/functions/signing.py",
+    "degdb_spark/sources/json_triples.py",
+    "degdb_spark/persistence.py",
+)
+
+#: public node functions that only tests reach, each with its reason.
+#: This list may only shrink.
+TEST_ONLY = {
+    # the protocol's full ArrayOp query, kept as API surface
+    "degdb_spark/api.py::DegDB.query_array_op_json",
+    # waits on the choice of the node store's one shard hash
+    "degdb_spark/operators/sharded.py::keyspace_query",
+}
+
+
+def _public_defs(path: Path):
+    """``Class.method`` and ``function`` names defined at the top level
+    of ``path`` whose name has no leading underscore."""
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and not node.name.startswith("_"):
+            yield node.name, node.name
+        elif isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
+            for item in node.body:
+                if isinstance(item, (ast.FunctionDef, ast.AsyncFunctionDef)) and not item.name.startswith("_"):
+                    yield f"{node.name}.{item.name}", item.name
+
+
+def _used_names() -> set[str]:
+    """Every name read as a variable or an attribute outside ``tests/``."""
+    used: set[str] = set()
+    for path in ROOT.rglob("*.py"):
+        if path.relative_to(ROOT).parts[0] == "tests":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+    return used
+
+
+def test_node_functions_reached():
+    used = _used_names()
+    unused = {
+        f"{module}::{qualified}"
+        for module in NODE_MODULES
+        for qualified, name in _public_defs(ROOT / module)
+        if name not in used
+    }
+    assert unused - TEST_ONLY == set(), "public node functions only tests use"
+    assert TEST_ONLY - unused == set(), "now used outside the tests: drop from TEST_ONLY"

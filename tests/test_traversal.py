@@ -4,10 +4,9 @@ from __future__ import annotations
 
 import pytest
 
-from degdb_spark.operators.triplestore import TripleStore
 from degdb_spark.operators.traversal import chain_steps, k_hop
 
-from tests.conftest import spo
+from tests.conftest import spo, store_of
 
 
 def _graph_store(spark):
@@ -19,7 +18,7 @@ def _graph_store(spark):
         {"subj": "d", "pred": "likes", "obj": "e"},
         {"subj": "e", "pred": "knows", "obj": "a"},
     ]
-    return TripleStore.from_rows(spark, rows)
+    return store_of(spark, rows)
 
 
 def test_two_step_chain(spark):

@@ -13,7 +13,7 @@ from degdb_spark.operators.triplestore import TripleStore
 from degdb_spark.plans.pattern import ArrayOp
 from degdb_spark.schemas import ARROW_SCHEMA
 
-from tests.conftest import spo
+from tests.conftest import spo, store_of
 
 OBAMA = ("/m/02mjmr", "/type/object/name", "Barack Obama")
 OBAMA_TYPE = ("/m/02mjmr", "/type/object/type", "/people/person")
@@ -103,7 +103,7 @@ def test_insert_idempotent(spark):
         {"subj": "a", "pred": "p", "obj": "1"},  # in-batch dup
         {"subj": "b", "pred": "p", "obj": "2"},
     ]
-    store = TripleStore.from_rows(spark, rows)
+    store = store_of(spark, rows)
     assert store.size()["triples"] == 2
     # re-insert the same batch: count unchanged, 0 added
     df = spark.createDataFrame(
@@ -196,30 +196,34 @@ def test_path_seed_reads_as_spark_does(spark, tmp_path):
     assert store.insert(_batch([("a", "p", "1"), ("d", "q", "3"), ("b", None, "2")])) == 1
 
 
-def test_batch_scan(obama_store):
-    batches = list(obama_store.each_triple_batch(batch_size=3))
-    assert [len(b) for b in batches] == [3, 1]
+def test_df_view_never_older_than_table(spark):
+    """A writer that lands while a reader builds the Spark view must not
+    leave that view cached: the next read of ``df`` sees the new table."""
+    store = TripleStore(spark)
+    store.insert(_batch([("a", "p", "1")]))
 
+    class WriterMidBuild:
+        """``createDataFrame`` that runs an insert before it returns."""
 
-def test_bloom_semi_join(spark, obama_store):
-    other = spark.createDataFrame(
-        [("/m/02mjmr", "/type/object/name", "Barack Obama")],
-        ["subj", "pred", "obj"],
-    )
-    assert spo(obama_store.matching_bloom(other)) == [OBAMA]
+        def createDataFrame(self, *args, **kwargs):
+            view = spark.createDataFrame(*args, **kwargs)
+            store.spark = spark  # one writer; later builds use the session
+            store.insert(_batch([("b", "p", "2")]))
+            return view
+
+    store.spark = WriterMidBuild()
+    store.df  # the reader whose build the insert overtakes
+    assert store.df.count() == store.table.num_rows == 2
 
 
 # --- signing (crypto/crypto.go:62-91) ---
 
-def test_signing_roundtrip(spark, obama_store):
-    from degdb_spark.functions.signing import sign_triples, verify_triples
+def test_signing_roundtrip(obama_store):
+    from degdb_spark.functions.signing import sign_triples, signer
 
     key = b"test-key"
-    signed = sign_triples(obama_store.df, key)
-    rows = signed.collect()
-    assert all(r["author"].startswith("degdb:author_") for r in rows)
-    assert all(r["sig"] for r in rows)
-    ok = verify_triples(signed, key).select("sig_ok").collect()
-    assert all(r["sig_ok"] for r in ok)
-    bad = verify_triples(signed, b"other-key").select("sig_ok").collect()
-    assert not any(r["sig_ok"] for r in bad)
+    signed = sign_triples(obama_store.table, key).to_pylist()
+    assert all(r["author"].startswith("degdb:author_") for r in signed)
+    assert all(r["sig"] for r in signed)
+    for verify, ok in ((signer(key), True), (signer(b"other-key"), False)):
+        assert all((verify(r["subj"], r["pred"], r["obj"]) == r["sig"]) is ok for r in signed)
