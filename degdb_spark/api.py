@@ -21,8 +21,10 @@ materialise it, and ``DegDB(path=…)`` seeds the store with
 Spark view.
 
 Differences by design: signing is opt-in (pass a key) because Spark jobs
-are trusted-perimeter; gossip/keyspace routing is replaced by Spark's own
-data placement (SURVEY.md §2.6).
+are trusted-perimeter. The node has no peers and no gossip: keyspace
+routing lives in the sharded layout (operators/sharded.py), whose
+shards are the arcs of the reference's murmur3_64 ring, and the node's
+own inserts are not written there.
 """
 
 from __future__ import annotations

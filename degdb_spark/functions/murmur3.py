@@ -3,20 +3,16 @@
 degdb routes triples by ``murmur3.Sum64([]byte(subj))``
 (/root/reference/core/http.go:70, spaolacci/murmur3's Sum64 = h1 of the
 x64_128 variant, seed 0). Spark has no 64-bit murmur3 built-in (F.hash
-is the 32-bit variant, xxhash64 a different family), so placement
-parity needs this pure-Python implementation, Arrow-batched behind a
-pandas UDF (functions/murmur3.murmur3_shard_udf). The default shard
-path stays JVM-side xxhash64 (operators/sharded.shard_of) — parity
-hashing is a config switch for deployments that must agree with a live
-degdb ring, not the hot path.
+is the 32-bit variant, its 64-bit hash another family), so this is a
+pure-Python implementation, run in-process. It is the sharded layout's
+one shard hash: ``operators/sharded.shard_of`` takes its top five bits,
+and ``operators/sharded.keyspace_query`` tests it against a keyspace arc.
 
 Known-answer vectors (tests/test_sharded_parity.py) pin the algorithm
 to the canonical x64_128 reference values.
 """
 
 from __future__ import annotations
-
-import pandas
 
 _MASK = (1 << 64) - 1
 _C1 = 0x87C37B91114253D5
@@ -91,33 +87,3 @@ def murmur3_64(data: bytes, seed: int = 0) -> int:
     """Go murmur3.Sum64 parity: h1 of x64_128, unsigned."""
     return murmur3_x64_128(data, seed)[0]
 
-
-def murmur3_hash_udf():
-    """Arrow-batched murmur3_64(subj) as a signed int64 column — the
-    same bit pattern a JVM hash would carry, for keyspace predicates
-    (plans/keyspace.includes_column) and range-scheme shard ids."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("long")
-    def h(s: pandas.Series) -> pandas.Series:
-        def signed(x: str) -> int:
-            v = murmur3_64(x.encode("utf-8"))
-            return v - (1 << 64) if v >= 1 << 63 else v
-
-        return s.map(signed).astype("int64")
-
-    return h
-
-
-def murmur3_shard_udf(n_shards: int):
-    """Arrow-batched shard-id column: murmur3_64(subj) % n_shards, the
-    exact routing a live degdb ring applies (unsigned modulus)."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("int")
-    def shard(s: pandas.Series) -> pandas.Series:
-        return s.map(
-            lambda x: murmur3_64(x.encode("utf-8")) % n_shards
-        ).astype("int32")
-
-    return shard

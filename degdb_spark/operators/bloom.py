@@ -25,7 +25,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -36,8 +36,8 @@ def optimal_params(n_items: int, fpr: float = 1e-9) -> tuple[int, int]:
     return m, k
 
 
-def _hash_cols(key_cols: list[str | Column]):
-    cols = [F.col(c) if isinstance(c, str) else c for c in key_cols]
+def _hash_cols(key_cols: list[str]):
+    cols = [F.col(c) for c in key_cols]
     return (
         F.xxhash64(*cols, F.lit(1)).alias("_h1"),
         F.xxhash64(*cols, F.lit(2)).alias("_h2"),
@@ -49,7 +49,7 @@ class BloomFilter:
     """Filter bytes WITH their (m, k) parameters — membership checked
     with mismatched parameters is silently meaningless, so the params
     travel with the bits (same policy as the sharded layout's recorded
-    modulus)."""
+    hash and shard count)."""
 
     bits: bytes
     m_bits: int
@@ -86,7 +86,7 @@ def _tree_or(partials: DataFrame, n_partials: int, fanin: int = 16) -> DataFrame
 
 
 def build_bloom(
-    df: DataFrame, key_cols: list[str | Column], m_bits: int, k: int, fanin: int = 16
+    df: DataFrame, key_cols: list[str], m_bits: int, k: int, fanin: int = 16
 ) -> BloomFilter:
     """Build the filter over the given key columns.
 
@@ -136,7 +136,7 @@ def build_bloom(
     return BloomFilter(bytes(rows[0]["bits"]), m_bits, k)
 
 
-def might_contain(df: DataFrame, bloom: BloomFilter, key_cols: list[str | Column]) -> DataFrame:
+def might_contain(df: DataFrame, bloom: BloomFilter, key_cols: list[str]) -> DataFrame:
     """Adds boolean ``_in_bloom`` (true ⇒ maybe member, false ⇒ definitely
     not). Filter bytes ride the closure → broadcast once per executor."""
     bits = np.frombuffer(bloom.bits, dtype=np.uint8)

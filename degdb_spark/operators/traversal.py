@@ -61,7 +61,7 @@ def chain_steps(
 
 def k_hop(
     store_df: DataFrame,
-    start_subjects: DataFrame | Sequence[str],
+    start_subjects: Sequence[str],
     k: int,
     pred: str | None = None,
 ) -> DataFrame:
@@ -70,11 +70,7 @@ def k_hop(
     Iterative frontier expansion; lineage is truncated with lineage_cut()
     every ``CHECKPOINT_EVERY`` hops (risk §7.1 of SURVEY.md).
     """
-    spark = store_df.sparkSession
-    if not isinstance(start_subjects, DataFrame):
-        frontier = spark.createDataFrame([(s,) for s in start_subjects], ["subj"])
-    else:
-        frontier = start_subjects.toDF("subj")
+    frontier = store_df.sparkSession.createDataFrame([(s,) for s in start_subjects], ["subj"])
     edges = store_df.select("subj", "pred", "obj")
     if pred is not None:
         edges = edges.filter(F.col("pred") == pred)

@@ -158,7 +158,7 @@ class _Snapshot(NamedTuple):
         return _Snapshot.of(chunks)
 
 
-def _read_parquet(path: str) -> pa.Table:
+def read_parquet(path: str) -> pa.Table:
     """A parquet directory (or file) in ARROW_SCHEMA, as Spark's
     ``read.schema(TRIPLE_SCHEMA).parquet`` reads it: a column a file lacks
     is NULL, files named ``_*`` or ``.*`` are skipped, and an INT96 or
@@ -175,7 +175,7 @@ class TripleStore:
     def __init__(self, spark: SparkSession, path: str | None = None):
         self.spark = spark
         self.path = path
-        seed = _read_parquet(path) if path is not None else ARROW_SCHEMA.empty_table()
+        seed = read_parquet(path) if path is not None else ARROW_SCHEMA.empty_table()
         seed = seed.combine_chunks().to_batches()
         self._snap = _Snapshot.of(_chunk(b, _Hashed.of(_keys(b))) for b in seed)
         #: the Spark view and the snapshot it shows, swapped in together

@@ -1,5 +1,5 @@
 """Keyspace algebra — the reference's circular-uint64 shard-range
-calculus, with Spark predicates on top.
+calculus, and the shards of the sharded layout an arc touches.
 
 Semantics are an exact port of /root/reference/protocol/keyspace.go
 (14-117), pinned by the full keyspace_test.go:10-318 vector table in
@@ -12,15 +12,11 @@ A keyspace is a half-open arc [start, end) on the circle of uint64s;
 end < start means it wraps through 2^64. end == start-1 is the full
 circle ("maxed"); end == start is empty-ish (magnitude 0).
 
-Spark integration:
-- ``includes_column(hash_col, ks)`` — the Includes() predicate as a
-  Column over a signed-int64 hash column (xxhash64/murmur3 output),
-  evaluated with unsigned comparison semantics JVM-side.
-- ``keyspace_shards(ks, n_shards)`` — the shard residues a keyspace
-  can touch: a contiguous arc of magnitude M covers exactly
-  min(M, n) consecutive residues mod n, so keyspace-scoped scans of
-  the sharded layout (operators/sharded.py) prune partitions the same
-  way degdb routes to the peers owning the arc.
+``keyspace_shards_range(ks, n_shards)`` names the shards an arc
+touches when shard = the top log2(n) bits of the hash, as in the sharded
+layout (operators/sharded.py): each shard owns a contiguous arc, so a
+keyspace-scoped scan reads only the shards whose arcs meet the query's,
+the way degdb contacts only the peers owning the arc.
 """
 
 from __future__ import annotations
@@ -129,54 +125,17 @@ def complement(k: Keyspace | None) -> Keyspace | None:
     return Keyspace(k.end, k.start)
 
 
-# --------------------------------------------------------------- Spark side
-
-def includes_column(hash_col, ks: Keyspace):
-    """Includes() as a Column predicate over a signed-int64 hash column.
-
-    Spark's xxhash64 (and the murmur3 UDF cast to long) produce signed
-    longs; the keyspace arithmetic is unsigned. Adding 2^63 maps
-    unsigned order onto signed order (u < v  ⇔  u⊕2^63 <ₛ v⊕2^63),
-    done here by flipping the sign bit with bitwise XOR — stays in
-    whole-stage codegen, no decimal widening.
-    """
-    from pyspark.sql import functions as F
-
-    def to_signed_order(u: int):
-        # unsigned constant → the signed long with the sign bit flipped
-        return F.lit(_u64(u) - (1 << 63))
-
-    h = hash_col.bitwiseXOR(F.lit(-(1 << 63)))  # flip sign bit of the hash
-    s, e = to_signed_order(ks.start), to_signed_order(ks.end)
-    return ((s <= h) & (h < e)) | ((h < e) & (e < s)) | ((e < s) & (s <= h))
-
-
-def keyspace_shards(ks: Keyspace | None, n_shards: int) -> list[int] | None:
-    """Shard residues a keyspace arc can touch (None → all shards).
-
-    Consecutive uint64s cover consecutive residues mod n, so an arc of
-    magnitude M touches the min(M, n) residues starting at start % n.
-    Used for partition pruning of keyspace-scoped scans; the full
-    circle (maxed) touches everything.
-    """
-    if ks is None:
-        return []
-    if ks.maxed() or ks.mag() >= n_shards:
-        return None
-    if ks.mag() == 0:
-        return []
-    return sorted({(ks.start + i) % n_shards for i in range(ks.mag())})
-
+# ------------------------------------------------------------ shard pruning
 
 def keyspace_shards_range(ks: Keyspace | None, n_shards: int) -> list[int] | None:
-    """Shard ids a keyspace arc touches under the RANGE scheme (shard =
-    top log2(n) hash bits, operators/sharded.py): a contiguous arc maps
-    to a contiguous (possibly wrapping) run of shard ids, so pruning is
-    proportional to arc size — the Spark analogue of contacting only
-    the peers whose keyspaces intersect the query's arc. None → all.
+    """Shard ids a keyspace arc touches when shard = the top log2(n)
+    hash bits (operators/sharded.py): a contiguous arc maps to a
+    contiguous (possibly wrapping) run of shard ids, so pruning is
+    proportional to arc size — contacting only the peers whose
+    keyspaces intersect the query's arc. None → all.
     """
     if n_shards & (n_shards - 1):
-        raise ValueError("range scheme requires power-of-two n_shards")
+        raise ValueError("shard arcs require a power-of-two n_shards")
     if ks is None:
         return []
     if ks.maxed():
@@ -186,8 +145,8 @@ def keyspace_shards_range(ks: Keyspace | None, n_shards: int) -> list[int] | Non
     shift = 64 - (n_shards.bit_length() - 1)
     lo = ks.start >> shift
     hi = _u64(ks.end - 1) >> shift
-    if lo <= hi:
+    if ks.start < ks.end:
         ids = list(range(lo, hi + 1))
-    else:  # arc wraps through 0
-        ids = sorted(set(range(lo, n_shards)) | set(range(0, hi + 1)))
+    else:  # wraps through 0; it may start and end in one shard
+        ids = sorted({*range(lo, n_shards), *(range(hi + 1) if ks.end else ())})
     return ids if len(ids) < n_shards else None

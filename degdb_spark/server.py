@@ -41,6 +41,10 @@ _STATIC_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "static")
 #: explicit whitelist — no directory traversal surface
 _STATIC_PAGES = {"triples.html", "insert.html", "keyspace.html"}
 
+#: seconds between the serve loop's shutdown checks: ``stop()`` waits up
+#: to one of them (``serve_forever``'s default is 0.5)
+_POLL_S = 0.05
+
 
 class DegDBServer:
     """Serve a DegDB instance over HTTP; port=0 picks a free port."""
@@ -145,7 +149,7 @@ class DegDBServer:
 
     def start(self) -> "DegDBServer":
         self._thread = threading.Thread(
-            target=self._httpd.serve_forever, name="degdb-http", daemon=True
+            target=self._httpd.serve_forever, args=(_POLL_S,), name="degdb-http", daemon=True
         )
         self._thread.start()
         return self

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 
 import pytest
@@ -40,6 +41,27 @@ def registry_plans(spark, testdata):
         except Exception as e:
             plans[name] = e
     return plans
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn)`` → (fn(), Spark jobs fn ran), counted exactly
+    through a job group of its own. Session-scoped so group ids never
+    repeat: the status tracker keeps a finished group's jobs."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    groups = itertools.count()
+
+    def run(fn):
+        group = f"test-jobs-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return result, len(tracker.getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

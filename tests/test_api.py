@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import hashlib
 import hmac
-import itertools
 import json
 
 import pytest
@@ -120,26 +119,6 @@ def test_query_array_op_json(db):
 
 
 # --- the node's read path runs no Spark job ---
-
-@pytest.fixture()
-def count_jobs(spark):
-    """``count_jobs(fn)`` → (fn(), Spark jobs fn ran), counted exactly
-    through a job group of its own."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    groups = itertools.count()
-
-    def run(fn):
-        group = f"test-jobs-{next(groups)}"
-        sc.setJobGroup(group, group)
-        try:
-            result = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return result, len(tracker.getJobIdsForGroup(group))
-
-    return run
-
 
 def test_node_reads_run_no_spark_job(db, count_jobs):
     batch = json.dumps([{"subj": "/m/0new", "pred": "/type/object/name", "obj": "New"}])

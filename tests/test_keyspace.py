@@ -1,6 +1,6 @@
 """Keyspace algebra — full port of the reference's vector table
-(/root/reference/protocol/keyspace_test.go:10-318) plus the Spark
-predicate and shard-pruning integrations."""
+(the reference's protocol/keyspace_test.go:10-318) plus the shard
+pruning of keyspace scans over the sharded layout."""
 
 from __future__ import annotations
 
@@ -9,9 +9,8 @@ import pytest
 from degdb_spark.plans.keyspace import (
     Keyspace,
     complement,
-    includes_column,
     intersection,
-    keyspace_shards,
+    keyspace_shards_range,
     union,
 )
 
@@ -104,50 +103,8 @@ def test_complement():
     assert complement(Keyspace(1, 0)) is None
 
 
-# ---------------------------------------------------------------- Spark side
-def test_includes_column_matches_python(spark):
-    from pyspark.sql import functions as F
-
-    # keyspaces exercising plain / wrapped / near-boundary arcs
-    spaces = [
-        Keyspace(1, 100),
-        Keyspace(100, 1),  # wraps
-        Keyspace(MAX - 5, 20),  # wraps across 0
-        Keyspace(5, 4),  # maxed
-    ]
-    df = (
-        spark.range(500)
-        .select(F.concat(F.lit("s"), F.col("id")).alias("subj"))
-        .select("subj", F.xxhash64("subj").alias("h"))
-    )
-    rows = df.collect()
-    for ks in spaces:
-        got = {
-            r.subj
-            for r in df.filter(includes_column(F.col("h"), ks)).collect()
-        }
-        want = {r.subj for r in rows if ks.includes(r.h & ((1 << 64) - 1))}
-        assert got == want, ks
-
-
-def test_keyspace_shards_pruning_math():
-    # arc of magnitude 3 starting at 30, 16 shards → residues 14,15,0
-    assert keyspace_shards(Keyspace(30, 33), 16) == [0, 14, 15]
-    # arc >= n_shards → all shards (None)
-    assert keyspace_shards(Keyspace(0, 16), 16) is None
-    assert keyspace_shards(Keyspace(5, 4), 16) is None  # maxed
-    assert keyspace_shards(Keyspace(7, 7), 16) == []  # empty
-    assert keyspace_shards(None, 16) == []
-    # exhaustive cross-check against brute-force residues for small arcs
-    for start in (0, 7, 100, MAX - 3):
-        ks = Keyspace(start, (start + 5) & MAX)
-        want = sorted({(start + i) % 16 for i in range(5)})
-        assert keyspace_shards(ks, 16) == want
-
-
+# ---------------------------------------------------------- shard pruning
 def test_keyspace_shards_range_math():
-    from degdb_spark.plans.keyspace import keyspace_shards_range
-
     # 16 shards → each owns a 2^60-wide arc; half the ring → shards 0-7
     half = Keyspace(0, 1 << 63)
     assert keyspace_shards_range(half, 16) == list(range(0, 8))
@@ -156,59 +113,47 @@ def test_keyspace_shards_range_math():
     assert keyspace_shards_range(wrap, 16) == [0, 1, 2, 3, 12, 13, 14, 15]
     assert keyspace_shards_range(Keyspace(5, 4), 16) is None  # maxed
     assert keyspace_shards_range(None, 16) == []
+    # a wrapping arc that starts and ends inside one shard covers the ring
+    assert keyspace_shards_range(Keyspace((5 << 60) + 100, (5 << 60) + 50), 16) is None
+    # an arc ending at 0 stops at the top of the ring
+    assert keyspace_shards_range(Keyspace(14 << 60, 0), 16) == [14, 15]
     with pytest.raises(ValueError):
         keyspace_shards_range(Keyspace(0, 10), 12)
 
 
 def test_keyspace_query_range_scheme(spark, tmp_path):
-    from pyspark.sql import functions as F
+    import shutil
 
-    from degdb_spark.operators.sharded import keyspace_query, write_sharded
+    from degdb_spark.functions.murmur3 import murmur3_64
+    from degdb_spark.operators.sharded import N_SHARDS, keyspace_query, write_sharded
 
     df = spark.createDataFrame(
         [(f"s{i}", "p", str(i), None, None, None, None) for i in range(400)],
         schema="subj string, pred string, obj string, lang string, author string, sig string, created timestamp",
     )
     path = str(tmp_path / "range_sharded")
-    write_sharded(df, path, n_shards=16, algo="xxhash64", scheme="range")
+    write_sharded(df, path)
 
     # expected membership computed independently with the Python algebra
-    hashes = {
-        r.subj: r.h & ((1 << 64) - 1)
-        for r in df.select("subj", F.xxhash64("subj").alias("h")).collect()
-    }
-    for ks in (Keyspace(0, 1 << 63), Keyspace(3 << 62, 1 << 62)):
+    hashes = {f"s{i}": murmur3_64(f"s{i}".encode()) for i in range(400)}
+    arcs = (
+        Keyspace(0, 1 << 63),  # half the ring
+        Keyspace(3 << 62, 1 << 62),  # wraps through 0
+        Keyspace(1 << 62, 3 << 63),  # 3 << 63 wraps to 1 << 63
+        Keyspace(0x1234_5678_9ABC_DEF0, 0xC0FF_EE00_0000_0001),  # not on shard edges
+    )
+    for n, ks in enumerate(arcs):
         got = {r.subj for r in keyspace_query(spark, path, ks).collect()}
         want = {s for s, h in hashes.items() if ks.includes(h)}
         assert got == want and want, ks
 
+        # pruning: the shards keyspace_shards_range names suffice
+        pruned = str(tmp_path / f"pruned{n}")
+        shutil.copytree(path, pruned)
+        keep = keyspace_shards_range(ks, N_SHARDS)
+        for i in set(range(N_SHARDS)) - set(keep):
+            shutil.rmtree(f"{pruned}/shard={i}", ignore_errors=True)
+        assert {r.subj for r in keyspace_query(spark, pruned, ks).collect()} == want, ks
+
     # nil keyspace includes nothing (keyspace.go:5-7)
     assert keyspace_query(spark, path, None).count() == 0
-
-    # pruning: the half-ring scan must carry a shard partition filter
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        keyspace_query(spark, path, Keyspace(0, 1 << 63)).explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters:" in plan and "shard" in plan
-
-
-def test_keyspace_query_murmur3_mod(spark, tmp_path):
-    from degdb_spark.functions.murmur3 import murmur3_64
-    from degdb_spark.operators.sharded import keyspace_query, write_sharded
-
-    df = spark.createDataFrame(
-        [(f"d{i}", "p", str(i), None, None, None, None) for i in range(100)],
-        schema="subj string, pred string, obj string, lang string, author string, sig string, created timestamp",
-    )
-    path = str(tmp_path / "mm3_mod")
-    write_sharded(df, path, n_shards=8, algo="murmur3_64", scheme="mod")
-    ks = Keyspace(1 << 62, 3 << 63)
-    got = {r.subj for r in keyspace_query(spark, path, ks).collect()}
-    want = {
-        f"d{i}" for i in range(100) if ks.includes(murmur3_64(f"d{i}".encode()))
-    }
-    assert got == want and want

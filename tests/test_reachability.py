@@ -103,7 +103,7 @@ NODE_MODULES = (
 TEST_ONLY = {
     # the protocol's full ArrayOp query, kept as API surface
     "degdb_spark/api.py::DegDB.query_array_op_json",
-    # waits on the choice of the node store's one shard hash
+    # one peer's keyspace scan; waits on a peer-sync caller
     "degdb_spark/operators/sharded.py::keyspace_query",
 }
 

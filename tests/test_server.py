@@ -48,6 +48,21 @@ def _post(srv, path: str, body: str) -> tuple[int, str]:
         return e.code, e.read().decode()
 
 
+def test_stop_returns_promptly():
+    """``stop()`` returns within a short poll of the serve loop, not the
+    0.5 s default ``serve_forever`` would wait for."""
+    import statistics
+    import time
+
+    took = []
+    for _ in range(3):
+        srv = DegDBServer(DegDB(None)).start()
+        t0 = time.perf_counter()
+        srv.stop()
+        took.append(time.perf_counter() - t0)
+    assert statistics.median(took) < 0.25, took
+
+
 def test_insert_then_read_back(server):
     code, body = _post(server, "/api/v1/insert", json.dumps(FIXTURE))
     assert code == 200 and body == "Inserted 4 triples."
