@@ -14,8 +14,8 @@ Spark parallelises the per-shard requests that the reference issues
 sequentially (core/query.go:97 TODO "Parallelize"). The node passes its
 store's Spark view (``TripleStore.df``), an in-memory relation with no
 bucketing, so a hop shuffles on the key unless Spark broadcasts one side.
-``k_hop`` broadcasts its seeds into the first hop and cuts the frontier's
-lineage every ``CHECKPOINT_EVERY`` hops.
+``k_hop`` broadcasts its seeds into the first hop; its plan grows by one
+join per hop, which is short for the k its callers pass (2 and 3).
 """
 
 from __future__ import annotations
@@ -26,10 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from degdb_spark.plans.pattern import ArrayOp, compile_array_op
-from degdb_spark.persistence import lineage_cut
-
-#: k_hop cuts the frontier's lineage every this many hops.
-CHECKPOINT_EVERY = 5
 
 
 def chain_steps(
@@ -65,12 +61,9 @@ def k_hop(
     k: int,
     pred: str | None = None,
 ) -> DataFrame:
-    """All nodes reachable in exactly k hops along ``pred`` edges.
-
-    Iterative frontier expansion; lineage is truncated with lineage_cut()
-    every ``CHECKPOINT_EVERY`` hops (risk §7.1 of SURVEY.md).
-    """
-    frontier = store_df.sparkSession.createDataFrame([(s,) for s in start_subjects], ["subj"])
+    """All nodes reachable in exactly k hops along ``pred`` edges, by
+    iterative frontier expansion (no start subjects reach nothing)."""
+    frontier = store_df.sparkSession.createDataFrame([(s,) for s in start_subjects], "subj string")
     edges = store_df.select("subj", "pred", "obj")
     if pred is not None:
         edges = edges.filter(F.col("pred") == pred)
@@ -81,8 +74,6 @@ def k_hop(
             .select(F.col("obj").alias("subj"))
             .distinct()
         )
-        if (i + 1) % CHECKPOINT_EVERY == 0:
-            frontier = frontier.transform(lineage_cut, eager=True)
     return frontier.select(F.col("subj").alias("node"))
 
 

@@ -93,8 +93,9 @@ def triple_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-prefiltered semi-join (the degdb node-sync shape,
     bloom_test.go parity): build a bloom over nation/1's members, use it
     to prefilter the triple scan, then exact semi-join — per-pred counts
-    of the members' triples. The bloom pass is plan-level (Arrow-batched
-    bitset OR, operators/bloom.py); the exact join makes the answer
+    of the members' triples. The bloom is built on the driver from one
+    ``toArrow`` of the keys' hashes and checked in a pandas UDF
+    (operators/bloom.py); the exact join makes the answer
     independent of the filter's false-positive rate, so it is
     SQL-replayable."""
     register_all(spark, sf_dir)

@@ -121,9 +121,13 @@ class DegDBServer:
                     else:
                         self._send(404, "not found", "text/plain")
                     return
+                # a negative length would read to EOF and never reply
+                length = self.headers.get("Content-Length", "0")
+                if not (length.isascii() and length.isdigit()):
+                    self._send(400, f"bad Content-Length: {length!r}", "text/plain")
+                    return
                 try:
-                    n = int(self.headers.get("Content-Length", 0))
-                    body = self.rfile.read(n).decode()
+                    body = self.rfile.read(int(length)).decode()
                     try:
                         payload = json.loads(body)
                     except json.JSONDecodeError as e:

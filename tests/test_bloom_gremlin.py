@@ -55,34 +55,39 @@ def test_matching_bloom_roundtrip(spark, big_store):
     assert matched.join(subset, ["subj", "pred", "obj"], "left_semi").count() == 1000
 
 
-def test_tree_or_single_row_contract(spark):
-    """Driver-memory contract (VERDICT r7 #2): the tree merge leaves
-    EXACTLY one row — only one bitset-sized object ever reaches the
-    driver — and that row is the OR of every input partial."""
-    import numpy as np
-
-    from degdb_spark.operators.bloom import _tree_or
-
-    rng = np.random.default_rng(7)
-    partials = [bytes(rng.integers(0, 256, 64, dtype=np.uint8)) for _ in range(37)]
-    df = spark.createDataFrame([(p,) for p in partials], "bits binary").repartition(37)
-    merged = _tree_or(df, 37, fanin=4)  # 37 → 10 → 3 → 1
-    rows = merged.collect()
-    assert len(rows) == 1
-    want = np.zeros(64, dtype=np.uint8)
-    for p in partials:
-        want |= np.frombuffer(p, dtype=np.uint8)
-    assert bytes(rows[0]["bits"]) == want.tobytes()
-
-
 def test_build_bloom_partition_count_independent(spark, big_store):
-    """Tree-merged bits are identical whether the build ran over one
-    partition or many — the merge is a pure OR."""
+    """The bits are identical whether the build read one partition or
+    many: each key's slots do not depend on where the key was read."""
     m, k = optimal_params(5000, fpr=1e-3)
-    wide = build_bloom(big_store.repartition(24), ["subj", "pred", "obj"], m, k, fanin=3)
+    wide = build_bloom(big_store.repartition(24), ["subj", "pred", "obj"], m, k)
     narrow = build_bloom(big_store.coalesce(1), ["subj", "pred", "obj"], m, k)
     assert wide.bits == narrow.bits
     assert (wide.m_bits, wide.k) == (narrow.m_bits, narrow.k)
+
+
+def test_build_bloom_golden_bits(big_store):
+    """The bytes of the 5000-triple fixture's filter are pinned: a change
+    to the slot formula or the byte/mask layout would make filters built
+    before it disagree with checks made after it (false negatives)."""
+    import hashlib
+
+    want = {
+        1e-3: "4434cbfd1fef11dde1f383542cc80f85abe934f6a3dc7e45d5bd71c459655919",
+        1e-6: "1719f0a966b8269c1382319e5535b4778dcfd187a433b2659c65170c95ee30af",
+    }
+    for fpr, digest in want.items():
+        m, k = optimal_params(5000, fpr=fpr)
+        bloom = build_bloom(big_store, ["subj", "pred", "obj"], m, k)
+        assert hashlib.sha256(bloom.bits).hexdigest() == digest, fpr
+
+
+def test_build_bloom_runs_one_spark_job(big_store, count_jobs):
+    """One job per build over an unshuffled input: the ``toArrow`` of the
+    two hash columns (a shuffled input adds its own shuffle's job)."""
+    m, k = optimal_params(5000, fpr=1e-3)
+    for df in (big_store, big_store.coalesce(1)):
+        _, jobs = count_jobs(lambda: build_bloom(df, ["subj", "pred", "obj"], m, k))
+        assert jobs == 1
 
 
 def test_empty_store_bloom(spark):

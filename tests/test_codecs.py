@@ -962,27 +962,6 @@ def test_avi_ntsc_clock_exact_timestamps():
     assert interval == 33
 
 
-def test_bloom_tree_or_underestimated_schedule():
-    """_tree_or must reach ONE row even when the scheduled partial
-    count underestimates reality (build_bloom passes max(2, default
-    parallelism) — a 1-estimate would skip merging and trip the
-    ≤1-bitset raise on any multi-partition input)."""
-    import numpy as np
-    import pandas as pd
-
-    from degdb_spark.operators.bloom import _tree_or
-    from degdb_spark.session import get_spark
-
-    spark = get_spark()
-    rows = [(bytes([1 << (i % 8)]) * 4,) for i in range(8)]
-    partials = spark.createDataFrame(rows, "bits binary").repartition(8)
-    for est in (2, 3, 8):
-        out = _tree_or(partials, est).collect()
-        assert len(out) == 1, est
-        got = np.frombuffer(bytes(out[0]["bits"]), dtype=np.uint8)
-        assert (got == 0xFF).all()
-
-
 # ------------------------------------------------------------------ MP4
 
 

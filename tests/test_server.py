@@ -137,6 +137,37 @@ def test_error_paths(server):
     assert code == 404
 
 
+def _raw_post(srv, content_length: str, body: bytes) -> str:
+    """POST over a raw socket that stays open for writing, so a server
+    that reads to EOF never replies; returns the status line."""
+    import socket
+
+    with socket.create_connection((srv.host, srv.port), timeout=3) as sock:
+        head = (
+            "POST /api/v1/insert HTTP/1.1\r\n"
+            f"Host: {srv.host}\r\nContent-Length: {content_length}\r\n\r\n"
+        )
+        sock.sendall(head.encode() + body)
+        reply = b""
+        while b"\r\n" not in reply:
+            chunk = sock.recv(4096)  # socket.timeout if no reply in 3 s
+            if not chunk:
+                break
+            reply += chunk
+    return reply.split(b"\r\n", 1)[0].decode()
+
+
+def test_insert_rejects_bad_content_length(server):
+    """A negative or non-integer Content-Length gets a 400 before the
+    body is read, and nothing is stored."""
+    body = json.dumps([{"subj": "/m/0len", "pred": "/p", "obj": "x"}]).encode()
+    before = json.loads(_get(server, "/api/v1/info")[1])["triples"]
+    for bad in ("-1", "abc", "1_0", ""):
+        assert _raw_post(server, bad, body).split()[1] == "400", bad
+    assert json.loads(_get(server, "/api/v1/info")[1])["triples"] == before
+    assert _raw_post(server, str(len(body)), body).split()[1] == "200"
+
+
 def test_static_pages_served(server):
     """The browser UI (clean-room twin of the reference's static/) is
     served under /static/ with the JSON API as its backend."""

@@ -59,3 +59,12 @@ def test_k_hop(spark):
     assert hop2 == {"c", "d"}
     hop3 = {r["node"] for r in k_hop(store.df, ["a"], 3, pred="knows").collect()}
     assert hop3 == {"e"}
+
+
+def test_k_hop_no_seeds(spark):
+    """No start subjects reach nothing: an empty frame, not a schema
+    inference error."""
+    store = _graph_store(spark)
+    out = k_hop(store.df, [], 2)
+    assert out.columns == ["node"]
+    assert out.count() == 0
