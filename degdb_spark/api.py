@@ -11,14 +11,14 @@ workflow maps 1:1:
     db.triples()                                          # full dump
     db.info()                                             # {"triples": N, ...}
 
-Inserts, pattern reads, ``triples()`` and ``info()`` run in-process
-over the store's driver-resident Arrow table, with no Spark job: a JSON
-batch is parsed and signed in Arrow and deduplicated against the
-store's key index, at a cost that grows with the batch, not the store.
-Only ``insert`` of a DataFrame (a bulk load) runs one job, to
-materialise it, and ``DegDB(path=…)`` seeds the store with
-``pyarrow.parquet``; path queries are Spark joins over the store's
-Spark view.
+Inserts, pattern reads, path queries, ``triples()`` and ``info()`` run
+in-process over the store's driver-resident Arrow table, with no Spark
+job and no Spark view: a JSON batch is parsed and signed in Arrow and
+deduplicated against the store's key index, at a cost that grows with
+the batch, not the store; reads and each hop of a path filter the table
+by a ``pyarrow.compute`` mask. Only ``insert`` of a DataFrame (a bulk
+load) runs one job, to materialise it, and ``DegDB(path=…)`` seeds the
+store with ``pyarrow.parquet``.
 
 Differences by design: signing is opt-in (pass a key) because Spark jobs
 are trusted-perimeter. The node has no peers and no gossip: keyspace
@@ -30,22 +30,25 @@ own inserts are not written there.
 from __future__ import annotations
 
 import json
+from datetime import datetime
 from typing import Iterable, Mapping, Sequence
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import TimestampType
 
 from degdb_spark.functions.signing import sign_triples
-from degdb_spark.operators.traversal import chain_steps
 from degdb_spark.operators.triplestore import TripleStore
-from degdb_spark.plans.pattern import ArrayOp, parse_query_json
+from degdb_spark.plans.pattern import ArrayOp, parse_query_json, step_op
 from degdb_spark.sources.json_triples import triples_from_json
 
 #: response columns, in the order rows are rendered
 _COLS = ["subj", "pred", "obj", "lang", "author", "sig", "created"]
-#: renders ``created`` as ``collect()`` does: naive, in the process's zone
-_TIMESTAMP = TimestampType()
+
+
+def _local_iso(micros: int) -> str:
+    """``created`` as ``collect()`` renders it (``TimestampType.fromInternal``):
+    the naive datetime in the process's zone, ISO-formatted."""
+    return datetime.fromtimestamp(micros // 1_000_000).replace(microsecond=micros % 1_000_000).isoformat()
 
 
 class DegDB:
@@ -83,12 +86,12 @@ class DegDB:
         op = ArrayOp.from_dict(json.loads(q))
         return self._dump(self.store.read(op, limit=limit))
 
-    def query_steps(self, steps: Sequence[Mapping | Iterable[Mapping]]) -> list[dict]:
+    def query_steps(self, steps: Sequence[ArrayOp | Mapping | Iterable[Mapping]]) -> list[dict]:
         """Multi-step path query (ExecuteQuery's chaining,
-        core/query.go:14-28), with result dedup (fixing the reference's
-        TODO at core/query.go:58)."""
-        df = chain_steps(self.store.df, steps)
-        return self._dump(df)
+        core/query.go:14-28), walked in-process with result dedup (fixing
+        the reference's TODO at core/query.go:58). Each step is an ArrayOp
+        (or its JSON form), a pattern dict or a list of pattern dicts."""
+        return self._dump(self.store.read_path([step_op(s) for s in steps]))
 
     # ---- GET /api/v1/triples (core/http.go:122-130) ----
     def triples(self) -> list[dict]:
@@ -98,19 +101,17 @@ class DegDB:
     def info(self) -> dict:
         return self.store.size()
 
-    def _dump(self, rows: DataFrame | pa.Table) -> list[dict]:
+    def _dump(self, rows: pa.Table) -> list[dict]:
         """Response rows: NULL fields omitted, ``created`` as a naive
-        ISO string. A DataFrame is materialised through Spark (``toArrow``)."""
-        if isinstance(rows, DataFrame):
-            rows = rows.select(*_COLS).toArrow()
-        table = rows.select(_COLS)
-        created = table["created"].cast(pa.int64())
-        table = table.set_column(_COLS.index("created"), "created", created)
+        ISO string, rendered once per distinct value."""
+        cols = [rows[c].to_pylist() for c in _COLS[:-1]]
+        created = rows["created"].cast(pa.int64()).to_pylist()
+        iso = {us: _local_iso(us) for us in set(created) if us is not None}
         out = []
-        for r in table.to_pylist():
-            d = {k: v for k, v in r.items() if v is not None}
-            if "created" in d:
-                d["created"] = _TIMESTAMP.fromInternal(d["created"]).isoformat()
+        for *values, us in zip(*cols, created):
+            d = {k: v for k, v in zip(_COLS, values) if v is not None}
+            if us is not None:
+                d["created"] = iso[us]
             out.append(d)
         return out
 

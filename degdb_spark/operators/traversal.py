@@ -8,14 +8,19 @@ the previous step's objects on the coordinator; we express the same
 semantics as a distributed self-equi-join, and add the dedup the reference
 acknowledges it is missing (core/query.go:58 TODO).
 
+These are the Catalyst forms, for DataFrame callers: the registry's
+triple queries and the benchmark's unrooted 2-hop and k-hop. The node's
+own path queries (``DegDB.query_steps``) walk the same hops in-process
+over its Arrow table (``TripleStore.read_path``) and run no Spark job.
+
 Scale design: each hop is an equi-join on the key — the direct analogue
 of degdb's shard fan-out by murmur3(subj) (query/query.go:24-47), except
 Spark parallelises the per-shard requests that the reference issues
-sequentially (core/query.go:97 TODO "Parallelize"). The node passes its
-store's Spark view (``TripleStore.df``), an in-memory relation with no
-bucketing, so a hop shuffles on the key unless Spark broadcasts one side.
-``k_hop`` broadcasts its seeds into the first hop; its plan grows by one
-join per hop, which is short for the k its callers pass (2 and 3).
+sequentially (core/query.go:97 TODO "Parallelize"). Over an in-memory
+relation with no bucketing (such as ``TripleStore.df``) a hop shuffles on
+the key unless Spark broadcasts one side. ``k_hop`` broadcasts its seeds
+into the first hop; its plan grows by one join per hop, which is short
+for the k its callers pass (2 and 3).
 """
 
 from __future__ import annotations
@@ -25,7 +30,7 @@ from typing import Iterable, Mapping, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from degdb_spark.plans.pattern import ArrayOp, compile_array_op
+from degdb_spark.plans.pattern import ArrayOp, compile_array_op, step_op
 
 
 def chain_steps(
@@ -41,8 +46,7 @@ def chain_steps(
     """
     current: DataFrame | None = None
     for step in steps:
-        op = _as_op(step)
-        matched = store_df.filter(compile_array_op(op))
+        matched = store_df.filter(compile_array_op(step_op(step)))
         if current is not None:
             # join prev.obj -> this.subj (the AND(step, OR(subj=prev.obj...))
             # rewrite, core/query.go:19-27), distributed instead of
@@ -76,12 +80,3 @@ def k_hop(
         )
     return frontier.select(F.col("subj").alias("node"))
 
-
-def _as_op(step) -> ArrayOp:
-    if isinstance(step, ArrayOp):
-        return step
-    if isinstance(step, Mapping):
-        if "mode" in step or "triples" in step or "arguments" in step:
-            return ArrayOp.from_dict(step)
-        return ArrayOp(mode="OR", triples=[step])
-    return ArrayOp(mode="OR", triples=list(step))

@@ -7,6 +7,8 @@ Capability parity with /root/reference/triplestore/triplestore.go:
                      index beside the table.
 - ``read``         → boolean pattern tree w/ limit (triplestore.go:49-77),
                      in-process, no Spark job.
+- ``read_path``    → a multi-step path (core/query.go:14-28), in-process,
+                     no Spark job.
 - ``query``/``query_array_op`` → the same reads as Spark DataFrames over
                      ``df``, for plans that go on to join.
 - ``size``         → count + storage stats (triplestore.go:150-170).
@@ -30,11 +32,13 @@ copies the whole store. The last two chunks merge while the newer holds
 at least half the rows of the older, which keeps O(log n) chunks. The
 table and its index are swapped in together as one immutable snapshot.
 No insert runs a Spark job, except that a DataFrame batch (a bulk load)
-runs one, to materialise it. Pattern reads compile the ArrayOp to a
-``pyarrow.compute`` expression and filter in-process. ``df`` is a Spark
-view of the table for Catalyst plans (traversal, Bloom sync, sharding),
-cached with the snapshot it was built from and rebuilt once the store
-has moved on.
+runs one, to materialise it. Pattern reads and each hop of a path
+evaluate the ArrayOp with ``pyarrow.compute`` kernels
+(``plans.pattern.eval_op``) and filter in-process. ``df`` is a Spark
+view of the table for Catalyst plans (the Catalyst traversal, Bloom
+sync, ``write_sharded``), built on every access and cached nowhere, so
+the table is the store's one copy: the view's rows live in the JVM only
+while a plan that uses it does.
 Subject-sharded layouts live in operators/sharded.py.
 """
 
@@ -42,7 +46,7 @@ from __future__ import annotations
 
 import os
 import time
-from typing import Iterable, Mapping, NamedTuple
+from typing import Iterable, Mapping, NamedTuple, Sequence
 
 import numpy as np
 import pyarrow as pa
@@ -50,7 +54,7 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 
-from degdb_spark.plans.pattern import OR, ArrayOp, compile_array_op, compile_arrow_op
+from degdb_spark.plans.pattern import OR, ArrayOp, compile_array_op, eval_op
 from degdb_spark.schemas import ARROW_SCHEMA, TRIPLE_KEY, TRIPLE_SCHEMA, conform_triples
 
 
@@ -65,6 +69,15 @@ def _key_hash(key: tuple) -> int:
 def _keys(rows: pa.Table | pa.RecordBatch) -> list[tuple]:
     """The rows' ``(subj, pred, obj)`` keys; a NULL field is ``None``."""
     return list(zip(*(rows[c].to_numpy(zero_copy_only=False) for c in TRIPLE_KEY)))
+
+
+def _first_rows(rows: pa.Table) -> dict[tuple, int]:
+    """Each distinct key of ``rows`` (NULL fields equal) and the row of its
+    first occurrence, in row order."""
+    first: dict[tuple, int] = {}
+    for i, key in enumerate(_keys(rows)):
+        first.setdefault(key, i)
+    return first
 
 
 class _Hashed(NamedTuple):
@@ -170,7 +183,7 @@ def read_parquet(path: str) -> pa.Table:
 
 
 class TripleStore:
-    """Driver-resident universal triple table with a Spark view."""
+    """Driver-resident universal triple table."""
 
     def __init__(self, spark: SparkSession, path: str | None = None):
         self.spark = spark
@@ -178,8 +191,6 @@ class TripleStore:
         seed = read_parquet(path) if path is not None else ARROW_SCHEMA.empty_table()
         seed = seed.combine_chunks().to_batches()
         self._snap = _Snapshot.of(_chunk(b, _Hashed.of(_keys(b))) for b in seed)
-        #: the Spark view and the snapshot it shows, swapped in together
-        self._view: tuple[_Snapshot, DataFrame] | None = None
 
     @property
     def table(self) -> pa.Table:
@@ -188,13 +199,11 @@ class TripleStore:
 
     @property
     def df(self) -> DataFrame:
-        """Spark view of the current table, built on first use after each
-        insert. The view is cached with the snapshot it shows, so a view
-        whose build an insert overtook is rebuilt on the next read."""
-        snap, cached = self._snap, self._view
-        if cached is None or cached[0] is not snap:
-            cached = self._view = (snap, self.spark.createDataFrame(snap.table, schema=TRIPLE_SCHEMA))
-        return cached[1]
+        """Spark view of the current table, built on every access and held
+        by nothing here: its rows stay in the JVM only while the caller's
+        plan does. Each access pays one ``createDataFrame`` (about 50 ms
+        wall at 16.6k rows), so take it once per Catalyst plan."""
+        return self.spark.createDataFrame(self.table, schema=TRIPLE_SCHEMA)
 
     def insert(self, new: DataFrame | pa.Table) -> int:
         """Idempotent insert with set semantics on (subj,pred,obj).
@@ -212,9 +221,7 @@ class TripleStore:
         persisted.
         """
         batch = conform_triples(new.toArrow() if isinstance(new, DataFrame) else new)
-        first: dict[tuple, int] = {}
-        for i, key in enumerate(_keys(batch)):
-            first.setdefault(key, i)
+        first = _first_rows(batch)
         keys = _Hashed.of(list(first))
         fresh = ~_stored(self._snap.chunks, keys)
         rows = batch.take(np.fromiter(first.values(), np.int64, len(first))[fresh])
@@ -230,11 +237,33 @@ class TripleStore:
 
     # --------------------------------------------------------------- query
     def read(self, op: ArrayOp | Mapping, limit: int = -1) -> pa.Table:
-        """Boolean pattern tree filtered in-process with its Arrow
-        compilation, no Spark job (QueryArrayOp, triplestore.go:62-77;
-        limit<=0 → unlimited)."""
-        out = self.table.filter(compile_arrow_op(op))
+        """Boolean pattern tree filtered in-process by its kernel mask, no
+        Spark job (QueryArrayOp, triplestore.go:62-77; limit<=0 →
+        unlimited). Rows come back in insertion order."""
+        table = self.table
+        out = table.filter(eval_op(op, table))
         return out.slice(0, limit) if limit and limit > 0 else out
+
+    def read_path(self, ops: Sequence[ArrayOp]) -> pa.Table:
+        """Multi-step path over one snapshot, in-process, no Spark job
+        (ExecuteQuery's loop, core/query.go:14-28): each step keeps the
+        rows its op selects whose ``subj`` is a non-NULL ``obj`` of the
+        step before (the reference's AND(step, OR(subj = prev.obj …))).
+        Returns the last step's rows, one per ``(subj, pred, obj)`` with
+        NULLs equal (fixing the reference's TODO at core/query.go:58),
+        first occurrence kept. Raises ValueError on no steps."""
+        if not ops:
+            raise ValueError("at least one step required")
+        table = self.table
+        rows = None
+        for op in ops:
+            mask = eval_op(op, table)
+            if rows is not None:
+                frontier = pc.unique(rows["obj"].drop_null())
+                mask = pc.and_kleene(mask, pc.is_in(table["subj"], value_set=frontier))
+            rows = table.filter(mask)
+        first = _first_rows(rows)
+        return rows.take(np.fromiter(first.values(), np.int64, len(first)))
 
     def query(self, patterns: Iterable[Mapping[str, str]] | Mapping[str, str], limit: int = -1) -> DataFrame:
         """Pattern-list query on the Spark view: OR of patterns (the HTTP

@@ -4,20 +4,22 @@ Re-implements the *semantics* of the reference's ArrayOp query IR
 (protocol/protocol.proto:80-89) and its SQL compiler
 (triplestore/triplestore.go:79-132). Where degdb compiled
 a boolean tree of exact-match triple patterns into one SQLite WHERE
-string, we compile the same tree into one predicate for either engine:
+string, we compile the same tree for either engine:
 
-- ``compile_array_op`` → a Catalyst ``Column``, for Spark plans: path
-  traversal and ``TripleStore.query_array_op`` filter the node store's
-  Spark view (an in-memory relation built from its Arrow table) with it,
-  and the registry's triple queries the derived triple table. Applied to
-  a parquet scan, Catalyst pushes its equalities into the scan.
-- ``compile_arrow_op`` → a ``pyarrow.compute`` expression, which the
-  node's driver-resident store (operators/triplestore.py) filters
-  in-process with no Spark job.
+- ``compile_array_op`` → a Catalyst ``Column``, for Spark plans: the
+  Catalyst ``chain_steps``/``k_hop`` and ``TripleStore.query_array_op``
+  filter a DataFrame with it, and the registry's triple queries the
+  derived triple table. Applied to a parquet scan, Catalyst pushes its
+  equalities into the scan.
+- ``eval_op`` → the boolean mask of a ``pyarrow.Table``'s rows,
+  evaluated with ``pyarrow.compute`` kernels on the calling thread. The
+  node's driver-resident store (operators/triplestore.py) filters its
+  pattern reads and each hop of its paths with it, with no Spark job.
 
-Both use ``==`` per field, ``&``/``|`` as Kleene AND/OR and ``~`` as
-NOT, so a comparison with NULL drops the row on either target exactly as
-SQL three-valued logic does.
+Both use equality per field, Kleene AND/OR and NOT (Catalyst's
+``&``/``|``/``~``; the kernels ``and_kleene``/``or_kleene``/``invert``),
+so a comparison with NULL drops the row on either target exactly as SQL
+three-valued logic does.
 
 Semantics preserved (validated by tests mirroring TestArrayOpToSQL and
 TestTripleStoreQueryArrayOp, triplestore/triplestore_test.go:143-235,
@@ -40,8 +42,9 @@ import json
 import operator
 from dataclasses import dataclass, field
 from functools import reduce
-from typing import Callable, Mapping
+from typing import Callable, Iterable, Mapping, NamedTuple
 
+import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -82,12 +85,22 @@ class ArrayOp:
         )
 
 
-def _compile_pattern(pattern: Mapping[str, str], eq: Callable, true: Callable):
-    """One partial triple → conjunction of ``eq(field, value)`` terms.
+class _Target(NamedTuple):
+    """One engine's predicate builders."""
+
+    eq: Callable  # (field, value) → equality leaf
+    true: Callable  # () → always-true predicate
+    and_: Callable
+    or_: Callable
+    not_: Callable
+
+
+def _compile_pattern(pattern: Mapping[str, str], target: _Target):
+    """One partial triple → conjunction of equality leaves.
 
     Mirrors TripleToSQL (triplestore/triplestore.go:107-132): empty
     string or absent field = wildcard; a fully-empty pattern matches
-    everything (``true()``).
+    everything.
     """
     unknown = set(pattern) - set(PATTERN_FIELDS) - {"sig", "created"}
     if unknown:
@@ -95,45 +108,67 @@ def _compile_pattern(pattern: Mapping[str, str], eq: Callable, true: Callable):
     bound = {f: pattern[f] for f in PATTERN_FIELDS if pattern.get(f) not in (None, "")}
     if not all(isinstance(v, str) for v in bound.values()):
         raise ValueError("pattern field values must be strings")
-    conjuncts = [eq(f, v) for f, v in bound.items()]
-    return reduce(operator.and_, conjuncts) if conjuncts else true()
+    conjuncts = [target.eq(f, v) for f, v in bound.items()]
+    return reduce(target.and_, conjuncts) if conjuncts else target.true()
 
 
-def _compile(op: ArrayOp | Mapping, eq: Callable, true: Callable):
+def _compile(op: ArrayOp | Mapping, target: _Target):
     """Boolean tree → one predicate (ArrayOpToSQL semantics,
-    triplestore/triplestore.go:79-105), built from ``eq`` leaves with the
-    target's own ``&``, ``|`` and ``~``."""
+    triplestore/triplestore.go:79-105)."""
     if not isinstance(op, ArrayOp):
         op = ArrayOp.from_dict(op)
 
-    parts = [_compile(a, eq, true) for a in op.arguments]
-    parts += [_compile_pattern(t, eq, true) for t in op.triples]
+    parts = [_compile(a, target) for a in op.arguments]
+    parts += [_compile_pattern(t, target) for t in op.triples]
 
     if op.mode == NOT:
         # "NOT requires a single triple or argument" (protocol.proto:86,
         # triplestore.go:96-103).
         if len(parts) != 1:
             raise ValueError("NOT requires exactly one triple or argument")
-        return ~parts[0]
+        return target.not_(parts[0])
 
     if not parts:
-        return true()
-    return reduce(operator.and_ if op.mode == AND else operator.or_, parts)
+        return target.true()
+    return reduce(target.and_ if op.mode == AND else target.or_, parts)
 
 
-#: per target: (equality leaf, always-true predicate)
-_CATALYST = (lambda f, v: F.col(f) == F.lit(v), lambda: F.lit(True))
-_ARROW = (lambda f, v: pc.field(f) == v, lambda: pc.scalar(True))
+_CATALYST = _Target(
+    lambda f, v: F.col(f) == F.lit(v), lambda: F.lit(True), operator.and_, operator.or_, operator.invert
+)
 
 
 def compile_array_op(op: ArrayOp | Mapping) -> Column:
     """Boolean tree → one Catalyst predicate."""
-    return _compile(op, *_CATALYST)
+    return _compile(op, _CATALYST)
 
 
-def compile_arrow_op(op: ArrayOp | Mapping) -> pc.Expression:
-    """Boolean tree → one ``pyarrow.compute`` filter expression."""
-    return _compile(op, *_ARROW)
+def eval_op(op: ArrayOp | Mapping, table: pa.Table) -> pa.ChunkedArray | pa.Array:
+    """Boolean tree → the mask of ``table``'s rows it selects, one
+    ``pyarrow.compute`` kernel per leaf and connective, run on the calling
+    thread. A NULL in the mask is SQL's unknown, which ``Table.filter``
+    drops."""
+    kernels = _Target(
+        lambda f, v: pc.equal(table[f], v),
+        lambda: pa.repeat(True, table.num_rows),
+        pc.and_kleene,
+        pc.or_kleene,
+        pc.invert,
+    )
+    return _compile(op, kernels)
+
+
+def step_op(step: ArrayOp | Mapping | Iterable[Mapping]) -> ArrayOp:
+    """One step of a path query as an ArrayOp: an ArrayOp or its JSON
+    form as is, a pattern dict or list of pattern dicts wrapped OR-mode,
+    as the HTTP layer wraps a pattern list."""
+    if isinstance(step, ArrayOp):
+        return step
+    if isinstance(step, Mapping):
+        if "mode" in step or "triples" in step or "arguments" in step:
+            return ArrayOp.from_dict(step)
+        return ArrayOp(mode=OR, triples=[step])
+    return ArrayOp(mode=OR, triples=list(step))
 
 
 def parse_query_json(q: str) -> list[dict]:

@@ -25,6 +25,9 @@ and then swaps in a new snapshot of the table and its index, so two
 unserialized inserts could each miss the other's rows. No route runs a Spark job. The store is an Arrow
 table in this process's memory (operators/triplestore.py), so inserts
 do not survive a restart and replicas cannot share it.
+
+Each connection's reads time out after ``_TIMEOUT_S`` of silence, and an
+insert body shorter than its ``Content-Length`` is a 400, never parsed.
 """
 
 from __future__ import annotations
@@ -44,6 +47,10 @@ _STATIC_PAGES = {"triples.html", "insert.html", "keyspace.html"}
 #: seconds between the serve loop's shutdown checks: ``stop()`` waits up
 #: to one of them (``serve_forever``'s default is 0.5)
 _POLL_S = 0.05
+#: seconds a connection may go silent while its request is read: a client
+#: that stalls mid-request gets a 408 or a closed connection, and its
+#: handler thread ends, instead of blocking in a read forever
+_TIMEOUT_S = 5.0
 
 
 class DegDBServer:
@@ -55,6 +62,8 @@ class DegDBServer:
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
+            timeout = _TIMEOUT_S
+
             def log_message(self, fmt, *args):  # quiet test output
                 pass
 
@@ -126,8 +135,19 @@ class DegDBServer:
                 if not (length.isascii() and length.isdigit()):
                     self._send(400, f"bad Content-Length: {length!r}", "text/plain")
                     return
+                n = int(length)
                 try:
-                    body = self.rfile.read(int(length)).decode()
+                    body = self.rfile.read(n)
+                except TimeoutError:
+                    self._send(408, "request body timed out", "text/plain")
+                    return
+                # a client that half-closes early leaves the read short: the
+                # truncated body is never parsed
+                if len(body) < n:
+                    self._send(400, f"body is {len(body)} bytes, Content-Length says {n}", "text/plain")
+                    return
+                try:
+                    body = body.decode()
                     try:
                         payload = json.loads(body)
                     except json.JSONDecodeError as e:

@@ -118,10 +118,20 @@ def test_query_array_op_json(db):
             db.query_array_op_json(q)
 
 
-# --- the node's read path runs no Spark job ---
+# --- the node's routes run no Spark job and keep no Spark view ---
+
+def _holds_dataframe(value) -> bool:
+    from pyspark.sql import DataFrame
+
+    if isinstance(value, DataFrame):
+        return True
+    if isinstance(value, dict):
+        value = list(value.values())
+    return isinstance(value, (tuple, list)) and any(_holds_dataframe(v) for v in value)
+
 
 def test_node_reads_run_no_spark_job(db, count_jobs):
-    batch = json.dumps([{"subj": "/m/0new", "pred": "/type/object/name", "obj": "New"}])
+    batch = json.dumps([{"subj": "/m/0new", "pred": "/knows", "obj": "/m/02mjmr"}])
     added, jobs = count_jobs(lambda: db.insert_json(batch))
     assert added == 1 and jobs == 0
     # a DataFrame batch (the bulk load) runs exactly its toArrow job
@@ -133,6 +143,7 @@ def test_node_reads_run_no_spark_job(db, count_jobs):
         "query_array_op_json": lambda: db.query_array_op_json(
             '{"mode": "NOT", "triples": [{"subj": "/m/0hume"}]}'
         ),
+        "query_steps": lambda: db.query_steps([{"subj": "/m/0new"}, {"pred": "/type/object/name"}]),
         "info": db.info,
         "triples": db.triples,
     }
@@ -140,6 +151,11 @@ def test_node_reads_run_no_spark_job(db, count_jobs):
         result, jobs = count_jobs(read)
         assert result, name
         assert jobs == 0, f"{name} ran {jobs} Spark jobs"
+    assert _spo(reads["query_steps"]()) == [("/m/02mjmr", "/type/object/name", "Barack Obama")]
+    # a Catalyst caller's view is its own: the store keeps only the table
+    assert db.store.df.count() == db.info()["triples"]
+    held = [name for name, value in vars(db.store).items() if _holds_dataframe(value)]
+    assert held == [], f"TripleStore holds a Spark view in {held}"
 
 
 # --- query_json answers exactly as the Catalyst path does ---
@@ -170,7 +186,7 @@ def _row_set(rows) -> set[str]:
 def test_query_json_matches_catalyst_dump(db, patterns):
     got = db.query_json(json.dumps(patterns))
     catalyst = db.store.query(patterns)
-    assert got and _row_set(got) == _row_set(db._dump(catalyst))
+    assert got and _row_set(got) == _row_set(db._dump(catalyst.toArrow()))
     assert _row_set(got) == _row_set(_reference_dump(catalyst))
     # signed and stamped, NULL lang omitted
     assert all({"author", "sig", "created"} <= set(r) and "lang" not in r for r in got)

@@ -2,8 +2,9 @@
 
 - the Catalyst compilation selects exactly the rows a direct Python
   evaluation of the reference semantics selects (triplestore.go:79-132);
-- the Arrow and Catalyst compilations select the same rows, NULLs and
-  NOT included (SQL three-valued logic on both).
+- the store's kernel evaluation (``eval_op``, through
+  ``TripleStore.read``) and the Catalyst compilation select the same
+  rows, NULLs and NOT included (SQL three-valued logic on both).
 """
 
 from __future__ import annotations
@@ -14,7 +15,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from degdb_spark.plans.pattern import ArrayOp, compile_array_op, compile_arrow_op
+from degdb_spark.plans.pattern import ArrayOp, compile_array_op
 
 SUBJECTS = ["s1", "s2", "s3"]
 PREDS = ["p1", "p2"]
@@ -141,7 +142,6 @@ def nullable_store(spark):
 
     store = store_of(spark, NULLABLE_TRIPLES)
     assert store.size()["triples"] == len(NULLABLE_TRIPLES)
-    store.df.cache()
     return store
 
 
@@ -152,7 +152,7 @@ def nullable_store(spark):
 )
 @given(op=op_st(patterns=nullable_pattern_st))
 def test_arrow_and_catalyst_select_same_rows(nullable_store, op):
-    arrow = sorted(nullable_store.table.filter(compile_arrow_op(op))["sig"].to_pylist())
+    arrow = sorted(nullable_store.read(op)["sig"].to_pylist())
     catalyst = sorted(r.sig for r in nullable_store.df.filter(compile_array_op(op)).collect())
     assert arrow == catalyst
 
@@ -162,5 +162,5 @@ def test_null_comparison_drops_row_under_not(nullable_store):
     rows on either executor."""
     op = ArrayOp(mode="NOT", triples=[{"lang": "en"}])
     want = sorted(t["sig"] for t in NULLABLE_TRIPLES if t["lang"] not in ("en", None))
-    assert sorted(nullable_store.table.filter(compile_arrow_op(op))["sig"].to_pylist()) == want
+    assert sorted(nullable_store.read(op)["sig"].to_pylist()) == want
     assert sorted(r.sig for r in nullable_store.df.filter(compile_array_op(op)).collect()) == want

@@ -137,35 +137,82 @@ def test_error_paths(server):
     assert code == 404
 
 
-def _raw_post(srv, content_length: str, body: bytes) -> str:
-    """POST over a raw socket that stays open for writing, so a server
-    that reads to EOF never replies; returns the status line."""
+def _status_line(sock) -> str:
+    """The reply's status line, or "" if the server closed first."""
+    reply = b""
+    while b"\r\n" not in reply:
+        chunk = sock.recv(4096)  # socket.timeout if the server goes silent
+        if not chunk:
+            break
+        reply += chunk
+    return reply.split(b"\r\n", 1)[0].decode()
+
+
+def _raw_post(srv, content_length: str, body: bytes, half_close: bool = False, timeout: float = 3) -> str:
+    """POST over a raw socket that stays open for writing (unless
+    ``half_close``), so a server that reads to EOF never replies; returns
+    the status line."""
     import socket
 
-    with socket.create_connection((srv.host, srv.port), timeout=3) as sock:
+    with socket.create_connection((srv.host, srv.port), timeout=timeout) as sock:
         head = (
             "POST /api/v1/insert HTTP/1.1\r\n"
             f"Host: {srv.host}\r\nContent-Length: {content_length}\r\n\r\n"
         )
         sock.sendall(head.encode() + body)
-        reply = b""
-        while b"\r\n" not in reply:
-            chunk = sock.recv(4096)  # socket.timeout if no reply in 3 s
-            if not chunk:
-                break
-            reply += chunk
-    return reply.split(b"\r\n", 1)[0].decode()
+        if half_close:
+            sock.shutdown(socket.SHUT_WR)
+        return _status_line(sock)
+
+
+def _triples_stored(srv) -> int:
+    return json.loads(_get(srv, "/api/v1/info")[1])["triples"]
 
 
 def test_insert_rejects_bad_content_length(server):
     """A negative or non-integer Content-Length gets a 400 before the
     body is read, and nothing is stored."""
     body = json.dumps([{"subj": "/m/0len", "pred": "/p", "obj": "x"}]).encode()
-    before = json.loads(_get(server, "/api/v1/info")[1])["triples"]
+    before = _triples_stored(server)
     for bad in ("-1", "abc", "1_0", ""):
         assert _raw_post(server, bad, body).split()[1] == "400", bad
-    assert json.loads(_get(server, "/api/v1/info")[1])["triples"] == before
+    assert _triples_stored(server) == before
     assert _raw_post(server, str(len(body)), body).split()[1] == "200"
+
+
+def test_insert_rejects_short_body(server):
+    """A body shorter than its Content-Length, cut short by a client that
+    half-closes, gets a 400 within the socket timeout and is never
+    parsed: ``[]`` would otherwise insert as an empty batch."""
+    from degdb_spark.server import _TIMEOUT_S
+
+    before = _triples_stored(server)
+    assert _raw_post(server, "100", b"[]", half_close=True, timeout=_TIMEOUT_S + 2).split()[1] == "400"
+    assert _triples_stored(server) == before
+    code, _ = _post(server, "/api/v1/insert", json.dumps([{"subj": "/m/0short", "pred": "/p", "obj": "x"}]))
+    assert code == 200 and _triples_stored(server) == before + 1
+
+
+def test_stalled_body_times_out(server):
+    """A client that stalls mid-body gets a 408 or a closed connection
+    within the socket timeout, and a valid insert sent meanwhile
+    succeeds; the stalled rows are never stored."""
+    import socket
+    import time
+
+    from degdb_spark.server import _TIMEOUT_S
+
+    before = _triples_stored(server)
+    with socket.create_connection((server.host, server.port), timeout=_TIMEOUT_S + 2) as sock:
+        head = f"POST /api/v1/insert HTTP/1.1\r\nHost: {server.host}\r\nContent-Length: 100\r\n\r\n"
+        sock.sendall(head.encode() + b'[{"subj": "/m/0stall"')
+        t0 = time.perf_counter()
+        code, _ = _post(server, "/api/v1/insert", json.dumps([{"subj": "/m/0meanwhile", "pred": "/p", "obj": "x"}]))
+        assert code == 200
+        status = _status_line(sock)
+        assert status == "" or status.split()[1] == "408", status
+        assert time.perf_counter() - t0 < _TIMEOUT_S + 2
+    assert _triples_stored(server) == before + 1
 
 
 def test_static_pages_served(server):

@@ -197,8 +197,8 @@ def test_path_seed_reads_as_spark_does(spark, tmp_path):
 
 
 def test_df_view_never_older_than_table(spark):
-    """A writer that lands while a reader builds the Spark view must not
-    leave that view cached: the next read of ``df`` sees the new table."""
+    """A writer that lands while a reader builds the Spark view leaves no
+    stale view behind: the next read of ``df`` sees the new table."""
     store = TripleStore(spark)
     store.insert(_batch([("a", "p", "1")]))
 

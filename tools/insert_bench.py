@@ -12,7 +12,10 @@ deduplicated in-process, each timed on its own and reported as the
 median milliseconds per batch. Ten go into an empty store; then
 ``SWEEP_BATCHES`` go into each of three stores that hold
 ``SWEEP_STORED`` triples, a quarter of each batch repeating stored keys,
-which shows whether an insert's cost grows with the store.
+which shows whether an insert's cost grows with the store. Beside each
+sweep insert, a one-subject ``DegDB.query_json`` of a stored subject is
+timed on the same store: the read half of size-independence, reported
+as the median milliseconds per read.
 
 Usage: python tools/insert_bench.py [--rows 10000] [--batch 1000]
 Prints one JSON line.
@@ -108,6 +111,7 @@ def main() -> None:
                 "subj": [f"s{i}" for i in ids], "pred": [f"p{i % 8}" for i in ids], "obj": [f"o{i}" for i in ids],
             }))
     sweep_ms: dict[int, list[float]] = {size: [] for size in SWEEP_STORED}
+    read_ms: dict[int, list[float]] = {size: [] for size in SWEEP_STORED}
     n_dups = JSON_BATCH // 4
     for b in range(SWEEP_BATCHES):
         for size, sdb in stores.items():
@@ -117,6 +121,11 @@ def main() -> None:
             t0 = time.perf_counter()
             assert sdb.insert_json(payload) == len(fresh)
             sweep_ms[size].append(1000 * (time.perf_counter() - t0))
+            i = (b * 7919) % size
+            q = json.dumps([{"subj": f"s{i}"}])
+            t0 = time.perf_counter()
+            assert len(sdb.query_json(q)) == 1
+            read_ms[size].append(1000 * (time.perf_counter() - t0))
 
     print(
         json.dumps(
@@ -129,6 +138,9 @@ def main() -> None:
                 "signed_insert_json_ms_per_batch": round(statistics.median(json_ms), 1),
                 "signed_insert_json_ms_by_stored": {
                     str(size): round(statistics.median(ms), 2) for size, ms in sweep_ms.items()
+                },
+                "one_subject_query_json_ms_by_stored": {
+                    str(size): round(statistics.median(ms), 2) for size, ms in read_ms.items()
                 },
                 "unit": "rows/sec",
             }
